@@ -12,8 +12,8 @@ One mechanism covering both of the reference's validation layers:
 
 Every check compiles to a single aggregate or anti-join over the
 DataFrame — no collect of data rows, only violation counts (plus a
-bounded sample for diagnostics), so the framework is safe to run on
-100 TB tables: one pass, map-side combines, tiny driver results.
+bounded sample, fetched only on failure), so the framework is safe on
+100 TB tables: one pass per passing check, tiny driver results.
 """
 
 from __future__ import annotations
@@ -103,8 +103,8 @@ def check_not_null(df: DataFrame, column: str, sample: int = 5) -> CheckResult:
     offending ROWS (the null column itself is uninformative) so the
     diagnostic identifies which records broke the constraint."""
     bad = df.where(F.col(column).isNull())
-    rows = bad.limit(sample).collect()
     n = bad.count()
+    rows = bad.limit(sample).collect() if n else []
     return CheckResult(f"not_null({column})", n == 0, n, rows)
 
 
@@ -112,8 +112,8 @@ def check_unique(df: DataFrame, columns: str | list[str], sample: int = 5) -> Ch
     """dbt ``unique`` (properties.yml:11-21): group by key, count>1."""
     cols = [columns] if isinstance(columns, str) else list(columns)
     dupes = df.groupBy(*cols).agg(F.count(F.lit(1)).alias("n")).where(F.col("n") > 1)
-    rows = dupes.limit(sample).collect()
     n = dupes.count()
+    rows = dupes.limit(sample).collect() if n else []
     return CheckResult(f"unique({','.join(cols)})", n == 0, n, rows)
 
 
@@ -122,8 +122,8 @@ def check_accepted_values(
 ) -> CheckResult:
     """dbt ``accepted_values`` (properties.yml:117-142)."""
     bad = df.where(~F.col(column).isin(values) | F.col(column).isNull())
-    rows = bad.select(column).distinct().limit(sample).collect()
     n = bad.count()
+    rows = bad.select(column).distinct().limit(sample).collect() if n else []
     return CheckResult(f"accepted_values({column})", n == 0, n, rows)
 
 
@@ -137,8 +137,8 @@ def check_relationships(
     orphans = child.select(F.col(child_key).alias("k")).where(F.col("k").isNotNull()).join(
         parent.select(F.col(parent_key).alias("k")).distinct(), "k", "left_anti"
     )
-    rows = orphans.distinct().limit(sample).collect()
     n = orphans.count()
+    rows = orphans.distinct().limit(sample).collect() if n else []
     return CheckResult(f"relationships({child_key}->{parent_key})", n == 0, n, rows)
 
 

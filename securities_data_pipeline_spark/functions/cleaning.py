@@ -19,8 +19,9 @@ Semantics pinned against the reference:
 - ``future_stack=True`` keeps rows whose OHLCV are all null (no
   dropna) — so does ``stack()`` here.
 - All-null wide columns (failed downloads, stray "Adj Close" ticker
-  columns) are pruned first via one aggregate pass
-  (transform.py:77-79).
+  columns; transform.py:77-79) are pruned on the long form by a lazy
+  per-symbol window: a ticker keeps all its rows iff any OHLCV value
+  is non-null. "Adj Close" is never stacked.
 """
 
 from __future__ import annotations
@@ -29,6 +30,7 @@ import datetime as dt
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from securities_data_pipeline_spark.checks import validate_schema
 from securities_data_pipeline_spark.schemas import (
@@ -69,20 +71,6 @@ def transform_fx_symbols(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.lower() for c in df.columns])
 
 
-def drop_all_null_columns(df: DataFrame, protect: tuple[str, ...] = ("date",)) -> DataFrame:
-    """Prune columns whose every value is null (transform.py:77-79).
-
-    One aggregate job producing a single driver row of non-null counts
-    — O(columns) driver memory regardless of table size.
-    """
-    candidates = [c for c in df.columns if c not in protect]
-    if not candidates:
-        return df
-    counts = df.agg(*[F.count(F.col(c)).alias(c) for c in candidates]).first()
-    keep = [c for c in df.columns if c in protect or counts[c] > 0]
-    return df.select(*keep)
-
-
 def unpivot_wide_prices(df: DataFrame) -> DataFrame:
     """Wide ``(field, ticker)`` matrix → long OHLCV rows.
 
@@ -115,8 +103,15 @@ def unpivot_wide_prices(df: DataFrame) -> DataFrame:
 
 def transform_prices(df: DataFrame, asset_category: str) -> DataFrame:
     """Raw wide price matrix → long validated rows (transform.py:72-90):
-    prune all-null columns → unpivot → timestamp→date → FX recode."""
-    if df.isEmpty():
+    unpivot → prune all-null tickers → timestamp→date → FX recode.
+
+    Lazy: no Spark job runs here unless the frame has no
+    ``{Field}_{TICKER}`` column at all."""
+    try:
+        long_df = unpivot_wide_prices(df)
+    except ValueError:
+        if not df.isEmpty():
+            raise
         # an empty fetch must short-circuit to an empty LONG-schema
         # frame — returning the raw wide frame would crash downstream
         # (load_prices partitions by date_stamp/symbol, which the wide
@@ -127,16 +122,14 @@ def transform_prices(df: DataFrame, asset_category: str) -> DataFrame:
             "date_stamp date, symbol string, open double, high double, "
             "low double, close double, volume bigint",
         )
-    long_df = unpivot_wide_prices(drop_all_null_columns(df))
+    # symbol partitioning also satisfies merge_upsert's (date_stamp,
+    # symbol) dedupe window, so the stock load shuffles once; the FX
+    # recode below renames symbol, so its (tiny) load shuffles twice
+    fields = ("open", "high", "low", "close", "volume")
+    live = F.count(F.coalesce(*fields)).over(Window.partitionBy("symbol")) > 0
     out = long_df.select(
-        F.to_date(F.col("date")).alias("date_stamp"),
-        "symbol",
-        "open",
-        "high",
-        "low",
-        "close",
-        "volume",
-    )
+        F.to_date(F.col("date")).alias("date_stamp"), "symbol", *fields, live.alias("__live")
+    ).where("__live").drop("__live")
     if asset_category == "fx":
         stripped = F.replace(F.col("symbol"), F.lit("=X"), F.lit(""))
         recode = stripped

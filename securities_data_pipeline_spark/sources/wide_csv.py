@@ -10,15 +10,18 @@ so:
 1. the two header lines are read driver-side (they are two lines —
    no data volume);
 2. column names are flattened to ``{Field}_{TICKER}``;
-3. the bulk load is a normal ``spark.read.csv`` with an explicit
-   schema, and the two header rows are dropped by a null-date filter
-   (header rows can't parse as timestamps).
+3. the bulk load is a ``spark.read.csv`` with an explicit schema and
+   ONE projection (date parse, ``Volume_*`` → LONG; a ``withColumn``
+   per column would re-analyse the growing plan each time), and the
+   two header rows are dropped by a null-date filter.
 
 The data path stays fully distributed — only the 2-line header peek is
 driver-side, which holds at any scale.
 """
 
 from __future__ import annotations
+
+from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -43,7 +46,7 @@ def read_wide_price_csv(
             names.append(date_col)  # index column: header cell is 'Price'/'Ticker'
         else:
             names.append(f"{field}_{ticker}")
-    dupes = {n for n in names if names.count(n) > 1}
+    dupes = {n for n, k in Counter(names).items() if k > 1}
     if dupes:
         # a repeated (field, ticker) header pair would create ambiguous
         # columns every downstream select trips over — fail at the scan
@@ -60,13 +63,12 @@ def read_wide_price_csv(
         + [T.StructField(n, T.DoubleType(), True) for n in names[1:]]
     )
     raw = spark.read.csv(path, schema=schema, header=False, mode="PERMISSIVE")
-    for n in names[1:]:
-        if n.startswith("Volume_"):
-            # backtick-quote: real tickers contain dots (BRK.B, BF.B),
-            # and a bare F.col("Volume_BRK.B") parses the dot as struct
-            # access and fails resolution
-            raw = raw.withColumn(n, F.col(f"`{n}`").cast(T.LongType()))
     # try_to_timestamp: header rows yield NULL instead of an ANSI cast
     # error, and get filtered out
-    ts = F.try_to_timestamp(F.col(date_col))
-    return raw.where(ts.isNotNull()).withColumn(date_col, ts)
+    # backtick-quote: real tickers contain dots (BRK.B, BF.B), and a
+    # bare F.col("Volume_BRK.B") parses the dot as struct access
+    cols = {n: F.col(f"`{n}`") for n in names[1:]}
+    return raw.select(
+        F.try_to_timestamp(F.col(date_col)).alias(date_col),
+        *[c.cast(T.LongType()).alias(n) if n.startswith("Volume_") else c for n, c in cols.items()],
+    ).where(F.col(date_col).isNotNull())

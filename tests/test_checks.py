@@ -70,6 +70,35 @@ def test_relationships_bidirectional(spark):
     assert check_relationships(ok, "symbol", dim, "symbol").passed
 
 
+def test_failing_checks_carry_bounded_offending_rows(spark):
+    """A failing check samples its offending rows (at most ``sample``);
+    a passing one carries none — the sample is fetched only on failure."""
+    df = spark.createDataFrame(
+        [("A", None), ("A", None), ("B", "X"), ("B", "Y"), ("C", "Z"), ("C", None), ("D", "FX")],
+        "symbol string, asset_type string",
+    )
+    nn = check_not_null(df, "asset_type", sample=2)
+    assert nn.violations == 3 and len(nn.sample) == 2
+    assert all(r.asset_type is None for r in nn.sample)
+    un = check_unique(df, "symbol", sample=2)
+    assert un.violations == 3 and len(un.sample) == 2
+    assert {r.symbol for r in un.sample} <= {"A", "B", "C"} and all(r.n == 2 for r in un.sample)
+    av = check_accepted_values(df, "asset_type", ["FX"], sample=2)
+    assert av.violations == 6 and len(av.sample) == 2
+    assert {r.asset_type for r in av.sample} <= {None, "X", "Y", "Z"}
+    dim = spark.createDataFrame([("D",)], "symbol string")
+    rel = check_relationships(df, "symbol", dim, "symbol", sample=2)
+    assert rel.violations == 6 and len(rel.sample) == 2
+    assert {r.k for r in rel.sample} <= {"A", "B", "C"}
+    for ok in (
+        check_not_null(df, "symbol"),
+        check_unique(dim, "symbol"),
+        check_accepted_values(dim, "symbol", ["D"]),
+        check_relationships(dim, "symbol", df, "symbol"),
+    ):
+        assert ok.passed and ok.violations == 0 and ok.sample == []
+
+
 def test_run_checks_raises_with_all_failures(spark):
     df = spark.createDataFrame([("A",), ("A",)], "symbol string")
     with pytest.raises(SchemaErrors, match="unique"):

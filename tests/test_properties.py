@@ -505,3 +505,95 @@ def test_t_closeness_matches_bruteforce(spark, tmp_path_factory, users):
         for r in a_t_closeness(spark, str(tmp)).collect()
     }
     assert got == _tc_reference(users)
+
+
+# ---------------------------------------------------------------------------
+# wide→long price transform against a plain-pandas twin of the reference
+
+_TICKERS = ("AAA", "BF.B", "BRK.B", "JPY=X", "CHF=X", "EURUSD=X", "USDJPY=X")
+_OHLCV = ("Open", "High", "Low", "Close", "Volume")
+_PRICE = st.one_of(st.none(), st.integers(1, 4000).map(lambda i: i / 4))
+_VOLUME = st.one_of(st.none(), st.integers(0, 10**9))
+
+
+@st.composite
+def _wide_price_frames(draw):
+    """``(n_days, {(field, ticker): values})``: every column is either
+    all-null (a failed download) or sparse; tickers may miss fields; a
+    stray ``Adj Close`` column is always all-null; at least one OHLCV
+    column exists (a frame without any keeps the no-ticker error path,
+    which has no pandas counterpart)."""
+    n = draw(st.integers(0, 4))
+    keys = draw(
+        st.lists(
+            st.tuples(st.sampled_from(_OHLCV + ("Adj Close",)), st.sampled_from(_TICKERS)),
+            min_size=1,
+            max_size=10,
+            unique=True,
+        ).filter(lambda ks: any(f != "Adj Close" for f, _ in ks))
+    )
+    cols = {}
+    for field, ticker in keys:
+        if field == "Adj Close" or draw(st.booleans()):
+            cols[(field, ticker)] = [None] * n
+        else:
+            cell = _VOLUME if field == "Volume" else _PRICE
+            cols[(field, ticker)] = draw(st.lists(cell, min_size=n, max_size=n))
+    return n, cols
+
+
+def _reference_transform_prices(wide, asset_category: str) -> list[tuple]:
+    """transform.py:72-90 in plain pandas: empty short-circuit,
+    ``dropna(axis=1, how="all")``, ``stack(future_stack=True)``, strip
+    ``=X``, whole-value FX recode. Returns long rows in the Spark
+    output's column order, NaN as None."""
+    import pandas as pd
+
+    if wide.empty:
+        return []
+    df = wide.dropna(axis=1, how="all").stack("Ticker", future_stack=True).reset_index()
+    df = df.reindex(columns=["date", "Ticker", *_OHLCV])
+    df["date"] = df["date"].dt.date
+    if asset_category == "fx":
+        df["Ticker"] = (
+            df["Ticker"].str.replace("=X", "").replace({"CHF": "USDCHF", "CAD": "USDCAD", "JPY": "USDJPY"})
+        )
+    return [
+        (date, symbol, *(None if pd.isna(v) else v for v in ohlc), None if pd.isna(vol) else int(vol))
+        for date, symbol, *ohlc, vol in df.itertuples(index=False)
+    ]
+
+
+def _row_key(row):
+    return tuple((v is None, v) for v in row)
+
+
+@settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
+@given(frame=_wide_price_frames(), asset_category=st.sampled_from(["fx", "sp_stocks"]))
+def test_transform_prices_matches_pandas_twin(spark, frame, asset_category):
+    import datetime as dt
+
+    import numpy as np
+    import pandas as pd
+    from pyspark.sql import types as T
+
+    from securities_data_pipeline_spark.functions.cleaning import transform_prices
+
+    n, cols = frame
+    dates = [dt.datetime(2025, 1, 1) + dt.timedelta(days=i) for i in range(n)]
+    wide_pd = pd.DataFrame(
+        np.array([[np.nan if v is None else v for v in vs] for vs in cols.values()], dtype="float64").T,
+        index=pd.DatetimeIndex(dates, name="date"),
+        columns=pd.MultiIndex.from_tuples(list(cols), names=["Price", "Ticker"]),
+    )
+    schema = T.StructType(
+        [T.StructField("date", T.TimestampType())]
+        + [
+            T.StructField(f"{f}_{t}", T.LongType() if f == "Volume" else T.DoubleType())
+            for f, t in cols
+        ]
+    )
+    wide = spark.createDataFrame([(d, *(vs[i] for vs in cols.values())) for i, d in enumerate(dates)], schema)
+
+    got = [tuple(r) for r in transform_prices(wide, asset_category).collect()]
+    assert sorted(got, key=_row_key) == sorted(_reference_transform_prices(wide_pd, asset_category), key=_row_key)

@@ -83,6 +83,55 @@ def test_read_wide_price_csv_dotted_ticker_and_dupes(spark, tmp_path):
         read_wide_price_csv(spark, str(bad))
 
 
+def _dotted_wide_csv(tmp_path):
+    """A live dotted ticker (BF.B), a failed dotted download (BRK.B:
+    every cell empty) and a plain live ticker."""
+    p = tmp_path / "dotted_null.csv"
+    p.write_text(
+        "Price,Open,Close,Volume,Close,Volume\n"
+        "Ticker,BF.B,BRK.B,BRK.B,AAA,AAA\n"
+        "2025-01-02,40.5,,,1.5,100.0\n"
+        "2025-01-03,,,,1.6,\n"
+    )
+    return str(p)
+
+
+def test_dotted_all_null_ticker_through_transform(spark, tmp_path):
+    """An all-null dotted ticker column is pruned without resolving the
+    dot as struct access; the live dotted ticker keeps both its days."""
+    from securities_data_pipeline_spark.functions.cleaning import transform_prices
+
+    out = transform_prices(read_wide_price_csv(spark, _dotted_wide_csv(tmp_path)), "sp_stocks")
+    rows = sorted((r.symbol, str(r.date_stamp), r.open, r.close, r.volume) for r in out.collect())
+    assert rows == [
+        ("AAA", "2025-01-02", None, 1.5, 100),
+        ("AAA", "2025-01-03", None, 1.6, None),
+        ("BF.B", "2025-01-02", 40.5, None, None),
+        ("BF.B", "2025-01-03", None, None, None),
+    ]
+
+
+def test_wide_read_and_transform_start_no_spark_job(spark, tmp_path):
+    """Reading and reshaping the wide frame only plans: every job runs
+    inside the load. An eager probe (isEmpty, a null-count aggregate)
+    added to either step trips this."""
+    from securities_data_pipeline_spark.functions.cleaning import transform_prices
+
+    sc = spark.sparkContext
+    path = _dotted_wide_csv(tmp_path)
+    sc.setJobGroup("wide-planning", "read_wide_price_csv + transform_prices")
+    try:
+        for kind in ("sp_stocks", "fx"):
+            out = transform_prices(read_wide_price_csv(spark, path), kind)
+        planned = sc.statusTracker().getJobIdsForGroup("wide-planning")
+        out.count()  # the probe itself sees jobs
+        ran = sc.statusTracker().getJobIdsForGroup("wide-planning")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert planned == []
+    assert ran
+
+
 class TestMarketDataSourceV2:
     def test_read_partitioned_deterministic(self, spark):
         from securities_data_pipeline_spark.sources.registry import extract

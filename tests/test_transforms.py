@@ -6,11 +6,9 @@ import pytest
 
 from securities_data_pipeline_spark.checks import SchemaErrors
 from securities_data_pipeline_spark.functions.cleaning import (
-    drop_all_null_columns,
     transform_fx_symbols,
     transform_prices,
     transform_stock_symbols,
-    unpivot_wide_prices,
 )
 
 RAW_SYMBOL_SCHEMA = (
@@ -66,18 +64,43 @@ def _wide(spark):
     )
 
 
-def test_drop_all_null_columns(spark):
-    out = drop_all_null_columns(_wide(spark))
-    assert "Open_DEAD" not in out.columns
-    assert "Open_AAA" in out.columns
+def test_transform_prices_prunes_all_null_ticker(spark):
+    """transform.py:77-79 parity: a ticker whose every field column is
+    null (failed download) is pruned; live tickers survive."""
+    symbols = {r.symbol for r in transform_prices(_wide(spark), "sp_stocks").collect()}
+    assert "DEAD" not in symbols
+    assert "AAA" in symbols
 
 
-def test_unpivot_keeps_all_null_rows(spark):
+def test_transform_prices_keeps_all_null_rows(spark):
     """pandas future_stack=True parity: day-2 all-null rows survive."""
-    long_df = unpivot_wide_prices(drop_all_null_columns(_wide(spark)))
+    long_df = transform_prices(_wide(spark), "sp_stocks")
     assert long_df.count() == 4  # 2 dates × 2 surviving tickers
     cols = set(long_df.columns)
-    assert cols == {"date", "symbol", "open", "high", "low", "close", "volume"}
+    assert cols == {"date_stamp", "symbol", "open", "high", "low", "close", "volume"}
+
+
+def test_transform_prices_all_null_tickers_yield_empty_long_frame(spark):
+    """Every ticker column null (every download failed): the reference's
+    dropna(axis=1, how="all") → stack returns an empty frame, and so
+    does this — with the long schema, not an error."""
+    wide = spark.createDataFrame(
+        [(dt.datetime(2025, 1, 1), None, None), (dt.datetime(2025, 1, 2), None, None)],
+        "date timestamp, Close_DEAD double, `Volume_BRK.B` long",
+    )
+    out = transform_prices(wide, "sp_stocks")
+    assert out.columns == ["date_stamp", "symbol", "open", "high", "low", "close", "volume"]
+    assert out.count() == 0
+
+
+def test_transform_prices_without_ticker_columns(spark):
+    """No {Field}_{TICKER} column at all: an empty frame is a no-op
+    with the long schema, a non-empty one has nothing to reshape."""
+    empty = spark.createDataFrame([], "date timestamp, `Adj Close_AAA` double")
+    assert transform_prices(empty, "fx").count() == 0
+    wide = spark.createDataFrame([(dt.datetime(2025, 1, 1), 1.0)], "date timestamp, `Adj Close_AAA` double")
+    with pytest.raises(ValueError, match="no \\{Field\\}_\\{TICKER\\} columns"):
+        transform_prices(wide, "fx")
 
 
 def test_transform_prices_fx_recode(spark):
