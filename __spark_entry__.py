@@ -13,113 +13,6 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# The driver checks queries in registry order and may only reach the first
-# ~50 per round. Policy since round 5: NEW/CHANGED queries first, then
-# LEAST-RECENTLY-DRIVER-GREEN. Rounds 5-6 narrated the staleness order in
-# a hand-written tuple, and the round-6 comment drifted from the actual
-# coverage (VERDICT r6 "what's wrong" #3) — so since round 7 the stale
-# tail is COMPUTED from the CORRECTNESS_r*.json history at import time
-# (tools/staleness.py holds the same logic as a CLI). Only the
-# new/changed head remains hand-maintained, per round:
-_NEW_OR_CHANGED = (
-    # round 11 head (cap 5 this round — VERDICT r10 next-round #1: the
-    # POST-landing invariant needs head + (head + 40 r7-stale
-    # leftovers) ≤ 50, so head ≤ 5; the count itself is len()-derived
-    # in the test, never narrated).
-    # NEW: BPE APPLY certificate — the corpus encoded under the
-    # TRAINED merge table vs the fixed regex baseline, closing the
-    # text family's training loop the way the r10 retrain
-    # certificates closed IVF/PQ (VERDICT r10 next-round #2)
-    "t_bpe_apply",
-    # NEW: streaming multimodal dataset card — foreachBatch merge into
-    # PK-keyed digest-registry + byte-bucket partials, the family's
-    # seventh proven restart state class (VERDICT r10 next-round #3)
-    "s_stream_mm_card",
-    # ORACLE-changed: the unrolled-CTE chain is now MATERIALIZED —
-    # DuckDB 1.0 inlines un-hinted CTEs and re-evaluated the chain
-    # exponentially (5.8 s → 0.1 s at sf0.01; same rows, proven by an
-    # equality run). The Spark side is untouched.
-    "t_bpe_train",
-    # NEW: k-map re-identification audit — released sample's QI
-    # classes sized against the full population registry, completing
-    # the privacy audit ladder (k-anonymity → l-diversity →
-    # t-closeness → k-map)
-    "a_k_map",
-    # NEW: IVF probe-sweep tuning curve — recall vs corpus-scan share
-    # for p = 1..8 probes, the dedup_banding_curve pattern applied to
-    # the ANN serving dial (N_PROBES)
-    "sim_ivf_probe_curve",
-)
-
-#: hard cap on the hand-maintained head (VERDICT r7 item 1) — enforced
-#: by tests/test_registry.py together with window coverage of every
-#: ≥4-rounds-stale query, so a late-round head addition that would
-#: push stale queries out of the ~50-query driver window fails CI
-#: instead of silently invalidating the round's coverage claim.
-#: Round 11: lowered 7 → 5 (VERDICT r10 item: post-landing window math
-#: head + (head + 40) ≤ 50).
-NEW_OR_CHANGED_CAP = 5
-DRIVER_WINDOW = 50
-
-
-def _last_green_rounds() -> dict[str, int]:
-    """query -> latest round with a green driver row (0 = never).
-    The green predicate and history scan live in ONE place —
-    ``tools.staleness`` (ADVICE r7: the duplicated copy here could
-    drift from the CLI's); the inline fallback below only covers a
-    driver checkout without ``tools/`` and mirrors it verbatim."""
-    import os
-    import sys
-
-    here = os.path.dirname(os.path.abspath(__file__))
-    if here not in sys.path:
-        sys.path.insert(0, here)
-    try:
-        from tools.staleness import last_green_rounds
-
-        return last_green_rounds()
-    except Exception:
-        pass
-
-    import glob
-    import json
-    import re
-
-    out: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(here, "CORRECTNESS_r*.json"))):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        try:
-            with open(path) as f:
-                data = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, row in data.items():
-            ok = (
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match") is not False
-                and not row.get("err")
-            )
-            if ok:
-                out[name] = max(out.get(name, 0), int(m.group(1)))
-            else:
-                out.setdefault(name, 0)
-    return out
-
-
-def _prioritized(entries: dict) -> dict:
-    head = {n: i for i, n in enumerate(_NEW_OR_CHANGED)}
-    greens = _last_green_rounds()
-
-    def rank(name: str):
-        if name in head:
-            return (0, head[name], name)
-        return (1, greens.get(name, 0), name)
-
-    return dict(sorted(entries.items(), key=lambda kv: rank(kv[0])))
-
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship query: TPC-H Q1-style pricing summary at sf0.001."""
@@ -131,10 +24,13 @@ def entry(spark: SparkSession) -> DataFrame:
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     from securities_data_pipeline_spark.registry import all_queries
 
-    return _prioritized(all_queries())
+    return all_queries()
 
 
 def oracle_sql() -> dict[str, str]:
+    """Oracles in ``queries()`` order (the family maps register in
+    different orders, and consumers zip the two maps positionally)."""
     from securities_data_pipeline_spark.registry import all_oracles
 
-    return _prioritized(all_oracles())
+    oracles = all_oracles()
+    return {name: oracles[name] for name in queries()}

@@ -407,7 +407,10 @@ def _assign(emb: DataFrame, cents: list[tuple[int, list[float]]]) -> DataFrame:
     per iteration for free — the idiomatic Spark shape for custom
     numeric kernels (MLlib's own k-means does the same with a
     broadcast centroid matrix). Distances round to 6 dp before the
-    argmin so both engines' float paths agree.
+    argmin so both engines' float paths agree. It stays separate from
+    ``similarity._assign_literal``, the cosine kernel: the metric here
+    is squared L2, and the float ``avg`` M-step's order is part of this
+    query's DuckDB oracle contract.
     """
     cid_arr = np.array([cid for cid, _ in cents], dtype=np.int64)
     cmat = np.array([vec for _, vec in cents], dtype=np.float64)

@@ -8,10 +8,11 @@ Two tiers over the ``embeddings`` table (64-dim float vectors):
   rank with a per-query window. O(|Q|·n) with n scanned once.
 - **IVF top-k** — the scale path: deterministic coarse centroids
   (every 100th vector), every corpus vector assigned to its nearest
-  centroid (one broadcast join), queries probe only their centroid's
-  bucket. At 100 TB this turns a full-corpus scan per query into a
-  1/n_centroids partition probe; buckets are co-partitioned by
-  centroid id so the probe is a partition-pruned join. (A production
+  centroid (one in-row fold over the literal roster), queries probe
+  only their centroid's bucket. At 100 TB this turns a full-corpus
+  scan per query into a 1/n_centroids partition probe; buckets are
+  co-partitioned by centroid id so the probe is a partition-pruned
+  join. (A production
   build would train centroids with k-means sampling; determinism here
   makes the operator oracle-checkable.)
 
@@ -319,27 +320,21 @@ WHERE e.vec_id <> q.query_id
 def assign_buckets(emb: DataFrame) -> DataFrame:
     """Assign every vector to its nearest deterministic centroid.
 
-    Optimization round 11: the original formulation exploded the corpus
-    n×K through a centroid crossJoin and picked row 1 of a per-vector
-    window — one full n×K Exchange + sort per consumer. The E-step here
-    is now the same IN-ROW argmax fold ``_kmeans_assign`` uses (guide
-    §2.4 — remove shuffles outright): the K-row roster packs into one
-    sorted struct row, broadcasts, and every vector folds over it
-    inside a single projection — ZERO Window nodes, zero n×K rows.
-    Tie semantics are identical by construction (strictly-greater fold
-    over the centroid_id-ascending array ≡ ORDER BY csim DESC,
-    centroid_id ASC row 1), and the cosine expression is the same
-    rounded fold, so the assignment is bit-identical — the equivalence
-    the sim_kmeans_train pure-Python pin already proves for this shape.
+    The roster is the bounded K ≤ ``N_CENTROIDS_CAP`` collect
+    ``_collect_centroid_rows`` (the same one ``sim_ivf_retrain_recall``
+    pays), and the assignment is the module's one cosine
+    nearest-centroid kernel, ``_assign_literal``: every vector folds
+    over the literal roster inside a single projection — zero Window
+    nodes, zero n×K rows, no broadcast exchange. Ties break to the
+    lowest centroid id (strictly-greater fold over the
+    centroid_id-ascending array ≡ ORDER BY csim DESC, centroid_id ASC
+    row 1), with the same rounded cosine as the oracle's window.
     """
-    centroids = emb.where(_centroid_filter()).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cvec")
-    )
     # spread the corpus side before the K×d argmax fold (CPU-bound
     # per-row work; no-op on streams and on already-wide scans)
-    return _kmeans_assign(
+    return _assign_literal(
         spread(emb.select("vec_id", "label", "embedding")),
-        _kmeans_roster(centroids),
+        _collect_centroid_rows(emb),
     ).select("vec_id", "label", "embedding", "centroid_id")
 
 
@@ -1808,7 +1803,7 @@ def sim_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket means every query probing it pays its size: at 100 TB a
     10× ratio on one centroid is the signal to re-train or split (the
     `m_partition_skew_report` of the learned partitioning — same stat,
-    learned key). Plan: the shared `assign_buckets` broadcast-argmax
+    learned key). Plan: the shared `assign_buckets` literal-roster argmax
     (k×d centroid literals against the scan, never a vector shuffle),
     ONE hash aggregate on centroid_id, and the ratio in a global
     window over the ≤``N_CENTROIDS_CAP``-row aggregate.
@@ -1861,80 +1856,6 @@ SIMILARITY_ORACLES["sim_ivf_balance"] = guard_emb_sql(SIM_IVF_BALANCE_SQL)
 KMEANS_ROUNDS = 3  # Lloyd iterations; convergence data in SCALE.md
 
 
-def _kmeans_roster(cents: DataFrame):
-    """Pack the K-row centroid table into ONE sorted struct-array row
-    (centroid_id ascending — array_sort on the id-first struct; the
-    extra fields never participate in the sort because centroid_id is
-    unique), the bounded k×d state that broadcasts however large the
-    corpus is. Each entry carries its precomputed norm ``cn`` so the
-    assignment fold does ONE fold (the dot) per centroid instead of
-    three — the quotient is bit-identical to inline ``cosine`` (same
-    per-vector sequential folds; the sim_knn_graph precedent)."""
-    return cents.agg(
-        F.array_sort(
-            F.collect_list(
-                F.struct(
-                    "centroid_id",
-                    "cvec",
-                    _norm("cvec").alias("cn"),
-                )
-            )
-        ).alias("cents")
-    )
-
-
-def _kmeans_assign(emb: DataFrame, roster) -> DataFrame:
-    """E-step as an IN-ROW argmax: every vector scans the broadcast
-    roster array inside one ``F.aggregate`` — no n×K row explosion and
-    no per-vector window shuffle (at corpus scale the E-step is then a
-    pure map over the scan). Ties break to the LOWEST centroid id: the
-    fold keeps the first strictly-greater sim over the id-ascending
-    array — exactly ``ORDER BY sim DESC, centroid_id ASC`` row 1.
-
-    Per-row work (optimization round 11): the corpus vector's norm is
-    hoisted into ``_en`` (computed once per row, not once per centroid)
-    and the centroid norms ride the roster structs, so the fold runs
-    K dot-products instead of K×3 folds — ~3× fewer interpreted
-    higher-order-function evaluations per row, with the division
-    grouped exactly as ``cosine`` groups it (dot / (norm_a * norm_b)),
-    so every sim is bit-identical. Extra input columns (label, …) pass
-    through untouched."""
-    # the whole argmax fold as ONE SQL string (optimization round 11):
-    # py4j-built nested lambdas get fresh variable names per build,
-    # defeating the whole-stage-codegen cache on every assign consumer
-    # (see _dot_expr). Term-for-term the previous Column form: -2.0/-1
-    # init struct, per-centroid sim = round(dot / (cn * _en), 6) with
-    # the same zip_with/fold shape, strictly-greater keeps the first
-    # (lowest-id) winner.
-    s = (
-        "round(aggregate(zip_with(c.cvec, embedding, "
-        "(x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)), "
-        "CAST(0.0 AS DOUBLE), (a2, v) -> a2 + v) / (c.cn * _en), 6)"
-    )
-    best = F.expr(
-        "aggregate(cents, "
-        "named_struct('sim', CAST(-2.0 AS DOUBLE), 'cid', CAST(-1 AS BIGINT)), "
-        f"(acc, c) -> CASE WHEN {s} > acc.sim "
-        f"THEN named_struct('sim', {s}, 'cid', CAST(c.centroid_id AS BIGINT)) "
-        "ELSE acc END)"
-    )
-    cols = list(emb.columns)
-    # two-step projection: the fold lands in ONE alias first, fields
-    # extract in a second Project — multi-use non-trivial aliases block
-    # CollapseProject (the with_shingles lesson), so the fold runs once
-    # per row, not once per extracted field
-    return (
-        emb.withColumn("_en", _norm("embedding"))
-        .crossJoin(F.broadcast(roster))
-        .select(*cols, best.alias("_best"))
-        .select(
-            *cols,
-            F.col("_best.cid").alias("centroid_id"),
-            F.col("_best.sim").alias("sim"),
-        )
-    )
-
-
 def _py_norm(vec: list[float]) -> float:
     """Left-fold sum of squares then sqrt — the exact fold order
     ``_norm`` evaluates, so the value is bit-identical to the in-plan
@@ -1961,11 +1882,11 @@ def _roster_fold_sql(roster: list[tuple[int, list[float]]]) -> str:
     """The in-row argmax fold over a LITERAL roster — the bounded k×d
     training state entering the plan as array literals (the
     hyperplane/ADC lesson: built as ONE SQL string parsed JVM-side, so
-    driver time never scales with K×d py4j round-trips). Expression
-    semantics are exactly ``_kmeans_assign``'s fold: dot and norm are
-    the same left-to-right ``aggregate`` folds, ``cn`` is the Python
-    left-fold norm (bit-identical to ``_norm`` — ``_py_norm``), ties
-    keep the first strictly-greater sim over the id-ascending array.
+    driver time never scales with K×d py4j round-trips). Dot and norm
+    are the same left-to-right ``aggregate`` folds as ``cosine``,
+    ``cn`` is the Python left-fold norm (bit-identical to ``_norm`` —
+    ``_py_norm``), ties keep the first strictly-greater sim over the
+    id-ascending array.
 
     Optimization round 12 kept the LITERAL form deliberately: the
     1-row-broadcast-LocalRelation binding VERDICT r11 #2 suggested
@@ -2007,26 +1928,77 @@ _EN_SQL = (
 def _assign_literal(
     emb: DataFrame, roster: list[tuple[int, list[float]]]
 ) -> DataFrame:
-    """``_kmeans_assign`` with the roster as driver-side literal state:
-    one flat projection per corpus row (scan → fold), no roster
-    aggregate, no crossJoin, no per-round lineage to truncate — the
-    plan Catalyst analyzes once instead of once per checkpoint.
-    Output: (vec_id, embedding, _en, centroid_id, sim); ``_en`` is the
-    row's hoisted norm, reusable by downstream exact scoring."""
+    """The cosine nearest-centroid kernel — every IVF assignment, the
+    k-means E-step and the streaming index maintainer run through it.
+    The roster is driver-side literal state: one flat projection per
+    corpus row (scan → fold), no roster aggregate, no crossJoin, no
+    per-round lineage to truncate — the plan Catalyst analyzes once
+    instead of once per checkpoint, and a stream accepts it as a
+    stateless projection. Every input column passes through, followed
+    by ``_en`` (the row's hoisted norm, reusable by downstream exact
+    scoring), ``centroid_id`` and ``sim``."""
     fold = _roster_fold_sql(roster)
+    cols = [f"`{c}`" for c in emb.columns]
     # fold lands in one alias, fields extract in a second Project
     # (multi-use aliases block CollapseProject → single evaluation)
     return (
-        emb.selectExpr("vec_id", "embedding", f"{_EN_SQL} AS _en")
-        .selectExpr("vec_id", "embedding", "_en", f"{fold} AS _best")
+        emb.selectExpr(*cols, f"{_EN_SQL} AS _en")
+        .selectExpr(*cols, "_en", f"{fold} AS _best")
         .selectExpr(
-            "vec_id",
-            "embedding",
-            "_en",
-            "_best.cid AS centroid_id",
-            "_best.sim AS sim",
+            *cols, "_en", "_best.cid AS centroid_id", "_best.sim AS sim"
         )
     )
+
+
+def _lloyd(
+    assign: Callable[[dict], DataFrame],
+    state: dict[tuple[int, ...], list[float]],
+    keys: tuple[str, ...],
+    rounds: int,
+) -> dict[tuple[int, ...], list[float]]:
+    """The Lloyd loop shared by the k-means and PQ trainers, with
+    DRIVER-side state: ``state`` maps each cluster key (one int per
+    ``keys`` column) to its vector, and ``assign(state)`` is the
+    caller's E-step, returning the ``keys`` columns followed by each
+    member's vector. Per round ONE job: E-step map → posexplode →
+    map-side-combined (keys…, pos) mean of exact DECIMAL(27,10) sums
+    rounded to 6 dp (decimal sums are associative, so the means are
+    bit-stable across partitionings AND engines — the
+    ``label_centroids`` discipline) → collect; a cluster that lost
+    every member keeps its previous vector. State is index-sized
+    forever (the MLlib KMeans per-iteration collect class), and
+    collected means round-trip exactly (IEEE doubles both ways)."""
+    for _ in range(rounds):
+        assigned = assign(state)
+        means = (
+            assigned.select(
+                *keys, F.posexplode(assigned.columns[-1]).alias("pos", "x")
+            )
+            .groupBy(*keys, "pos")
+            .agg(
+                F.round(
+                    F.sum(
+                        F.col("x").cast("double").cast("decimal(27,10)")
+                    ).cast("double")
+                    / F.count(F.lit(1)),
+                    6,
+                ).alias("_mean")
+            )
+            .collect()
+        )
+        bypos: dict[tuple[int, ...], dict[int, float]] = {}
+        for r in means:
+            key = tuple(int(r[k]) for k in keys)
+            bypos.setdefault(key, {})[int(r.pos)] = float(r._mean)
+        state = {
+            key: (
+                [bypos[key][p] for p in range(len(prev))]
+                if key in bypos
+                else prev
+            )
+            for key, prev in state.items()
+        }
+    return state
 
 
 def kmeans_train_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2035,16 +2007,14 @@ def kmeans_train_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
     calls for, seeded from the serving roster it would replace (the
     deterministic ``_centroid_filter`` centroids sim_ivf_topk probes).
 
-    Per round: E-step = in-row argmax against the one-row broadcast
-    roster (``_kmeans_assign``); M-step = per-cluster per-dimension
+    Per round (``_lloyd``): E-step = in-row argmax against the literal
+    roster (``_assign_literal``); M-step = per-cluster per-dimension
     mean in exact DECIMAL(27,10) sums (the ``label_centroids``
     discipline — float groupBy sums are accumulation-order-
     nondeterministic, decimal sums are associative, so centroids are
-    bit-stable across partitionings AND engines), reassembled into an
-    ordered array; a cluster that loses every member keeps its
-    previous centroid (left-join fallback on the K-row roster). Round
-    state localCheckpoints lazily so round r+1 never replans rounds
-    1..r (the t_bpe_train / logreg-GD unrolling lesson). Output: the
+    bit-stable across partitionings AND engines); a cluster that loses
+    every member keeps its previous centroid. Round state lives on the
+    driver, so round r+1 never replans rounds 1..r. Output: the
     trained roster after ``KMEANS_ROUNDS`` rounds with each cluster's
     final membership and mean cosine cohesion (clusters empty under
     the FINAL roster are dropped by the inner stats join, on both
@@ -2093,52 +2063,19 @@ def _kmeans_train_lists(emb: DataFrame) -> list[tuple[int, list[float]]]:
     ``sim_ivf_retrain_recall`` (which needs every centroid as a probe
     target, member or not).
 
-    Optimization round 11: the round state (k×d ≤ 20×64 doubles —
-    index-sized forever) now lives on the DRIVER between rounds, the
-    same bounded class as ``_pq_codebook``'s donor collect and MLlib
-    KMeans' per-iteration centroid collect. Each round is ONE job:
-    scan → literal-roster argmax map → posexplode → map-side-combined
-    (centroid, dim) DECIMAL mean → collect K×d rows; the driver merges
-    means with the empty-cluster fallback and embeds the next round's
-    roster as literals. vs the previous formulation (per-round roster
-    re-aggregation + 1-row crossJoin + left-join fallback + lazy
-    localCheckpoint), this removes 2 shuffles + 1 broadcast + 1 join
-    per round AND — the measured driver killer — the per-checkpoint
-    Catalyst replanning of the growing tree (profiled 17.6 s of
-    DataFrame BUILD time alone for the 3-round chain at sf0.1; guide
-    §7.3's planning-cost class). Collected means round-trip exactly
-    (IEEE doubles both ways), the M-step expression is unchanged, and
-    the fold compares the same rounded sims, so the trained roster is
-    bit-identical — pinned by the pure-Python Lloyd twin test.
+    Each round is one ``_lloyd`` job over the literal-roster E-step
+    (``_assign_literal``) — the pure-Python Lloyd twin test pins the
+    trained roster bit for bit.
     """
-    cents = _collect_centroid_rows(emb)
-    for _ in range(KMEANS_ROUNDS):
-        assigned = _assign_literal(emb, cents)
-        dims = assigned.select(
-            "centroid_id", F.posexplode("embedding").alias("pos", "x")
-        )
-        means = dims.groupBy("centroid_id", "pos").agg(
-            F.round(
-                F.sum(
-                    F.col("x").cast("double").cast("decimal(27,10)")
-                ).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("m")
-        ).collect()
-        bypos: dict[int, dict[int, float]] = {}
-        for r in means:
-            bypos.setdefault(int(r.centroid_id), {})[int(r.pos)] = float(r.m)
-        cents = [
-            (
-                cid,
-                [bypos[cid][p] for p in range(len(prev))]
-                if cid in bypos
-                else prev,
-            )
-            for cid, prev in cents
-        ]
-    return cents
+    trained = _lloyd(
+        lambda st: _assign_literal(
+            emb, [(cid, vec) for (cid,), vec in st.items()]
+        ).select("centroid_id", "embedding"),
+        {(cid,): vec for cid, vec in _collect_centroid_rows(emb)},
+        ("centroid_id",),
+        KMEANS_ROUNDS,
+    )
+    return [(cid, vec) for (cid,), vec in trained.items()]
 
 
 def sim_kmeans_train(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2372,7 +2309,7 @@ def sim_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     previously each re-scanned parquet single-task) and the exact
     side computes ONCE (localCheckpoint) feeding both rosters' hit
     joins; per roster the corpus is touched by one in-row-argmax map
-    (``_kmeans_assign`` — no n×K explosion, checkpointed because the
+    (``_assign_literal`` — no n×K explosion, checkpointed because the
     bucket aggregate and the probe join both consume it) plus one
     bucket aggregate, and the probe/rank stage is the ``sim_ivf_topk``
     shape over probed buckets only. All crossJoins are 1-row stats or
@@ -2607,13 +2544,13 @@ def _pq_train_state(
     emb: DataFrame | None = None,
     donors: list[list[float]] | None = None,
 ) -> tuple[dict[tuple[int, int], list[float]], DataFrame]:
-    """The subspace-Lloyd loop with DRIVER-side codebook state
-    (M×K×dsub doubles — index-sized forever, the ``_pq_codebook``
-    bounded class): per round ONE job — subvector scan → literal
-    argmin map → map-side-combined (m, c, dim) DECIMAL mean → collect
-    M×K×dsub rows — and the driver merges means with the empty-code
-    fallback. Returns (trained codebook dict, the lazily-checkpointed
-    subvector table for downstream passes). Replaces the per-round
+    """The subspace-Lloyd loop: ``_lloyd`` keyed on (m, c) with
+    DRIVER-side codebook state (M×K×dsub doubles — index-sized forever,
+    the ``_pq_codebook`` bounded class) and the literal squared-L2
+    argmin (``_pq_assign_literal``) as its E-step; ``sv`` is already
+    DOUBLE, so the shared M-step's double cast is a no-op here.
+    Returns (trained codebook dict, the lazily-checkpointed subvector
+    table for downstream passes). Replaces the per-round
     roster re-aggregation + broadcast join + lazy localCheckpoint
     whose repeated Catalyst replanning dominated the wall clock
     (profiled 7.6-23.9 s of DataFrame build time; guide §7.3).
@@ -2661,31 +2598,12 @@ def _pq_train_state(
         for m in range(PQ_M):
             cb[(m, c)] = nv[m * PQ_DSUB : (m + 1) * PQ_DSUB]
 
-    for _ in range(PQ_TRAIN_ROUNDS):
-        assigned = _pq_assign_literal(sub, cb)
-        dims = assigned.select(
-            "m", "c", F.posexplode("sv").alias("pos", "x")
-        )
-        means = dims.groupBy("m", "c", "pos").agg(
-            F.round(
-                F.sum(F.col("x").cast("decimal(27,10)")).cast("double")
-                / F.count(F.lit(1)),
-                6,
-            ).alias("v")
-        ).collect()
-        bypos: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            bypos.setdefault((int(r.m), int(r.c)), {})[int(r.pos)] = float(
-                r.v
-            )
-        cb = {
-            (m, c): (
-                [bypos[(m, c)][p] for p in range(len(prev))]
-                if (m, c) in bypos
-                else prev
-            )
-            for (m, c), prev in cb.items()
-        }
+    cb = _lloyd(
+        lambda st: _pq_assign_literal(sub, st).select("m", "c", "sv"),
+        cb,
+        ("m", "c"),
+        PQ_TRAIN_ROUNDS,
+    )
     return cb, sub
 
 

@@ -3,9 +3,10 @@
 The single source of truth for the engine's query surface: every
 family module contributes its ``*_QUERIES`` / ``*_ORACLES`` maps here.
 The repo-root driver contract (``__spark_entry__.py``) and the
-``Engine`` facade both consume THIS module — the entry script layers
-its driver-sampling order on top, and the facade stays importable as a
-library (it must never reach up into a repo-root script).
+``Engine`` facade both consume THIS module, and the facade stays
+importable as a library (it must never reach up into a repo-root
+script). Every family imports unguarded: a family that fails to import
+fails the registry loudly instead of silently dropping its queries.
 """
 
 from __future__ import annotations
@@ -18,6 +19,7 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
 def all_queries() -> dict[str, QueryFn]:
+    from securities_data_pipeline_spark.operators import EXTENSION_QUERIES
     from securities_data_pipeline_spark.plans.analytics import ANALYTICS_QUERIES
     from securities_data_pipeline_spark.plans.maintenance import MAINTENANCE_QUERIES
     from securities_data_pipeline_spark.plans.relational import RELATIONAL_QUERIES
@@ -26,6 +28,7 @@ def all_queries() -> dict[str, QueryFn]:
     from securities_data_pipeline_spark.plans.relational_tpch3 import TPCH3_QUERIES
     from securities_data_pipeline_spark.plans.securities_demo import SECURITIES_QUERIES
     from securities_data_pipeline_spark.plans.subqueries import SUBQUERY_QUERIES
+    from securities_data_pipeline_spark.streaming import STREAMING_QUERIES
 
     out: dict[str, QueryFn] = {}
     out.update(RELATIONAL_QUERIES)
@@ -36,22 +39,13 @@ def all_queries() -> dict[str, QueryFn]:
     out.update(TPCH3_QUERIES)
     out.update(SUBQUERY_QUERIES)
     out.update(SECURITIES_QUERIES)
-    try:
-        from securities_data_pipeline_spark.operators import EXTENSION_QUERIES
-
-        out.update(EXTENSION_QUERIES)
-    except ImportError:
-        pass
-    try:
-        from securities_data_pipeline_spark.streaming import STREAMING_QUERIES
-
-        out.update(STREAMING_QUERIES)
-    except ImportError:
-        pass
+    out.update(EXTENSION_QUERIES)
+    out.update(STREAMING_QUERIES)
     return out
 
 
 def all_oracles() -> dict[str, str]:
+    from securities_data_pipeline_spark.operators import EXTENSION_ORACLES
     from securities_data_pipeline_spark.plans.analytics import ANALYTICS_ORACLES
     from securities_data_pipeline_spark.plans.maintenance import MAINTENANCE_ORACLES
     from securities_data_pipeline_spark.plans.relational import RELATIONAL_ORACLES
@@ -60,6 +54,7 @@ def all_oracles() -> dict[str, str]:
     from securities_data_pipeline_spark.plans.relational_tpch3 import TPCH3_ORACLES
     from securities_data_pipeline_spark.plans.securities_demo import SECURITIES_ORACLES
     from securities_data_pipeline_spark.plans.subqueries import SUBQUERY_ORACLES
+    from securities_data_pipeline_spark.streaming import STREAMING_ORACLES
 
     out: dict[str, str] = {}
     out.update(RELATIONAL_ORACLES)
@@ -70,16 +65,6 @@ def all_oracles() -> dict[str, str]:
     out.update(TPCH3_ORACLES)
     out.update(SUBQUERY_ORACLES)
     out.update(SECURITIES_ORACLES)
-    try:
-        from securities_data_pipeline_spark.operators import EXTENSION_ORACLES
-
-        out.update(EXTENSION_ORACLES)
-    except ImportError:
-        pass
-    try:
-        from securities_data_pipeline_spark.streaming import STREAMING_ORACLES
-
-        out.update(STREAMING_ORACLES)
-    except ImportError:
-        pass
+    out.update(EXTENSION_ORACLES)
+    out.update(STREAMING_ORACLES)
     return out

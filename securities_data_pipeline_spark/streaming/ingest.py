@@ -1210,26 +1210,20 @@ def s_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     them, the same documented bounded-collect as the PQ codebooks), so
     per-batch assignment is a stateless narrow projection: no window,
     no groupBy, no state store, nothing for a restart to replay
-    wrong. Argmax over the centroid literals is an array-max over
-    (sim, -centroid_id) structs — ties at the 6-dp cosine quantum
-    break toward the LOWER centroid id, byte-identical to the batch
-    assigner's ORDER BY csim DESC, centroid_id ASC. The stream reads
-    through the same ``embedding_ok`` admission predicate the batch
-    ingest applies at write time (a stream IS an ingest point)."""
+    wrong. The projection IS the batch kernel, ``_assign_literal``
+    (one query definition for batch and stream): ties at the 6-dp
+    cosine quantum break toward the LOWER centroid id, byte-identical
+    to the batch assigner's ORDER BY csim DESC, centroid_id ASC. The
+    stream reads through the same ``embedding_ok`` admission predicate
+    the batch ingest applies at write time (a stream IS an ingest
+    point)."""
     from securities_data_pipeline_spark.operators.similarity import (
-        _centroid_filter,
-        cosine,
+        _assign_literal,
+        _collect_centroid_rows,
         embedding_ok,
         emb_table,
     )
 
-    cents = sorted(
-        (int(r.vec_id), [float(x) for x in r.embedding])
-        for r in emb_table(spark, sf_dir)
-        .where(_centroid_filter())
-        .select("vec_id", "embedding")
-        .collect()
-    )
     # "new" vectors = the vec_id % 10 == 7 slice (the same new-batch
     # convention as dedup_incremental) — disjoint from the centroid
     # donors (vec_id % 100 == 0) by construction
@@ -1237,37 +1231,10 @@ def s_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         embedding_ok(F.col("embedding"))
         & (F.pmod(F.col("vec_id"), F.lit(10)) == 7)
     )
-    # The centroid literals enter as ONE parsed SQL expression, not
-    # ~1300 F.lit() py4j round trips — the j_bloom_prefilter lesson
-    # (BASELINE.md r6: the bitmap-literal rework alone saved ~2 s of
-    # pure driver latency); measured here 5.8 → ~1 s per bench run.
-    def _sql_vec(cvec: list[float]) -> str:
-        return "array(" + ",".join(f"CAST({x!r} AS FLOAT)" for x in cvec) + ")"
-
-    def _sql_cos(cvec: list[float]) -> str:
-        dot = (
-            "aggregate(zip_with("
-            + _sql_vec(cvec)
-            + ", embedding, (x, y) -> CAST(x AS DOUBLE) * CAST(y AS DOUBLE)),"
-            " CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)"
-        )
-        nc = sum(float(x) * float(x) for x in cvec) ** 0.5
-        ne = (
-            "sqrt(aggregate(embedding, CAST(0.0 AS DOUBLE),"
-            " (acc, v) -> acc + CAST(v AS DOUBLE) * CAST(v AS DOUBLE)))"
-        )
-        return f"round({dot} / (CAST({nc!r} AS DOUBLE) * {ne}), 6)"
-
-    scored_sql = "array(" + ",".join(
-        f"struct({_sql_cos(cvec)} AS csim, CAST({-cid} AS BIGINT) AS neg_cid)"
-        for cid, cvec in cents
-    ) + ")"
-    best = F.array_max(F.expr(scored_sql))
-    out = new_vecs.select(
-        "vec_id",
-        (-best["neg_cid"]).alias("centroid_id"),
-        best["csim"].alias("csim"),
-    )
+    out = _assign_literal(
+        new_vecs.select("vec_id", "embedding"),
+        _collect_centroid_rows(emb_table(spark, sf_dir)),
+    ).select("vec_id", "centroid_id", F.col("sim").alias("csim"))
     return run_to_memory(out, "append")
 
 

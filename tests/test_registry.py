@@ -152,71 +152,29 @@ def test_query_registry_contract():
     assert not bad, f"unknown family prefixes: {bad}"
 
 
-def test_round_front_queries_lead_registry_order():
-    """The driver samples ~50 queries in registry order; the round's
-    new/changed head must actually lead (and every head name must
-    exist — a typo would silently drop a query from priority)."""
-    import __spark_entry__ as e
+def test_registry_pins_every_family_and_oracle():
+    """The operator and streaming families are in the registry and all
+    240 queries have an oracle — a family that stops importing, or
+    loses queries, fails here instead of shrinking the gate."""
+    from securities_data_pipeline_spark.operators import EXTENSION_QUERIES
+    from securities_data_pipeline_spark.registry import all_oracles, all_queries
+    from securities_data_pipeline_spark.streaming import STREAMING_QUERIES
 
-    q = e.queries()
-    names = list(q)
-    head = [n for n in e._NEW_OR_CHANGED if n in q]
-    missing = set(e._NEW_OR_CHANGED) - set(q)
-    assert not missing, f"front-load names not in registry: {missing}"
-    assert names[: len(head)] == head
-
-
-def test_stale_tail_is_least_recently_green_order():
-    """Since r7 the stale tail is COMPUTED from the CORRECTNESS_r*.json
-    history (the r6 hand-written tuple drifted from reality): after the
-    new/changed head, last-driver-green rounds must be non-decreasing,
-    and queries in the driver's ~50 window must include every query
-    whose last green round is minimal (nothing maximally stale can hide
-    below the window while fresher entries sit inside it)."""
-    import __spark_entry__ as e
-
-    q = e.queries()
-    names = list(q)
-    head = set(e._NEW_OR_CHANGED)
-    greens = e._last_green_rounds()
-    tail = [n for n in names if n not in head]
-    rounds = [greens.get(n, 0) for n in tail]
-    assert rounds == sorted(rounds), "stale tail not least-recently-green"
-    # the CLI twin must agree with the import-time logic
-    import tools.staleness as st
-
-    assert st.last_green_rounds() == greens
+    q, o = all_queries(), all_oracles()
+    assert EXTENSION_QUERIES and set(EXTENSION_QUERIES) <= set(q)
+    assert STREAMING_QUERIES and set(STREAMING_QUERIES) <= set(q)
+    assert len(q) == 240
+    assert set(q) == set(o), set(q) ^ set(o)
 
 
-def test_driver_window_covers_every_deeply_stale_query():
-    """VERDICT r7 item 2: coverage claims must be COMPUTED and
-    enforced, not narrated. Two invariants, checked on the live
-    registry order so any late-round head addition that would push a
-    stale query below the driver window fails here instead of
-    silently invalidating the round's changelog claim:
+def test_registry_family_import_error_propagates(monkeypatch):
+    """A family module that cannot import fails the registry loudly."""
+    import sys
 
-    1. the hand-maintained new/changed head stays within its cap;
-    2. every query ≥4 rounds stale (last driver-green ≤ max_round-4,
-       never-checked counts as round 0) ranks inside the first
-       DRIVER_WINDOW positions of queries() order.
-    """
-    import __spark_entry__ as e
+    from securities_data_pipeline_spark import registry
 
-    assert len(e._NEW_OR_CHANGED) <= e.NEW_OR_CHANGED_CAP, (
-        f"new/changed head has {len(e._NEW_OR_CHANGED)} entries; "
-        f"cap is {e.NEW_OR_CHANGED_CAP} (VERDICT r7 item 1)"
-    )
-    greens = e._last_green_rounds()
-    max_round = max(greens.values(), default=0)
-    threshold = max_round - 4
-    order = list(e.queries())
-    window = set(order[: e.DRIVER_WINDOW])
-    deeply_stale = sorted(
-        n for n in order if greens.get(n, 0) <= threshold
-    )
-    outside = [n for n in deeply_stale if n not in window]
-    assert not outside, (
-        f"{len(outside)} queries ≥4 rounds stale (last green ≤ "
-        f"r{threshold}) rank below the {e.DRIVER_WINDOW}-query driver "
-        f"window: {outside} — shrink the new/changed head"
-    )
+    monkeypatch.setitem(sys.modules, "securities_data_pipeline_spark.streaming", None)
+    with pytest.raises(ImportError):
+        registry.all_queries()
+    with pytest.raises(ImportError):
+        registry.all_oracles()

@@ -74,8 +74,7 @@ BNLJ_OK = {
     "mm_feature_knn",  # broadcast decoded-query vectors x corpus, the exact tier
     "sim_range_search",  # broadcast queries × corpus scan, τ filter
     "sim_ivf_topk",
-    "sim_ivf_balance",  # same assign_buckets broadcast-argmax as sim_ivf_topk
-    "sim_ivf_recall",  # composes the two allowlisted plans above
+    "sim_ivf_recall",  # composes sim_ivf_topk and sim_bruteforce_topk
     "sim_lsh_recall",  # exact side is sim_bruteforce_topk (allowlisted)
     "sim_pq_recall",  # exact side is sim_bruteforce_topk (allowlisted)
     "sim_mmr_rerank",  # pool selection is the brute-force broadcast scan
@@ -90,7 +89,6 @@ BNLJ_OK = {
     "dedup_triangle_stats",  # 1-row wedge-total × 1-row triangle-count
     "a_t_closeness",  # class-k × tiny global value-distribution grid
     "s_stream_t_closeness",  # same grid tail over the final stream state (r10)
-    "sim_kmeans_train",  # 1-row roster crossJoin per Lloyd round (in-row argmax)
     "sim_ivf_retrain_recall",  # 1-row stat / K-row roster crossJoins (r10)
     "sim_pq_retrain_recall",  # 1-row stat crossJoins over the literal-ADC arms (r10)
     "t_bm25_topk",  # same 1-row (n_docs, total_dl) crossJoin as t_idf
