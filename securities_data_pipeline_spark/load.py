@@ -159,7 +159,10 @@ def merge_upsert(
     evolving = bool(
         {c.casefold() for c in incoming.columns} - set(target_by_fold)
     )
-    if partition_by and not evolving:
+    # an evolving batch rewrites every partition (see above); otherwise a
+    # partitioned merge rewrites only the partitions the batch touches
+    pruned = bool(partition_by) and not evolving
+    if pruned:
         # restrict the rewrite to partitions present in the batch:
         # IN-list on partition values → partition pruning at the scan.
         # NULL partition values need an explicit isNull arm — isin()
@@ -172,48 +175,28 @@ def merge_upsert(
         if len(non_null) != len(pvals):
             pred = pred | F.col(pcol).isNull()
         target = target.where(pred)
-        survivors = target.join(incoming.select(*keys), keys, "left_anti")
-        merged = survivors.unionByName(incoming, allowMissingColumns=True)
-        merged = _stage_merged(spark, merged, path)
-        try:
-            (
-                merged.write.partitionBy(*partition_by)
-                .option("partitionOverwriteMode", "dynamic")
-                .mode("overwrite")
-                .parquet(path)
-            )
-        except Exception as ex:
-            # the stage IS the recovery copy (see _stage_merged): a
-            # mid-overwrite failure may have already cleared target
-            # partitions, so the stage must survive for manual restore
-            raise RuntimeError(
-                f"merge overwrite of {path} failed mid-write; the staged "
-                f"merge result is intact at {_stage_path(path)} — restore "
-                "the table from it"
-            ) from ex
-        _delete_path(spark, _stage_path(path))
-    else:
-        # unpartitioned merge, or a schema-evolving partitioned one
-        # (full rewrite keeps every file on the evolved column set)
-        survivors = target.join(incoming.select(*keys), keys, "left_anti")
-        merged = survivors.unionByName(incoming, allowMissingColumns=True)
-        merged = _stage_merged(spark, merged, path)
-        try:
-            writer = merged.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(path)
-        except Exception as ex:
-            # static overwrite clears the target before writing, so a
-            # mid-write failure (OOM, disk full) leaves NO target — the
-            # stage directory is then the only surviving copy of the
-            # table; never delete it on the failure path
-            raise RuntimeError(
-                f"merge overwrite of {path} failed mid-write; the staged "
-                f"merge result is intact at {_stage_path(path)} — restore "
-                "the table from it"
-            ) from ex
-        _delete_path(spark, _stage_path(path))
+    survivors = target.join(incoming.select(*keys), keys, "left_anti")
+    merged = survivors.unionByName(incoming, allowMissingColumns=True)
+    merged = _stage_merged(spark, merged, path)
+    try:
+        writer = merged.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        if pruned:
+            writer = writer.option("partitionOverwriteMode", "dynamic")
+        writer.parquet(path)
+    except Exception as ex:
+        # the stage IS the recovery copy (see _stage_merged): a static
+        # overwrite clears the target before writing, and a dynamic one
+        # may already have cleared some partitions, so a mid-write
+        # failure (OOM, disk full) can leave the stage as the only
+        # surviving copy — never delete it on the failure path
+        raise RuntimeError(
+            f"merge overwrite of {path} failed mid-write; the staged "
+            f"merge result is intact at {_stage_path(path)} — restore "
+            "the table from it"
+        ) from ex
+    _delete_path(spark, _stage_path(path))
 
     # clear the shared file-status cache so *new* reads list the
     # rewritten files. NB: DataFrames created BEFORE this merge hold
@@ -243,28 +226,6 @@ def _stage_merged(spark: SparkSession, merged: DataFrame, path: str) -> DataFram
     stage = _stage_path(path)
     merged.write.mode("overwrite").parquet(stage)
     return spark.read.parquet(stage)
-
-
-def compact_table(
-    spark: SparkSession, path: str, partition_by: tuple[str, ...] = ()
-) -> None:
-    """Rewrite a table to one file per partition (one file total when
-    unpartitioned) — the small-files maintenance job that incremental
-    merges eventually need (Delta's OPTIMIZE analog). Hash-partitioning
-    on the partition columns puts each partition value in exactly one
-    task → one output file per partition. Content is unchanged; run
-    out-of-band."""
-    df = spark.read.parquet(path)
-    if partition_by:
-        df = df.repartition(*[F.col(c) for c in partition_by])
-    else:
-        df = df.coalesce(1)
-    df = df.localCheckpoint(eager=True)
-    writer = df.write
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.mode("overwrite").parquet(path)
-    spark.catalog.refreshByPath(path)
 
 
 def load_prices(spark: SparkSession, df: DataFrame, path: str) -> None:

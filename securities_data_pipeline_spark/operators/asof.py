@@ -34,6 +34,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import guard_events_sql
 from securities_data_pipeline_spark.sources.tables import table
 
 
@@ -426,12 +427,6 @@ GROUP BY p.event_id
 """
 
 
-def _guard_events(sql: str) -> str:
-    from securities_data_pipeline_spark.functions.gates import guard_events_sql
-
-    return guard_events_sql(sql)
-
-
 ASOF_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "j_asof_latest_order": j_asof_latest_order,
     "j_asof_next_order": j_asof_next_order,
@@ -447,7 +442,7 @@ ASOF_ORACLES: dict[str, str] = {
     "j_asof_tolerance_purchase": J_ASOF_TOL_SQL,
     "j_range_band": J_RANGE_SQL,
     "j_range_bin": J_RANGE_BIN_SQL,
-    "w4_session_windows": _guard_events(W4_SESSION_SQL),
+    "w4_session_windows": guard_events_sql(W4_SESSION_SQL),
 }
 
 

@@ -9,7 +9,7 @@ composed oracle doubles as an integration check across operator
 families — the "run your whole pipeline on this engine" demonstration.
 
 Scale shape (100 TB): the scored projection materializes ONCE
-(localCheckpoint) and feeds the threshold aggregate and the gate; the
+(``materialize``) and feeds the threshold aggregate and the gate; the
 threshold is a one-row broadcast; dedup survives on a window over the
 16-byte fingerprint (one shuffle of hashes, text never moves); the
 split is a zero-shuffle hash projection; the manifest is a 3-row
@@ -37,7 +37,7 @@ from securities_data_pipeline_spark.operators.textops import (
     quality_score,
     token_count,
 )
-from securities_data_pipeline_spark.sources.tables import table
+from securities_data_pipeline_spark.sources.tables import materialize, table
 
 
 def t_assemble_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -53,7 +53,7 @@ def t_assemble_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
             token_count().cast("long").alias("n_tok"),
         )
         .withColumn("si", F.round(F.col("q") * SCORE_SCALE).cast("long"))
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     thr = scored.agg(F.expr("percentile(si, 0.5)").alias("thr"))
     kept = scored.crossJoin(F.broadcast(thr)).where(

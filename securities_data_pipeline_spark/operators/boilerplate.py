@@ -18,7 +18,7 @@ Scale notes (100 TB):
 - chunk hashes are 8-byte ints — the groupBy and the join shuffle
   sketches, never text. The exploded chunk relation is used twice
   (document-frequency aggregate + join back), so it is
-  localCheckpoint'd: one scan + one chunk expansion total, the
+  materialized: one scan + one chunk expansion total, the
   at-scale analog of materializing the chunk index.
 - the document-frequency aggregate partial-combines map-side; a
   production run would also cap pathological chunks (stop-chunk
@@ -36,7 +36,7 @@ from pyspark.sql import functions as F
 from securities_data_pipeline_spark.functions.expr import let
 from securities_data_pipeline_spark.functions.hashing import sql_stable_hash64, stable_hash64
 from securities_data_pipeline_spark.operators.textops import _sql_words, words_col
-from securities_data_pipeline_spark.sources.tables import table
+from securities_data_pipeline_spark.sources.tables import materialize, table
 
 CHUNK_W = 8  # words per chunk (non-overlapping)
 
@@ -81,7 +81,7 @@ def t_chunk_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     ch = docs.select(
         "doc_id", F.explode(chunk_hashes()).alias("ch")
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
     dfreq = ch.groupBy("ch").agg(F.count_distinct("doc_id").alias("df"))
     return (
         ch.join(dfreq, "ch")

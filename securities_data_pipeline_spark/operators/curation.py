@@ -56,7 +56,7 @@ from securities_data_pipeline_spark.operators.textops import (
     round6_ratio,
     words_col,
 )
-from securities_data_pipeline_spark.sources.tables import spread, table
+from securities_data_pipeline_spark.sources.tables import materialize, spread, table
 
 # ---------------------------------------------------------------------------
 # repetition filter (Gopher-style duplicate-text heuristics)
@@ -77,7 +77,7 @@ def t_repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = table(spark, sf_dir, "documents")
     # two consumers (stats + bigrams) of the tokenized scan — but NOT
     # materialized: the tokenized arrays are FATTER than the source
-    # text, so a localCheckpoint writes more bytes than the second
+    # text, so materializing them writes more bytes than the second
     # scan+split recomputes (A/B at sf0.1: checkpoint 0.56s vs
     # recompute 0.32s, BASELINE.md r5). The two-consumer
     # materialization rule (PLANS.md) applies when the shared prefix
@@ -361,7 +361,7 @@ def t_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn(
             "si", F.round(F.col("quality") * SCORE_SCALE).cast("long")
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     thr = scored.agg(F.expr("percentile(si, 0.5)").alias("thr"))
     return (
@@ -437,7 +437,8 @@ def _kmeans_assigned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id",
             F.transform(F.col("embedding"), lambda x: x.cast("double")).alias("v"),
         )
-        .localCheckpoint()  # iterated over ITERS+1 times — scan parquet once
+        # iterated over ITERS+1 times — scan parquet once
+        .transform(materialize, eager=True)
     )
     cents = [
         (int(r["vec_id"]), list(r["v"]))
@@ -729,7 +730,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster id; keep-lowest-id resolution is the repo-wide dedup
     convention (`dedup_resolve`).
     """
-    from securities_data_pipeline_spark.operators.similarity import cosine, spread
+    from securities_data_pipeline_spark.operators.similarity import cosine
 
     # spread AFTER the Lloyd loop (its 1-partition float avg order is
     # part of the oracle contract) but BEFORE the checkpoint, so the
@@ -737,7 +738,7 @@ def dedup_semdedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # operator's real cost — fans out over every core instead of the
     # single input partition a small corpus file arrives in. Same-
     # session A/B at sf0.1: 7.46 → 2.84 s median-of-3, identical rows.
-    assigned = spread(_kmeans_assigned(spark, sf_dir)).localCheckpoint(eager=False)
+    assigned = spread(_kmeans_assigned(spark, sf_dir)).transform(materialize)
     a = assigned.select(
         F.col("vec_id").alias("va"), F.col("v").alias("xa"), F.col("cid").alias("ca")
     )
@@ -816,7 +817,7 @@ def t_dsir_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         docs.select("doc_id", "source", F.explode(words_col()).alias("token"))
         .where(F.col("token") != "")
-        .localCheckpoint(eager=False)  # two consumers: freq + scoring
+        .transform(materialize)  # two consumers: freq + scoring
     )
     freq = toks.groupBy("token").agg(
         F.count(F.lit(1)).alias("cnt_r"),
@@ -1112,7 +1113,7 @@ def t_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
         spread(table(spark, sf_dir, "documents"))
         .where(F.col("text").isNotNull())
         .select(y, x1, x2)
-        .localCheckpoint(eager=False)  # scanned once per GD step
+        .transform(materialize)  # scanned once per GD step
     )
 
     def quant(col):
@@ -1286,11 +1287,9 @@ def dedup_semdedup_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql import Window
 
-    from securities_data_pipeline_spark.operators.similarity import cosine, spread
+    from securities_data_pipeline_spark.operators.similarity import cosine
 
-    assigned = spread(_kmeans_assigned(spark, sf_dir)).localCheckpoint(
-        eager=False
-    )
+    assigned = spread(_kmeans_assigned(spark, sf_dir)).transform(materialize)
     wc = Window.partitionBy("cid").orderBy("vec_id")
     anchors = (
         assigned.withColumn("rk", F.row_number().over(wc))

@@ -50,7 +50,7 @@ from securities_data_pipeline_spark.operators.textops import (
     round6_ratio,
     words_col,
 )
-from securities_data_pipeline_spark.sources.tables import materialize, materialize_eager, spread, table
+from securities_data_pipeline_spark.sources.tables import materialize, spread, table
 
 SHINGLE_K = 3
 N_MINHASH = 8
@@ -1390,7 +1390,7 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint its lineage (documents scan + roots join) executes
     # twice — at 100 TB that is two full doc-table scans for a
     # 16-byte/row label set
-    labels = dedup_components_star(spark, sf_dir).transform(materialize_eager)
+    labels = dedup_components_star(spark, sf_dir).transform(materialize, eager=True)
     sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sizes, "component").select(
         "doc_id",
@@ -1444,7 +1444,7 @@ def dedup_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = lsh_candidate_pairs(docs)
     sym = edges.union(
         edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).transform(materialize_eager)
+    ).transform(materialize, eager=True)
     deg = sym.groupBy("doc_a").agg(F.count(F.lit(1)).alias("outdeg"))
     nodes = docs.select("doc_id")
     n_row = nodes.agg(F.count(F.lit(1)).alias("n"))
@@ -1612,7 +1612,7 @@ def triangle_stats(pairs: DataFrame) -> DataFrame:
     The wedge TOTAL (denominator) comes from the degree table alone —
     Σ deg·(deg−1)/2 in exact int64 — never from enumerating wedges.
     """
-    pairs = pairs.transform(materialize_eager)
+    pairs = pairs.transform(materialize, eager=True)
     sym = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )
@@ -1644,7 +1644,7 @@ def triangle_stats(pairs: DataFrame) -> DataFrame:
         F.when(fwd, F.col("doc_a")).otherwise(F.col("doc_b")).alias("src"),
         F.when(fwd, F.col("doc_b")).otherwise(F.col("doc_a")).alias("dst"),
         F.when(fwd, F.col("degb")).otherwise(F.col("dega")).alias("degdst"),
-    ).transform(materialize_eager)
+    ).transform(materialize, eager=True)
     o2 = o.select(
         F.col("src").alias("src2"), F.col("dst").alias("dst2"), F.col("degdst").alias("degdst2")
     )
@@ -1752,7 +1752,7 @@ def common_neighbor_links(pairs: DataFrame, topk: int = CN_TOPK) -> DataFrame:
     IEEE parity across engines, no rounding needed — and the (cn desc,
     doc_a, doc_b) order is total, so the top-k cut is deterministic.
     """
-    pairs = pairs.transform(materialize_eager)
+    pairs = pairs.transform(materialize, eager=True)
     sym = pairs.union(
         pairs.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
     )

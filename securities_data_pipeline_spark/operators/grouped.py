@@ -24,6 +24,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import guard_events_sql
 from securities_data_pipeline_spark.sources.tables import table
 
 
@@ -306,16 +307,10 @@ GROUPED_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "udtf_token_positions": udtf_token_positions,
 }
 
-def _guard_events(sql: str) -> str:
-    from securities_data_pipeline_spark.functions.gates import guard_events_sql
-
-    return guard_events_sql(sql)
-
-
 GROUPED_ORACLES: dict[str, str] = {
-    "g_user_trend": _guard_events(G_USER_TREND_SQL),
-    "g_user_trend_udf": _guard_events(G_USER_TREND_SQL),
-    "g_weighted_mean_udaf": _guard_events(G_WMEAN_SQL),
+    "g_user_trend": guard_events_sql(G_USER_TREND_SQL),
+    "g_user_trend_udf": guard_events_sql(G_USER_TREND_SQL),
+    "g_weighted_mean_udaf": guard_events_sql(G_WMEAN_SQL),
     "g_topn_per_group_scalable": G_TOPN_SQL,
     "udtf_token_positions": _sql_token_positions(),
 }

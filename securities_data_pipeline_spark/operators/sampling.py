@@ -31,7 +31,7 @@ from securities_data_pipeline_spark.functions.hashing import (
     sql_stable_hash64,
     stable_hash64,
 )
-from securities_data_pipeline_spark.sources.tables import table
+from securities_data_pipeline_spark.sources.tables import materialize, table
 
 # demo mixing rates per language stratum (per-mille, exact integers so
 # both engines compare the same way)
@@ -327,7 +327,7 @@ def t_temperature_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
             .cast("int")
             .alias("rate_pm"),
         )
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     kept = (
         docs.join(F.broadcast(rates), "lang")

@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from securities_data_pipeline_spark.sources.tables import materialize, materialize_eager, table
+from securities_data_pipeline_spark.sources.tables import materialize, spread, table
 
 N_QUERIES = 5  # vec_id < 5 are the demo query vectors
 TOP_K = 10
@@ -103,10 +103,6 @@ def emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return validated_embeddings(spark, sf_dir)
-
-
-# canonical definition lives beside the scans it compensates for
-from securities_data_pipeline_spark.sources.tables import spread  # noqa: F401,E402
 
 
 def guard_emb_sql(sql: str) -> str:
@@ -2334,7 +2330,7 @@ def sim_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         exact_fut = pool.submit(
             lambda: _bruteforce_topk_from(emb)
             .select("query_id", "vec_id")
-            .transform(materialize_eager)  # feeds both rosters' hit joins
+            .transform(materialize, eager=True)  # feeds both rosters' hit joins
         )
         trained = _kmeans_train_lists(emb)
         exact = exact_fut.result()
@@ -2865,7 +2861,7 @@ def sim_pq_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex = (
             _bruteforce_topk_from(emb)
             .select("query_id", "vec_id")
-            .transform(materialize_eager)  # feeds both codebooks' hit joins
+            .transform(materialize, eager=True)  # feeds both codebooks' hit joins
         )
         return qv, ex
 

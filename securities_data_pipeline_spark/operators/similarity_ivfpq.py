@@ -68,6 +68,8 @@ from securities_data_pipeline_spark.operators.similarity import (
     _sql_cosine,
     cosine,
 )
+from securities_data_pipeline_spark.sources.tables import spread
+
 #: composite-tier dials (vs the standalone tiers' N_PROBES=4 /
 #: PQ_SHORTLIST=50): IVF-PQ stacks two approximations, so it probes
 #: more buckets and shortlists more candidates to compensate. Measured
@@ -230,8 +232,6 @@ def sim_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "(x, y) -> x - y) AS rv)"
         "), 1)), 1)), 1)"
     )
-    from securities_data_pipeline_spark.operators.similarity import spread
-
     assigned = spread(emb).select(
         "vec_id", F.expr(f"explode(array({assign_expr}))").alias("_a")
     ).select("vec_id", F.col("_a.b").alias("_bidx"), F.col("_a.rv").alias("_rv"))

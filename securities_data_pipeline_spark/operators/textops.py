@@ -29,7 +29,7 @@ from securities_data_pipeline_spark.functions.hashing import (
     sql_seeded_hash64,
     sql_stable_hash64,
 )
-from securities_data_pipeline_spark.sources.tables import spread, table
+from securities_data_pipeline_spark.sources.tables import materialize, spread, table
 
 # one source of truth for both engines
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -478,7 +478,7 @@ def t_tfidf_doc_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     toks = docs.select(
         "doc_id", F.explode(words_col()).alias("term")
-    ).where(F.col("term") != "").localCheckpoint(eager=False)
+    ).where(F.col("term") != "").transform(materialize)
     tf = toks.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = (
         tf.select("doc_id", "term").groupBy("term")
@@ -601,14 +601,14 @@ def t_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     drift; only the candidate restriction differs."""
     # three consumers (MG pass, exact recount, total count) — without
     # materialization the full corpus scan+tokenize runs three times
-    toks = token_stream(table(spark, sf_dir, "documents")).localCheckpoint(eager=False)
+    toks = token_stream(table(spark, sf_dir, "documents")).transform(materialize)
     exact = (
         toks.join(F.broadcast(mg_candidates(toks)), "token")
         .groupBy("token")
         .agg(F.count(F.lit(1)).alias("n_occurrences"))
     )
-    exact = exact.localCheckpoint(eager=True)  # feeds result + both guards
-    result = ranked_head(exact, HH_TOPN, "rank").localCheckpoint(eager=True)
+    exact = exact.transform(materialize, eager=True)  # feeds result + both guards
+    result = ranked_head(exact, HH_TOPN, "rank").transform(materialize, eager=True)
     total = toks.count()
     if total:
         # Exactness holds under EITHER condition:
@@ -683,7 +683,7 @@ def t_unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
         # two consumers (frequency aggregate + scoring join) —
         # materialize the exploded stream once instead of re-scanning
         # and re-exploding documents
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     freq = toks.groupBy("token").agg(F.count(F.lit(1)).alias("cnt"))
     total = freq.agg(F.sum("cnt").alias("n_total"))
@@ -751,7 +751,7 @@ def t_fluency_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = t_unigram_logprob(spark, sf_dir)
     order = [F.col("avg_logprob").desc(), F.col("doc_id").asc()]
     n_part = max(2, scored.sparkSession.sparkContext.defaultParallelism // 4)
-    # localCheckpoint pins partition ids: the counts pass and the
+    # the eager materialize pins partition ids: the counts pass and the
     # ranking pass must see the SAME physical partitioning
     # __pid must be MATERIALIZED as a column on the range-partitioned
     # data before any further exchange: spark_partition_id() is
@@ -761,7 +761,7 @@ def t_fluency_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         scored.repartitionByRange(n_part, *order)
         .sortWithinPartitions(*order)
         .withColumn("__pid", F.spark_partition_id())
-        .localCheckpoint()
+        .transform(materialize, eager=True)
     )
     sizes = dict(
         ordered.groupBy("__pid").agg(F.count(F.lit(1)).alias("c")).collect()
@@ -879,12 +879,12 @@ def bigram_logprob(docs: DataFrame) -> DataFrame:
     pairs = (
         docs.select("doc_id", F.explode(pairs_col).alias("p"))
         .select("doc_id", "p.w1", "p.w2")
-        .localCheckpoint(eager=False)  # feeds the count table AND scoring
+        .transform(materialize)  # feeds the count table AND scoring
     )
     c12 = pairs.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("c12"))
     # two consumers (unigram counts + distinct-vocab size) — tokenize
     # once, like the unigram op's stream
-    toks = token_stream(docs).localCheckpoint(eager=False)
+    toks = token_stream(docs).transform(materialize)
     c1 = toks.groupBy(F.col("token").alias("w1")).agg(F.count(F.lit(1)).alias("c1"))
     vocab_n = toks.select("token").distinct().agg(F.count(F.lit(1)).alias("v"))
     logp = F.round(
@@ -1043,9 +1043,8 @@ def t_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     cells, probes, and both counts exactly (the md5 hash family is
     engine-portable), so the driver verifies the ALGORITHM, not a
     tolerance."""
-    toks = token_stream(spread(table(spark, sf_dir, "documents"))).localCheckpoint(
-        eager=False
-    )  # two consumers: cells + exact counts; spread: D hashes/token are per-row CPU
+    # two consumers: cells + exact counts; spread: D hashes/token are per-row CPU
+    toks = token_stream(spread(table(spark, sf_dir, "documents"))).transform(materialize)
     positions = F.array(
         *[
             F.struct(
@@ -1251,9 +1250,7 @@ def t_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     words_ne = F.filter(words_col(), lambda w: w != "")
     # (doc_id, dl) is 16 bytes/doc — checkpoint it so the stats
     # aggregate and the per-doc join share ONE tokenizing scan
-    dl = docs.select("doc_id", F.size(words_ne).alias("dl")).localCheckpoint(
-        eager=False
-    )
+    dl = docs.select("doc_id", F.size(words_ne).alias("dl")).transform(materialize)
     stats = dl.agg(
         F.count("dl").alias("n_docs"),
         F.sum("dl").alias("total_dl"),
@@ -1466,7 +1463,7 @@ def _bpe_train_loop(
             F.regexp_replace(F.col("word"), "(.)", "$1 "), F.lit("_")
         ).alias("repr"),
         "freq",
-    ).localCheckpoint(eager=False)
+    ).transform(materialize)
 
     # split once per row into _syms, then pair adjacent symbols — the
     # SQL-string lambda keeps codegen-cache-stable names (see dedup's
@@ -1783,7 +1780,7 @@ def t_pmi_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(vocab), "token")
         .select("doc_id", "token")
         .distinct()
-        .localCheckpoint(eager=False)  # feeds marginals AND the pair join
+        .transform(materialize)  # feeds marginals AND the pair join
     )
     n_docs = docs.select(F.count(F.lit(1)).cast("long").alias("n"))
     marg = membership.groupBy("token").agg(

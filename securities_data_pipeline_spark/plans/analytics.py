@@ -37,14 +37,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from securities_data_pipeline_spark.sources.tables import table
-
-DEC2 = "decimal(18,2)"
-
-
-def _dec2(c: str):
-    return F.col(c).cast(DEC2)
-
+from securities_data_pipeline_spark.functions.gates import guard_events_sql
+from securities_data_pipeline_spark.plans.relational import _dec2
+from securities_data_pipeline_spark.sources.tables import materialize, table
 
 # ---------------------------------------------------------------------------
 # single-pass moment statistics
@@ -97,9 +92,9 @@ def a8_corr_moments(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Single select on purpose: a chained select (materialize cov_n/
     # var_x_n, then guard) is NOT collapsed by Catalyst's CollapseProject
     # (the aliases are non-cheap and multiply-referenced), leaving an
-    # extra Project/codegen stage that a same-session A/B (tools/ab_a8.py,
-    # BASELINE.md r7 note) measured at ~1.2x per run; the identical
-    # guards in one select measure ~1.05x ≈ noise.
+    # extra Project/codegen stage that a same-session A/B (tools/ab_a8.py
+    # as of commit 3b043bb, BASELINE.md r7 note) measured at ~1.2x per
+    # run; the identical guards in one select measure ~1.05x ≈ noise.
     defined_x = var_x_n > 0
     defined_y = var_y_n > 0
     return m.select(
@@ -299,12 +294,6 @@ FROM embeddings
 """
 
 
-def _guard_events(sql: str) -> str:
-    from securities_data_pipeline_spark.functions.gates import guard_events_sql
-
-    return guard_events_sql(sql)
-
-
 ANALYTICS_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "a8_corr_moments": a8_corr_moments,
     "w7_interval_range": w7_interval_range,
@@ -314,9 +303,9 @@ ANALYTICS_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 
 ANALYTICS_ORACLES: dict[str, str] = {
     "a8_corr_moments": A8_SQL,
-    "w7_interval_range": _guard_events(W7_SQL),
+    "w7_interval_range": guard_events_sql(W7_SQL),
     "f_array_stats": F_ARRAY_STATS_SQL,
-    "w8_pattern_match": _guard_events(W8_PATTERN_SQL),
+    "w8_pattern_match": guard_events_sql(W8_PATTERN_SQL),
 }
 
 
@@ -395,7 +384,7 @@ FROM sets_ GROUP BY k ORDER BY k
 """
 
 ANALYTICS_QUERIES["a_k_anonymity"] = a_k_anonymity
-ANALYTICS_ORACLES["a_k_anonymity"] = _guard_events(A_K_ANONYMITY_SQL)
+ANALYTICS_ORACLES["a_k_anonymity"] = guard_events_sql(A_K_ANONYMITY_SQL)
 
 
 def a_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -480,7 +469,7 @@ FROM sets_ GROUP BY l ORDER BY l
 """
 
 ANALYTICS_QUERIES["a_l_diversity"] = a_l_diversity
-ANALYTICS_ORACLES["a_l_diversity"] = _guard_events(A_L_DIVERSITY_SQL)
+ANALYTICS_ORACLES["a_l_diversity"] = guard_events_sql(A_L_DIVERSITY_SQL)
 
 
 def w9_user_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -553,7 +542,7 @@ FROM picked WHERE rn = 1 ORDER BY user_id
 """
 
 ANALYTICS_QUERIES["w9_user_streaks"] = w9_user_streaks
-ANALYTICS_ORACLES["w9_user_streaks"] = _guard_events(W9_STREAKS_SQL)
+ANALYTICS_ORACLES["w9_user_streaks"] = guard_events_sql(W9_STREAKS_SQL)
 
 
 def a_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -579,7 +568,7 @@ def a_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: the k-anonymity signature aggregation (two hash aggs over
     (user, type) then user rows), then one (signature, sensitive)
-    count — ``localCheckpoint``'d because it feeds the global
+    count — ``materialize``'d because it feeds the global
     distribution, the per-class k, and the distance join — and the
     class×value grid built by cross-joining the per-class k table
     with the GLOBAL value distribution (O(event-type-cardinality)
@@ -622,7 +611,7 @@ def t_closeness_histogram(sig: DataFrame) -> DataFrame:
     cls_val = (
         sig.groupBy("signature", "sensitive")
         .agg(F.count(F.lit(1)).cast("long").alias("cnt"))
-        .localCheckpoint(eager=False)  # feeds glob, cls, and the grid
+        .transform(materialize)  # feeds glob, cls, and the grid
     )
     glob = cls_val.groupBy("sensitive").agg(
         F.sum("cnt").cast("long").alias("g")
@@ -705,7 +694,7 @@ FROM tc GROUP BY 1 ORDER BY 1
 """
 
 ANALYTICS_QUERIES["a_t_closeness"] = a_t_closeness
-ANALYTICS_ORACLES["a_t_closeness"] = _guard_events(A_T_CLOSENESS_SQL)
+ANALYTICS_ORACLES["a_t_closeness"] = guard_events_sql(A_T_CLOSENESS_SQL)
 
 
 def a_k_map(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -931,7 +920,7 @@ FROM tot t LEFT JOIN med m USING (cohort) ORDER BY t.cohort
 """
 
 ANALYTICS_QUERIES["w10_conversion_cohorts"] = w10_conversion_cohorts
-ANALYTICS_ORACLES["w10_conversion_cohorts"] = _guard_events(W10_CONVERSION_SQL)
+ANALYTICS_ORACLES["w10_conversion_cohorts"] = guard_events_sql(W10_CONVERSION_SQL)
 
 
 def a_markov_transition(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -995,7 +984,7 @@ FROM counts ORDER BY from_type, to_type
 """
 
 ANALYTICS_QUERIES["a_markov_transition"] = a_markov_transition
-ANALYTICS_ORACLES["a_markov_transition"] = _guard_events(A_MARKOV_SQL)
+ANALYTICS_ORACLES["a_markov_transition"] = guard_events_sql(A_MARKOV_SQL)
 
 
 #: session gap for the concurrency sweep — the w4 sessionization value
@@ -1117,4 +1106,4 @@ FROM swept GROUP BY day ORDER BY day
 """
 
 ANALYTICS_QUERIES["w11_peak_concurrency"] = w11_peak_concurrency
-ANALYTICS_ORACLES["w11_peak_concurrency"] = _guard_events(W11_CONCURRENCY_SQL)
+ANALYTICS_ORACLES["w11_peak_concurrency"] = guard_events_sql(W11_CONCURRENCY_SQL)

@@ -4,9 +4,8 @@ keeps merge-heavy tables scannable.
 Every incremental merge / streaming ``foreachBatch`` append leaves a
 trail of small parquet files; at 100 TB the scan cost of a table is
 dominated by file-open overhead and lost row-group locality long
-before raw bytes matter (the classic small-files problem —
-``load.compact_table`` is the blunt full-rewrite fix; this module is
-the incremental one that only touches what needs touching):
+before raw bytes matter (the classic small-files problem). This
+module is the incremental fix that only touches what needs touching:
 
 1. **Plan** (`plan_compaction`) — list the table's data files via the
    Hadoop FS API (driver-side: one listing, O(#files) names — the

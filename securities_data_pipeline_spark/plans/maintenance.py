@@ -31,6 +31,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import guard_events_sql
 from securities_data_pipeline_spark.sources.tables import table
 
 Z_BITS = 8  # low bits interleaved per key → 2*Z_BITS-bit z-value
@@ -289,12 +290,6 @@ FROM counts ORDER BY part_month
 """
 
 
-def _guard_events(sql: str) -> str:
-    from securities_data_pipeline_spark.functions.gates import guard_events_sql
-
-    return guard_events_sql(sql)
-
-
 MAINTENANCE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "m_zorder_cluster": m_zorder_cluster,
     "m_incremental_rollup": m_incremental_rollup,
@@ -306,8 +301,8 @@ MAINTENANCE_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 MAINTENANCE_ORACLES: dict[str, str] = {
     "m_zorder_cluster": M_ZORDER_SQL,
     "m_incremental_rollup": M_INCREMENTAL_SQL,
-    "m_scd2_intervals": _guard_events(M_SCD2_SQL),
-    "m_cdc_apply": _guard_events(M_CDC_APPLY_SQL),
+    "m_scd2_intervals": guard_events_sql(M_SCD2_SQL),
+    "m_cdc_apply": guard_events_sql(M_CDC_APPLY_SQL),
     "m_partition_skew_report": M_PARTITION_SKEW_SQL,
 }
 

@@ -32,6 +32,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import guard_events_sql
 from securities_data_pipeline_spark.sources.tables import table
 
 # ---------------------------------------------------------------------------
@@ -624,12 +625,6 @@ RELATIONAL_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "p9_bernoulli_sample": p9_bernoulli_sample,
 }
 
-def _guard_events(sql: str) -> str:
-    from securities_data_pipeline_spark.functions.gates import guard_events_sql
-
-    return guard_events_sql(sql)
-
-
 RELATIONAL_ORACLES: dict[str, str] = {
     "q1_pricing_summary": Q1_SQL,
     "q3_top_revenue_orders": Q3_SQL,
@@ -642,7 +637,7 @@ RELATIONAL_ORACLES: dict[str, str] = {
     "j1_anti_join": J1_SQL,
     "j2_semi_join": J2_SQL,
     "u2_union_dim": U2_SQL,
-    "w1_ffill": _guard_events(W1_SQL),
+    "w1_ffill": guard_events_sql(W1_SQL),
     "w2_moving_avg": W2_SQL,
     "w3_topn_per_group": W3_SQL,
     "f_json_extract": FJSON_SQL,

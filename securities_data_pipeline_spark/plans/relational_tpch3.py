@@ -32,17 +32,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from securities_data_pipeline_spark.plans.relational import DEC2, DEC4, _as_double, _dec2, _dec4
-from securities_data_pipeline_spark.sources.tables import table
-
-
-def _revenue():
-    return _dec2("l_extendedprice") * (F.lit(1).cast(DEC4) - _dec4("l_discount"))
-
-
-_REVENUE_SQL = (
-    "CAST(l_extendedprice AS DECIMAL(18,2)) * (1 - CAST(l_discount AS DECIMAL(18,4)))"
-)
+from securities_data_pipeline_spark.plans.relational import _as_double, _dec2
+from securities_data_pipeline_spark.plans.relational_tpch2 import _REVENUE_SQL, _revenue
+from securities_data_pipeline_spark.sources.tables import materialize, table
 
 _LATE = "INTERVAL 60 DAYS"  # Spark spelling
 _LATE_SQL = "INTERVAL 60 DAY"  # DuckDB spelling
@@ -106,7 +98,7 @@ def q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # feeds both the argmax scalar and the equality join —
         # materialize the (tiny) per-supplier view once instead of
         # scanning lineitem twice
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     top = rev.agg(F.max("total_revenue").alias("max_revenue"))
     sup = table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
@@ -347,7 +339,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(_revenue()).cast("decimal(28,6)").alias("val"))
         # feeds both the HAVING filter and the global total —
         # materialize once or the fact table is scanned twice
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     total = per_part.agg(F.sum("val").alias("total"))
     return (

@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from securities_data_pipeline_spark.functions.gates import guard_ticks_sql, ticks
 from securities_data_pipeline_spark.plans.models import stg_stock_prices
+from securities_data_pipeline_spark.sources.tables import materialize
 
 
 def _derived_bars(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -124,7 +125,7 @@ def sec_calendar_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # feeds both the range aggregate and the spine join —
         # materialize the (symbol-day sized) bars once instead of
         # scanning events twice
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     rng = bars.groupBy("symbol").agg(
         F.min("date_stamp").alias("d0"), F.max("date_stamp").alias("d1")
@@ -440,7 +441,7 @@ def sec_rolling_beta(spark: SparkSession, sf_dir: str) -> DataFrame:
         # three consumers (index aggregate → centering scalar, and the
         # window join) — materialize the symbol-day bars once instead
         # of re-scanning events per consumer
-        .localCheckpoint(eager=False)
+        .transform(materialize)
     )
     market = bars.groupBy("date_stamp").agg(F.sum("yc").alias("mkt_c"))
     center = market.agg(

@@ -31,14 +31,9 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import guard_events_sql
+from securities_data_pipeline_spark.plans.relational import _dec2
 from securities_data_pipeline_spark.sources.tables import table
-
-DEC2 = "decimal(18,2)"
-
-
-def _dec2(c: str):
-    return F.col(c).cast(DEC2)
-
 
 def sq_exists_discount(spark: SparkSession, sf_dir: str) -> DataFrame:
     """TPC-H Q4 shape: orders per priority having at least one deeply
@@ -198,12 +193,6 @@ WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
 """
 
 
-def _guard_events(sql: str) -> str:
-    from securities_data_pipeline_spark.functions.gates import guard_events_sql
-
-    return guard_events_sql(sql)
-
-
 SUBQUERY_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "sq_exists_discount": sq_exists_discount,
     "sq_small_qty_revenue": sq_small_qty_revenue,
@@ -217,5 +206,5 @@ SUBQUERY_ORACLES: dict[str, str] = {
     "sq_small_qty_revenue": SQ_SMALL_QTY_SQL,
     "sq_large_orders": SQ_LARGE_ORDERS_SQL,
     "sq_rich_inactive_customers": SQ_RICH_INACTIVE_SQL,
-    "w5_lead_lag": _guard_events(W5_SQL),
+    "w5_lead_lag": guard_events_sql(W5_SQL),
 }

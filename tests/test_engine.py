@@ -1,10 +1,15 @@
-"""Engine facade + compaction maintenance job."""
+"""Engine facade, compaction maintenance job, and the one pin policy."""
 
+import ast
 import datetime as dt
 import glob
+import pathlib
 
+import securities_data_pipeline_spark
 from securities_data_pipeline_spark.engine import Engine
-from securities_data_pipeline_spark.load import compact_table, load_prices
+from securities_data_pipeline_spark.plans.compaction import compact_small_files
+
+TARGET = 512 * 1024  # 512 KiB: both appended files are far below it
 
 D = dt.date
 
@@ -17,7 +22,7 @@ def test_engine_facade(spark):
     assert df.count() == 5
 
 
-def test_compact_table_merges_small_files(spark, tmp_path):
+def test_compact_small_files_merges_date_partition(spark, tmp_path):
     path = str(tmp_path / "prices")
     S = "date_stamp date, symbol string, close double"
     # two append writes → at least two files in the same partition
@@ -29,8 +34,28 @@ def test_compact_table_merges_small_files(spark, tmp_path):
     before = spark.read.parquet(path).orderBy("symbol").collect()
     n_files_before = len(glob.glob(path + "/date_stamp=*/**/*.parquet", recursive=True))
     assert n_files_before >= 2
-    compact_table(spark, path, partition_by=("date_stamp",))
+    compact_small_files(spark, path, TARGET)
     n_files_after = len(glob.glob(path + "/date_stamp=*/**/*.parquet", recursive=True))
     after = spark.read.parquet(path).orderBy("symbol").collect()
     assert n_files_after == 1
     assert [tuple(r) for r in before] == [tuple(r) for r in after]  # content unchanged
+
+
+def test_materialize_is_the_only_checkpoint_call():
+    """``sources/tables.py::materialize`` owns the pin policy: a direct
+    ``localCheckpoint``/``checkpoint`` call anywhere else in the package
+    would escape ``SPARK_GRAFT_MATERIALIZE=reliable``."""
+    pkg = pathlib.Path(securities_data_pipeline_spark.__file__).parent
+    owner = pkg / "sources" / "tables.py"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == owner:
+            continue
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in ("localCheckpoint", "checkpoint")
+            ):
+                sites.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not sites, f"direct checkpoint calls outside materialize: {sites}"

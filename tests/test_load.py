@@ -2,6 +2,9 @@
 (reference: py_pipeline/load.py + tests/load_test.py:92-157,207-265)."""
 
 import datetime as dt
+import re
+
+import pytest
 
 from securities_data_pipeline_spark.load import dedupe_on_keys, load_fx_symbols, load_prices
 
@@ -685,6 +688,54 @@ def test_failed_overwrite_preserves_recovery_stage(spark, tmp_path, monkeypatch)
     staged = {(r.k, r.v) for r in spark.read.parquet(_stage_path(path)).collect()}
     assert staged == {(1, "a"), (2, "B"), (3, "c")}
 
+
+
+@pytest.mark.parametrize("partition_by", [("date_stamp",), ()], ids=["partitioned", "unpartitioned"])
+def test_failed_target_write_keeps_stage_with_merged_rows(spark, tmp_path, monkeypatch, partition_by):
+    """The one staged overwrite in merge_upsert serves both the
+    partition-pruned merge and the full rewrite: when the target write
+    itself raises, the error names the stage and the stage holds every
+    merged row (for the pruned merge: every row of the touched
+    partitions)."""
+    from pyspark.sql import DataFrameWriter
+
+    from securities_data_pipeline_spark.load import _stage_path, merge_upsert
+
+    path = str(tmp_path / "prices")
+    keys = ["date_stamp", "symbol"]
+    d1, d2 = D(2025, 1, 1), D(2025, 1, 2)
+    merge_upsert(
+        spark,
+        _prices(spark, [(d, s, 1.0, 1.0, 1.0, 1.0, 10) for d in (d1, d2) for s in ("AAA", "BBB")]),
+        path,
+        keys,
+        partition_by=partition_by,
+    )
+
+    real_parquet = DataFrameWriter.parquet
+
+    def parquet(self, target, *args, **kwargs):
+        if target == path:
+            raise OSError("disk full (simulated)")
+        return real_parquet(self, target, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    incoming = _prices(
+        spark,
+        [(d1, "BBB", 2.0, 2.0, 2.0, 2.0, 20), (d1, "CCC", 3.0, 3.0, 3.0, 3.0, 30)],
+    )
+    with pytest.raises(RuntimeError, match=re.escape(_stage_path(path))):
+        merge_upsert(spark, incoming, path, keys, partition_by=partition_by)
+    monkeypatch.undo()
+
+    want = {(d1, "AAA", 1.0), (d1, "BBB", 2.0), (d1, "CCC", 3.0)}
+    if not partition_by:  # full rewrite: untouched dates are merged rows too
+        want |= {(d2, "AAA", 1.0), (d2, "BBB", 1.0)}
+    staged = {
+        (r.date_stamp, r.symbol, r.close)
+        for r in spark.read.parquet(_stage_path(path)).collect()
+    }
+    assert staged == want
 
 def test_jdbc_sink_validates_before_staging_and_reuses_connection(spark):
     """A bad mode must fail BEFORE the distributed stage write (no
