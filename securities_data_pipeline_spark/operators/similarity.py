@@ -31,7 +31,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from securities_data_pipeline_spark.sources.tables import materialize, spread, table
+from securities_data_pipeline_spark.sources.tables import materialize, overlap, spread, table
 
 N_QUERIES = 5  # vec_id < 5 are the demo query vectors
 TOP_K = 10
@@ -2324,16 +2324,13 @@ def sim_ivf_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Values are untouched: the same exact frame materializes either
     # way, just eagerly and in parallel with training instead of
     # lazily inside the final job.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        exact_fut = pool.submit(
-            lambda: _bruteforce_topk_from(emb)
-            .select("query_id", "vec_id")
-            .transform(materialize, eager=True)  # feeds both rosters' hit joins
-        )
-        trained = _kmeans_train_lists(emb)
-        exact = exact_fut.result()
+    exact, trained = overlap(
+        spark,
+        lambda: _bruteforce_topk_from(emb)
+        .select("query_id", "vec_id")
+        .transform(materialize, eager=True),  # feeds both rosters' hit joins
+        lambda: _kmeans_train_lists(emb),
+    )
     return (
         _ivf_roster_report(emb, static, exact, "static")
         .unionByName(_ivf_roster_report(emb, trained, exact, "trained"))
@@ -2854,8 +2851,6 @@ def sim_pq_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # them as a CONCURRENT job from a driver thread so they back-fill
     # those gaps (guide §2.6; optimization round 12). Same values,
     # eagerly and in parallel instead of lazily inside the final job.
-    from concurrent.futures import ThreadPoolExecutor
-
     def _ground_truth():
         qv = _query_nvecs(emb)
         ex = (
@@ -2865,12 +2860,13 @@ def sim_pq_retrain_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return qv, ex
 
-    with ThreadPoolExecutor(max_workers=1) as pool:
-        gt_fut = pool.submit(_ground_truth)
-        trained_rows = pq_train_codebook(
-            spark, sf_dir, emb, donors=donor_full
-        ).select("m", "c", "cw").collect()
-        qvecs, exact = gt_fut.result()
+    (qvecs, exact), trained_rows = overlap(
+        spark,
+        _ground_truth,
+        lambda: pq_train_codebook(spark, sf_dir, emb, donors=donor_full)
+        .select("m", "c", "cw")
+        .collect(),
+    )
     trained = {
         (int(r.m), int(r.c)): [float(x) for x in r.cw] for r in trained_rows
     }

@@ -13,7 +13,11 @@ arguments, py_pipeline/extract.py:88-95).
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
+from typing import Any
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -150,6 +154,34 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+OVERLAP_THREAD_PREFIX = "overlap"
+
+
+def overlap(spark: SparkSession, *thunks: Callable[[], Any]) -> list:
+    """THE choke point for driver-thread overlap: run independent
+    thunks concurrently, each on its own driver thread, so their
+    Catalyst planning, codegen and jobs interleave instead of leaving
+    the cores idle between one caller's small driver-bound jobs. No
+    other module in the package constructs a thread
+    (``tests/test_engine.py`` enforces that).
+
+    Each thunk runs under ``pyspark.inheritable_thread_target``: the
+    caller's job group, job description and other local properties
+    follow it onto its pinned JVM thread, so its jobs are attributed
+    (and cancellable) exactly like the caller's own.
+
+    Waits for EVERY thunk before returning, even when one fails — a
+    sibling is never abandoned mid-write (a cancelled overwrite can
+    damage a table) — then returns the results in argument order, or
+    raises the first failure in argument order."""
+    with ThreadPoolExecutor(
+        max_workers=len(thunks), thread_name_prefix=OVERLAP_THREAD_PREFIX
+    ) as pool:
+        futures = [pool.submit(inheritable_thread_target(spark)(t)) for t in thunks]
+    # leaving the block joined every thread: all thunks have finished
+    return [f.result() for f in futures]
 
 
 def _uses_checkpoint_dir(sc, ckpt_dir: str) -> bool:

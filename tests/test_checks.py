@@ -2,6 +2,8 @@
 declarative tests (reference: py_pipeline/validate.py, dbt
 properties.yml)."""
 
+import datetime as dt
+
 import pytest
 from pyspark.sql import types as T
 
@@ -102,7 +104,7 @@ def test_failing_checks_carry_bounded_offending_rows(spark):
 def test_run_checks_raises_with_all_failures(spark):
     df = spark.createDataFrame([("A",), ("A",)], "symbol string")
     with pytest.raises(SchemaErrors, match="unique"):
-        run_checks([check_unique(df, "symbol")], raise_on_failure=True)
+        run_checks({"t": df}, [("t", "unique", "symbol")], raise_on_failure=True)
 
 
 def test_observed_counts_piggyback_on_action(spark):
@@ -122,3 +124,77 @@ def test_observed_counts_piggyback_on_action(spark):
     )
     assert observed.count() == 3  # the action that drives the metrics
     assert obs.get == {"n_rows": 3, "null_symbols": 1}
+
+
+STAR_SUITE = [
+    ("dim", "unique", "symbol"),
+    ("dim", "not_null", "symbol"),
+    ("dim", "accepted_values", "asset_type", ["FX", "Stock"]),
+    ("fct", "not_null", "symbol"),
+    ("fct", "not_null", "date_stamp"),
+    ("fct", "relationships", "symbol", "dim", "symbol"),
+    ("dim", "relationships", "symbol", "fct", "symbol"),
+]
+
+
+def _standalone(dim, fct):
+    return [
+        check_unique(dim, "symbol"),
+        check_not_null(dim, "symbol"),
+        check_accepted_values(dim, "asset_type", ["FX", "Stock"]),
+        check_not_null(fct, "symbol"),
+        check_not_null(fct, "date_stamp"),
+        check_relationships(fct, "symbol", dim, "symbol"),
+        check_relationships(dim, "symbol", fct, "symbol"),
+    ]
+
+
+def _star(spark, dim_rows, fct_rows):
+    dim = spark.createDataFrame(dim_rows, "symbol string, asset_type string")
+    fct = spark.createDataFrame(fct_rows, "symbol string, date_stamp date, close double")
+    return dim, fct
+
+
+def test_suite_matches_standalone_checks_when_all_fail(spark):
+    """The one keyed pass gives every check the same result as its own
+    standalone pass: a duplicated key AND a duplicated null key (the
+    null group counts for ``unique``), null symbols on both sides, a bad
+    asset_type, a null date_stamp, and orphans in both directions
+    (null keys are never orphans)."""
+    d = dt.date(2025, 1, 2)
+    dim, fct = _star(
+        spark,
+        [("A", "FX"), ("A", "Stock"), (None, "FX"), (None, "Stock"), ("B", "Bond")],
+        [("A", d, 1.0), ("A", d, 2.0), (None, d, 3.0), ("C", None, 4.0), ("C", d, 5.0)],
+    )
+    suite = run_checks({"dim": dim, "fct": fct}, STAR_SUITE)
+    assert suite == _standalone(dim, fct)
+    assert [c.violations for c in suite] == [2, 2, 1, 1, 1, 2, 1]
+    assert not any(c.passed for c in suite)
+    assert all(c.sample for c in suite)
+    with pytest.raises(SchemaErrors) as ei:
+        run_checks({"dim": dim, "fct": fct}, STAR_SUITE, raise_on_failure=True)
+    assert len(ei.value.errors) == 7
+
+
+def test_suite_matches_standalone_checks_when_all_pass(spark):
+    d = dt.date(2025, 1, 2)
+    dim, fct = _star(spark, [("A", "FX"), ("B", "Stock")], [("A", d, 1.0), ("B", d, 2.0), ("B", d, 3.0)])
+    suite = run_checks({"dim": dim, "fct": fct}, STAR_SUITE, raise_on_failure=True)
+    assert suite == _standalone(dim, fct)
+    assert all(c.passed and c.violations == 0 and c.sample == [] for c in suite)
+    assert [c.name for c in suite] == [
+        "unique(symbol)",
+        "not_null(symbol)",
+        "accepted_values(asset_type)",
+        "not_null(symbol)",
+        "not_null(date_stamp)",
+        "relationships(symbol->symbol)",
+        "relationships(symbol->symbol)",
+    ]
+
+
+def test_suite_rejects_two_keys_for_one_model(spark):
+    df = spark.createDataFrame([("A", "B")], "a string, b string")
+    with pytest.raises(ValueError, match="keys t by both"):
+        run_checks({"t": df}, [("t", "unique", "a"), ("t", "unique", "b")])

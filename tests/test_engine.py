@@ -1,13 +1,18 @@
-"""Engine facade, compaction maintenance job, and the one pin policy."""
+"""Engine facade, compaction maintenance job, the one pin policy and the
+one driver-thread overlap helper."""
 
 import ast
 import datetime as dt
 import glob
 import pathlib
+import threading
+
+import pytest
 
 import securities_data_pipeline_spark
 from securities_data_pipeline_spark.engine import Engine
 from securities_data_pipeline_spark.plans.compaction import compact_small_files
+from securities_data_pipeline_spark.sources.tables import OVERLAP_THREAD_PREFIX, overlap
 
 TARGET = 512 * 1024  # 512 KiB: both appended files are far below it
 
@@ -59,3 +64,72 @@ def test_materialize_is_the_only_checkpoint_call():
             ):
                 sites.append(f"{path.relative_to(pkg)}:{node.lineno}")
     assert not sites, f"direct checkpoint calls outside materialize: {sites}"
+
+
+THREAD_CONSTRUCTORS = ("ThreadPoolExecutor", "Thread", "InheritableThread")
+
+
+def test_overlap_is_the_only_thread_construction():
+    """``sources/tables.py::overlap`` owns driver-thread overlap: a
+    thread or pool constructed anywhere else in the package would run
+    its jobs without the caller's job group and local properties."""
+    pkg = pathlib.Path(securities_data_pipeline_spark.__file__).parent
+    owner = pkg / "sources" / "tables.py"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if path == owner and isinstance(fn, ast.FunctionDef) and fn.name == "overlap"
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if not isinstance(node, ast.Call) or id(node) in allowed:
+                continue
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name in THREAD_CONSTRUCTORS:
+                sites.append(f"{path.relative_to(pkg)}:{node.lineno}")
+    assert not sites, f"threads constructed outside overlap: {sites}"
+
+
+def _overlap_threads() -> list[threading.Thread]:
+    return [t for t in threading.enumerate() if t.name.startswith(OVERLAP_THREAD_PREFIX)]
+
+
+def test_overlap_jobs_inherit_the_callers_job_group(spark):
+    sc = spark.sparkContext
+    sc.setJobGroup("g", "overlap")
+    try:
+        counts = overlap(spark, lambda: spark.range(10).count(), lambda: spark.range(5).count())
+        ids = sc.statusTracker().getJobIdsForGroup("g")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts == [10, 5]
+    assert len(ids) >= 2  # both thunks' jobs carry the group
+
+
+def test_overlap_awaits_every_thunk_then_raises_the_first_failure(spark):
+    """A failing thunk neither cancels its siblings nor outlives the
+    call; the failure raised is the first in argument order."""
+    finished = []
+    second_failed = threading.Event()
+
+    def slow():
+        spark.range(100).count()
+        finished.append("slow")
+
+    def first():
+        second_failed.wait(timeout=60)  # fails only after the later argument has
+        raise RuntimeError("first")
+
+    def second():
+        second_failed.set()
+        raise RuntimeError("second")
+
+    with pytest.raises(RuntimeError, match="first"):
+        overlap(spark, slow, first, second)
+    assert finished == ["slow"]
+    assert not _overlap_threads()

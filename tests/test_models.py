@@ -2,11 +2,7 @@
 
 import datetime as dt
 
-from securities_data_pipeline_spark.checks import (
-    check_relationships,
-    check_unique,
-    run_checks,
-)
+from securities_data_pipeline_spark.checks import run_checks
 from securities_data_pipeline_spark.plans.models import build_star_schema, register_views
 
 D = dt.date
@@ -62,10 +58,11 @@ def test_declarative_checks_pass_on_star_schema(spark):
     """The dbt test suite (properties.yml:96-170) over model outputs."""
     models = build_star_schema(*_fixtures(spark))
     results = run_checks(
+        models,
         [
-            check_unique(models["dim_symbols"], "symbol"),
-            check_relationships(models["fct_prices"], "symbol", models["dim_symbols"], "symbol"),
-            check_relationships(models["dim_symbols"], "symbol", models["fct_prices"], "symbol"),
+            ("dim_symbols", "unique", "symbol"),
+            ("fct_prices", "relationships", "symbol", "dim_symbols", "symbol"),
+            ("dim_symbols", "relationships", "symbol", "fct_prices", "symbol"),
         ],
         raise_on_failure=True,
     )

@@ -2,8 +2,15 @@
 sources → lake → warehouse models → checks, incl. two-run increment)."""
 
 import datetime as dt
+import os
+import threading
 
+import pytest
+
+from securities_data_pipeline_spark import pipeline
+from securities_data_pipeline_spark.checks import SchemaErrors
 from securities_data_pipeline_spark.pipeline import etl_flow, resolve_dates
+from securities_data_pipeline_spark.sources.tables import OVERLAP_THREAD_PREFIX
 
 D = dt.date
 
@@ -78,3 +85,53 @@ def test_etl_flow_incremental_second_run(spark, tmp_path):
     gap = fct[("2025-01-02", "EURUSD")]
     assert gap.close == 1.15346  # ffilled from day-1 rounded close
     assert gap.volume == 0
+
+
+def test_etl_flow_check_suite_is_one_keyed_pass(spark, tmp_path, monkeypatch):
+    """The flow's 7 declared checks run as one keyed pass: a few jobs,
+    not one or more per check (21 when each check ran its own count).
+    A per-check action added back to the suite trips this."""
+    sc = spark.sparkContext
+    run_checks = pipeline.run_checks
+
+    def grouped(*args, **kwargs):
+        sc.setJobGroup("check-suite", "etl_flow check suite")
+        try:
+            return run_checks(*args, **kwargs)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(pipeline, "run_checks", grouped)
+    res = etl_flow(
+        spark,
+        str(tmp_path / "lake"),
+        raw_fx_prices_wide=_wide_fx(spark),
+        raw_stock_prices_wide=_wide_stock(spark),
+        raw_stock_symbols=_raw_symbols(spark),
+        date_stamp=D(2025, 1, 1),
+    )
+    assert len(res.checks) == 7 and all(c.passed for c in res.checks)
+    jobs = sc.statusTracker().getJobIdsForGroup("check-suite")
+    assert 0 < len(jobs) <= 7, jobs
+
+
+def test_etl_flow_sink_failure_lets_siblings_land(spark, tmp_path):
+    """Partial failure with concurrent sinks: a stock-symbols scrape
+    without its ``Security`` column fails validation, yet the sibling
+    sinks run to completion (the FX price table lands), the schema error
+    re-raises at the end, and no sink thread outlives the flow."""
+    lake = str(tmp_path / "lake")
+    with pytest.raises(SchemaErrors, match="Security"):
+        etl_flow(
+            spark,
+            lake,
+            raw_fx_prices_wide=_wide_fx(spark),
+            raw_stock_prices_wide=_wide_stock(spark),
+            raw_stock_symbols=_raw_symbols(spark).drop("Security"),
+            date_stamp=D(2025, 1, 1),
+        )
+    fx = spark.read.parquet(os.path.join(lake, "price_history", "fx")).collect()
+    assert [r.symbol for r in fx] == ["EURUSD"]
+    assert not os.path.exists(os.path.join(lake, "symbols", "sp_stocks"))
+    assert not [t for t in threading.enumerate() if t.name.startswith(OVERLAP_THREAD_PREFIX)]
