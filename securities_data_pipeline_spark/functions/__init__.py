@@ -3,7 +3,6 @@ from securities_data_pipeline_spark.functions.cleaning import (
     transform_fx_symbols,
     transform_prices,
     transform_stock_symbols,
-    unpivot_wide_prices,
 )
 
 __all__ = [
@@ -12,5 +11,4 @@ __all__ = [
     "transform_fx_symbols",
     "transform_prices",
     "transform_stock_symbols",
-    "unpivot_wide_prices",
 ]

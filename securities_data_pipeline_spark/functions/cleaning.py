@@ -4,10 +4,11 @@ Re-expresses ``py_pipeline/transform.py`` on Spark:
 
 - ``transform_stock_symbols`` ← transform_stocks_symbol_df (:29-63)
 - ``transform_fx_symbols``    ← transform_fx_symbol_df (:66-69)
-- ``transform_prices``        ← transform_price_df (:72-90)
-- ``unpivot_wide_prices``     ← the pandas ``stack("Ticker",
-  future_stack=True)`` wide→long reshape (:80) as a ``stack()``
-  expression — a narrow, shuffle-free transform.
+- ``transform_prices``        ← transform_price_df (:72-90), from the
+  ``stack("Ticker", future_stack=True)`` (:80) on: it takes the long
+  bars every price source already melted with
+  ``sources.adapters.wide_bars_to_long`` (the wide CSV source
+  included), so no wide frame reaches this module.
 
 Semantics pinned against the reference:
 
@@ -17,11 +18,13 @@ Semantics pinned against the reference:
   substring edit: CHF→USDCHF, CAD→USDCAD, JPY→USDJPY, applied *after*
   stripping the "=X" suffix.
 - ``future_stack=True`` keeps rows whose OHLCV are all null (no
-  dropna) — so does ``stack()`` here.
+  dropna) — so do the melt and this transform.
 - All-null wide columns (failed downloads, stray "Adj Close" ticker
   columns; transform.py:77-79) are pruned on the long form by a lazy
   per-symbol window: a ticker keeps all its rows iff any OHLCV value
   is non-null. "Adj Close" is never stacked.
+- Volume arrives as a double (vendors and CSVs write ``53228400.0``
+  once a ticker has a missing bar) and is cast to LONG here.
 """
 
 from __future__ import annotations
@@ -33,11 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from securities_data_pipeline_spark.checks import validate_schema
-from securities_data_pipeline_spark.schemas import (
-    RAW_FX_SYMBOLS,
-    RAW_STOCK_SYMBOLS,
-    WIDE_PRICE_FIELDS,
-)
+from securities_data_pipeline_spark.schemas import RAW_FX_SYMBOLS, RAW_STOCK_SYMBOLS
 
 _FX_RECODE = {"CHF": "USDCHF", "CAD": "USDCAD", "JPY": "USDJPY"}
 
@@ -71,64 +70,26 @@ def transform_fx_symbols(df: DataFrame) -> DataFrame:
     return df.toDF(*[c.lower() for c in df.columns])
 
 
-def unpivot_wide_prices(df: DataFrame) -> DataFrame:
-    """Wide ``(field, ticker)`` matrix → long OHLCV rows.
+def transform_prices(bars: DataFrame, asset_category: str) -> DataFrame:
+    """Long price bars (``adapters.BARS_SCHEMA``, what every price
+    source melts to) → validated rows (transform.py:80-90): prune
+    all-null tickers → timestamp→date → Volume→LONG → FX recode.
 
-    Input: ``date timestamp`` + ``{Field}_{TICKER}`` columns (the
-    flattened yfinance 2-level index — py_pipeline/validate.py:51-72).
-    Output: ``date, symbol, open, high, low, close, volume``.
-
-    Implemented as one ``stack(n, ...)`` generator expression: narrow
-    (no shuffle), null rows retained (future_stack parity). Missing
-    fields for a ticker become typed NULL literals.
-    """
-    tickers = sorted(
-        {c.split("_", 1)[1] for c in df.columns if "_" in c and c.split("_", 1)[0] in WIDE_PRICE_FIELDS}
-    )
-    if not tickers:
-        raise ValueError("no {Field}_{TICKER} columns found in wide price frame")
-    have = set(df.columns)
-    parts: list[str] = []
-    for t in tickers:
-        row = [f"'{t}'"]
-        for field in WIDE_PRICE_FIELDS:
-            col, typ = f"{field}_{t}", ("BIGINT" if field == "Volume" else "DOUBLE")
-            row.append(f"CAST(`{col}` AS {typ})" if col in have else f"CAST(NULL AS {typ})")
-        parts.append(", ".join(row))
-    stack_expr = (
-        f"stack({len(tickers)}, {', '.join(parts)}) AS (symbol, open, high, low, close, volume)"
-    )
-    return df.select("date", F.expr(stack_expr))
-
-
-def transform_prices(df: DataFrame, asset_category: str) -> DataFrame:
-    """Raw wide price matrix → long validated rows (transform.py:72-90):
-    unpivot → prune all-null tickers → timestamp→date → FX recode.
-
-    Lazy: no Spark job runs here unless the frame has no
-    ``{Field}_{TICKER}`` column at all."""
-    try:
-        long_df = unpivot_wide_prices(df)
-    except ValueError:
-        if not df.isEmpty():
-            raise
-        # an empty fetch must short-circuit to an empty LONG-schema
-        # frame — returning the raw wide frame would crash downstream
-        # (load_prices partitions by date_stamp/symbol, which the wide
-        # schema lacks), turning a no-op vendor day into a pipeline
-        # abort
-        return df.sparkSession.createDataFrame(
-            [],
-            "date_stamp date, symbol string, open double, high double, "
-            "low double, close double, volume bigint",
-        )
-    # symbol partitioning also satisfies merge_upsert's (date_stamp,
-    # symbol) dedupe window, so the stock load shuffles once; the FX
-    # recode below renames symbol, so its (tiny) load shuffles twice
+    Lazy: no Spark job runs here."""
+    # the prune spans every batch of the source: a source batch holds a
+    # range of dates, so pruning inside one would drop a live ticker's
+    # all-null days. symbol partitioning also satisfies merge_upsert's
+    # (date_stamp, symbol) dedupe window, so the stock load shuffles
+    # once; the FX recode below renames symbol, so its (tiny) load
+    # shuffles twice
     fields = ("open", "high", "low", "close", "volume")
     live = F.count(F.coalesce(*fields)).over(Window.partitionBy("symbol")) > 0
-    out = long_df.select(
-        F.to_date(F.col("date")).alias("date_stamp"), "symbol", *fields, live.alias("__live")
+    out = bars.select(
+        F.to_date(F.col("date_stamp")).alias("date_stamp"),
+        "symbol",
+        *fields[:4],
+        F.col("volume").cast("long").alias("volume"),
+        live.alias("__live"),
     ).where("__live").drop("__live")
     if asset_category == "fx":
         stripped = F.replace(F.col("symbol"), F.lit("=X"), F.lit(""))

@@ -8,7 +8,7 @@ SURVEY §3.1):
    to 2000-01-01 — orchestration.py:11-29)
 2. bootstrap symbols if none given (scrape → clean → merge to lake)
 3. read symbol work list back from the lake (distinct projection)
-4. price E-T-L (extract wide → transform long → merge on PK)
+4. price E-T-L (extract wide → melt long → transform → merge on PK)
 5. star-schema models + declarative check suite (the dbt flow,
    orchestration.py:261-274)
 
@@ -106,7 +106,9 @@ def etl_flow(
 ) -> PipelineResult:
     """Full batch run: clean → merge into the lake → star schema →
     check suite. Sources are injected DataFrames (the reference's tests
-    mock theirs the same way, tests/e2e_test.py:86-90)."""
+    mock theirs the same way, tests/e2e_test.py:86-90). The
+    ``raw_*_prices_wide`` arguments carry the long bars every price
+    source melts to; perfbench passes them by these names."""
     paths = {
         "symbols_fx": os.path.join(lake_root, "symbols", "fx"),
         "symbols_sp_stocks": os.path.join(lake_root, "symbols", "sp_stocks"),

@@ -76,8 +76,7 @@ DIM_SYMBOLS = T.StructType(
 
 FCT_PRICES = TRANSFORMED_PRICES
 
-#: wide-format price matrix contract (validate.py:51-72): the flattened
-#: encoding is ``date timestamp`` + ``{Field}_{TICKER}`` columns with
-#: Field ∈ {Open, High, Low, Close, Volume} — regex-matched, since the
-#: ticker set is dynamic.
+#: wide-format price matrix contract (validate.py:51-72): the ``Price``
+#: fields of the (Price, Ticker) header that the wide→long melt stacks;
+#: any other field (``Adj Close``) is never stacked.
 WIDE_PRICE_FIELDS = ("Open", "High", "Low", "Close", "Volume")

@@ -24,6 +24,13 @@ Placement of work:
   wide→long normalization (the reference's ``df.stack("Ticker")``,
   transform.py:80-83) happens per Arrow batch on the executor, never
   on the driver.
+
+``wide_bars_to_long`` is the package's one wide→long kernel: this
+fetch, ``datasource_v2``'s live mode and ``wide_csv`` melt through it,
+so every price source hands ``transform_prices`` the same long bars.
+It does no ``dropna``: like ``future_stack=True`` it keeps a live
+ticker's all-NaN day, which ``fct_prices``' forward-fill then fills;
+``transform_prices`` prunes tickers that have no value at all.
 """
 
 from __future__ import annotations
@@ -87,7 +94,7 @@ def sp_stock_symbols_source(
 
 def wide_bars_to_long(bars, batch_symbols: Sequence[str] | None = None):
     """Normalize a yfinance-shaped wide frame (index=Date, columns
-    MultiIndex (Price field, Ticker)) to long OHLCV rows — the
+    MultiIndex (Price field, Ticker)) to long ``BARS_SCHEMA`` rows — the
     executor-side analog of the reference's
     ``df.stack("Ticker", future_stack=True)`` (transform.py:80-83).
     A single-symbol frame (flat columns) is lifted to the MultiIndex
@@ -124,9 +131,7 @@ def wide_bars_to_long(bars, batch_symbols: Sequence[str] | None = None):
     long = long[cols]
     long["date_stamp"] = pd.to_datetime(long["date_stamp"])
     long[cols[2:]] = long[cols[2:]].astype("float64")
-    # rows the vendor returned as all-NaN (symbol listed but no bar
-    # for that date) are dropped, like the reference's dropna on stack
-    return long.dropna(subset=["open", "high", "low", "close"], how="all")
+    return long
 
 
 def _default_downloader(
@@ -195,10 +200,12 @@ def price_history_source(
 
 def failed_symbols(spark: SparkSession, requested: Sequence[str], bars: DataFrame) -> DataFrame:
     """The ``YF_ERRORS`` analog (extract.py:119,134-137): symbols that
-    were requested but came back with zero bars — an anti-join against
-    the fetched result, so detection is distributed and exact."""
+    were requested but have no bar with a non-null OHLCV value — an
+    anti-join against the fetched result, so detection is distributed
+    and exact."""
     req = spark.createDataFrame([(s,) for s in requested], "symbol string")
-    return req.join(bars.select("symbol").distinct(), "symbol", "left_anti")
+    live = bars.where(F.coalesce("open", "high", "low", "close", "volume").isNotNull())
+    return req.join(live.select("symbol").distinct(), "symbol", "left_anti")
 
 
 register_source("symbols", "sp_stocks", sp_stock_symbols_source)

@@ -16,6 +16,23 @@ def rows(df, *order_cols):
     return [tuple(r) for r in df.collect()]
 
 
+def yf_frame(dates, cols):
+    """A ``yf.download``-shaped fetch: index ``Date``, columns the
+    (Price, Ticker) MultiIndex; ``cols`` maps ``(field, ticker)`` to one
+    value per date (None = missing). ``.to_csv(path)`` writes the wide
+    CSV the vendor's frames serialize to (``Price``/``Ticker``/``Date``
+    header rows, then one row per date)."""
+    import numpy as np
+    import pandas as pd
+
+    values = np.array([[np.nan if v is None else v for v in vs] for vs in cols.values()], dtype="float64")
+    return pd.DataFrame(
+        values.reshape(len(cols), len(dates)).T,
+        index=pd.DatetimeIndex(dates, name="Date"),
+        columns=pd.MultiIndex.from_tuples(list(cols), names=["Price", "Ticker"]),
+    )
+
+
 def pytest_terminal_summary(terminalreporter, exitstatus, config):
     """Keep the untested Delta-native branch VISIBLE (VERDICT r4 #8):
     every run reports whether delta-spark was importable and how many

@@ -600,15 +600,16 @@ def test_merge_preserves_null_partition_survivors(spark, tmp_path):
     assert rows == {"A": 1.0, "B": 2.0, "C": 3.0}
 
 
-def test_transform_prices_empty_input_yields_long_schema(spark):
-    """An empty vendor fetch must be a no-op with the LONG schema —
-    the raw wide frame would crash load_prices' partitionBy."""
+def test_transform_prices_empty_input_yields_long_schema(spark, tmp_path):
+    """An empty vendor fetch (header rows only) must be a no-op with the
+    LONG schema that load_prices partitions by."""
     from securities_data_pipeline_spark.functions.cleaning import transform_prices
+    from securities_data_pipeline_spark.sources.wide_csv import read_wide_price_csv
+    from tests.conftest import yf_frame
 
-    wide = spark.createDataFrame(
-        [], "date timestamp, Open_EURUSD double, Close_EURUSD double"
-    )
-    out = transform_prices(wide, "fx")
+    path = str(tmp_path / "empty_fetch.csv")
+    yf_frame([], {("Open", "EURUSD=X"): [], ("Close", "EURUSD=X"): []}).to_csv(path)
+    out = transform_prices(read_wide_price_csv(spark, path), "fx")
     assert out.columns == [
         "date_stamp", "symbol", "open", "high", "low", "close", "volume"
     ]

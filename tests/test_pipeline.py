@@ -15,23 +15,18 @@ from securities_data_pipeline_spark.sources.tables import OVERLAP_THREAD_PREFIX
 D = dt.date
 
 
-def _wide_fx(spark, with_gap_day=False):
-    rows = [(dt.datetime(2025, 1, 1), 1.1234567, 1.2, 1.0, 1.1534567, 0)]
+BARS = "date_stamp timestamp, symbol string, open double, high double, low double, close double, volume double"
+
+
+def _fx_bars(spark, with_gap_day=False):
+    rows = [(dt.datetime(2025, 1, 1), "EURUSD=X", 1.1234567, 1.2, 1.0, 1.1534567, 0.0)]
     if with_gap_day:
-        rows.append((dt.datetime(2025, 1, 2), None, None, None, None, None))
-    return spark.createDataFrame(
-        rows,
-        "date timestamp, `Open_EURUSD=X` double, `High_EURUSD=X` double, "
-        "`Low_EURUSD=X` double, `Close_EURUSD=X` double, `Volume_EURUSD=X` long",
-    )
+        rows.append((dt.datetime(2025, 1, 2), "EURUSD=X", None, None, None, None, None))
+    return spark.createDataFrame(rows, BARS)
 
 
-def _wide_stock(spark):
-    return spark.createDataFrame(
-        [(dt.datetime(2025, 1, 1), 10.004, 11.0, 9.0, 10.506, 100)],
-        "date timestamp, Open_AAA double, High_AAA double, Low_AAA double, "
-        "Close_AAA double, Volume_AAA long",
-    )
+def _stock_bars(spark):
+    return spark.createDataFrame([(dt.datetime(2025, 1, 1), "AAA", 10.004, 11.0, 9.0, 10.506, 100.0)], BARS)
 
 
 def _raw_symbols(spark):
@@ -53,8 +48,8 @@ def test_etl_flow_end_to_end(spark, tmp_path):
     res = etl_flow(
         spark,
         str(tmp_path / "lake"),
-        raw_fx_prices_wide=_wide_fx(spark),
-        raw_stock_prices_wide=_wide_stock(spark),
+        raw_fx_prices_wide=_fx_bars(spark),
+        raw_stock_prices_wide=_stock_bars(spark),
         raw_stock_symbols=_raw_symbols(spark),
         date_stamp=D(2025, 1, 1),
     )
@@ -74,12 +69,12 @@ def test_etl_flow_incremental_second_run(spark, tmp_path):
     batch merges into the same lake; gap day forward-fills in staging."""
     lake = str(tmp_path / "lake")
     common = dict(
-        raw_stock_prices_wide=_wide_stock(spark),
+        raw_stock_prices_wide=_stock_bars(spark),
         raw_stock_symbols=_raw_symbols(spark),
         date_stamp=D(2025, 1, 1),
     )
-    etl_flow(spark, lake, raw_fx_prices_wide=_wide_fx(spark), **common)
-    res2 = etl_flow(spark, lake, raw_fx_prices_wide=_wide_fx(spark, with_gap_day=True), **common)
+    etl_flow(spark, lake, raw_fx_prices_wide=_fx_bars(spark), **common)
+    res2 = etl_flow(spark, lake, raw_fx_prices_wide=_fx_bars(spark, with_gap_day=True), **common)
     fct = {(str(r.date_stamp), r.symbol): r for r in res2.models["fct_prices"].collect()}
     assert len(fct) == 3  # idempotent remerge of day-1 rows + new day-2 row
     gap = fct[("2025-01-02", "EURUSD")]
@@ -106,8 +101,8 @@ def test_etl_flow_check_suite_is_one_keyed_pass(spark, tmp_path, monkeypatch):
     res = etl_flow(
         spark,
         str(tmp_path / "lake"),
-        raw_fx_prices_wide=_wide_fx(spark),
-        raw_stock_prices_wide=_wide_stock(spark),
+        raw_fx_prices_wide=_fx_bars(spark),
+        raw_stock_prices_wide=_stock_bars(spark),
         raw_stock_symbols=_raw_symbols(spark),
         date_stamp=D(2025, 1, 1),
     )
@@ -126,8 +121,8 @@ def test_etl_flow_sink_failure_lets_siblings_land(spark, tmp_path):
         etl_flow(
             spark,
             lake,
-            raw_fx_prices_wide=_wide_fx(spark),
-            raw_stock_prices_wide=_wide_stock(spark),
+            raw_fx_prices_wide=_fx_bars(spark),
+            raw_stock_prices_wide=_stock_bars(spark),
             raw_stock_symbols=_raw_symbols(spark).drop("Security"),
             date_stamp=D(2025, 1, 1),
         )
@@ -135,3 +130,58 @@ def test_etl_flow_sink_failure_lets_siblings_land(spark, tmp_path):
     assert [r.symbol for r in fx] == ["EURUSD"]
     assert not os.path.exists(os.path.join(lake, "symbols", "sp_stocks"))
     assert not [t for t in threading.enumerate() if t.name.startswith(OVERLAP_THREAD_PREFIX)]
+
+
+def test_etl_flow_lands_the_same_prices_from_the_fetch_and_the_csv(spark, tmp_path):
+    """Every price source melts with the same kernel into the same long
+    bars: ``etl_flow`` fed by ``price_history_source`` (a fake
+    ``yf.download``) lands the same ``fct_prices`` rows as ``etl_flow``
+    fed by the wide CSVs those frames serialize to — incl. a live
+    ticker's missing day (forward-filled) and a failed download
+    (pruned)."""
+    from securities_data_pipeline_spark.sources.adapters import price_history_source
+    from securities_data_pipeline_spark.sources.wide_csv import read_wide_price_csv
+    from tests.conftest import yf_frame
+
+    dates = [dt.datetime(2025, 1, d) for d in (1, 2, 3)]
+    fields = ("Open", "High", "Low", "Close", "Volume")
+    fetches = {
+        "fx": yf_frame(
+            dates,
+            {(f, t): [1.25 + k, 1.5 + k, 1.75 + k] for f in fields for k, t in enumerate(("EURUSD=X", "JPY=X"))},
+        ),
+        "sp_stocks": yf_frame(
+            dates,
+            {
+                **{(f, "AAA"): [10.0 + j, None, 12.0 + j] for j, f in enumerate(fields)},
+                **{(f, "DEAD"): [None, None, None] for f in fields},
+            },
+        ),
+    }
+
+    def fetched(kind, frame):
+        symbols = sorted(set(frame.columns.get_level_values("Ticker")))
+        return price_history_source(spark, symbols=symbols, downloader=lambda s, start, end: frame)
+
+    def csv(kind, frame):
+        path = str(tmp_path / f"{kind}.csv")
+        frame.to_csv(path)
+        return read_wide_price_csv(spark, path)
+
+    landed = []
+    for n, source in enumerate((fetched, csv)):
+        bars = {kind: source(kind, frame) for kind, frame in fetches.items()}
+        res = etl_flow(
+            spark,
+            str(tmp_path / f"lake{n}"),
+            raw_fx_prices_wide=bars["fx"],
+            raw_stock_prices_wide=bars["sp_stocks"],
+            raw_stock_symbols=_raw_symbols(spark),
+            date_stamp=D(2025, 1, 1),
+        )
+        assert all(c.passed for c in res.checks), [c.name for c in res.checks if not c.passed]
+        landed.append(res.models["fct_prices"].collect())
+    assert sorted(map(tuple, landed[0])) == sorted(map(tuple, landed[1]))
+    fct = {(str(r.date_stamp), r.symbol): r for r in landed[1]}
+    assert len(fct) == 9  # 3 days × (EURUSD, USDJPY, AAA); DEAD pruned
+    assert fct[("2025-01-02", "AAA")].close == 13.0  # the missing day, filled from day 1's close

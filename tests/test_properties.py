@@ -570,30 +570,21 @@ def _row_key(row):
 
 @settings(max_examples=25, deadline=None, suppress_health_check=[HealthCheck.too_slow])
 @given(frame=_wide_price_frames(), asset_category=st.sampled_from(["fx", "sp_stocks"]))
-def test_transform_prices_matches_pandas_twin(spark, frame, asset_category):
+def test_transform_prices_matches_pandas_twin(spark, tmp_path_factory, frame, asset_category):
+    """The wide fetch written as the vendor's CSV, read back by the CSV
+    source's melt and transformed, equals the reference's pandas
+    transform of the same frame."""
     import datetime as dt
 
-    import numpy as np
-    import pandas as pd
-    from pyspark.sql import types as T
-
     from securities_data_pipeline_spark.functions.cleaning import transform_prices
+    from securities_data_pipeline_spark.sources.wide_csv import read_wide_price_csv
+    from tests.conftest import yf_frame
 
     n, cols = frame
-    dates = [dt.datetime(2025, 1, 1) + dt.timedelta(days=i) for i in range(n)]
-    wide_pd = pd.DataFrame(
-        np.array([[np.nan if v is None else v for v in vs] for vs in cols.values()], dtype="float64").T,
-        index=pd.DatetimeIndex(dates, name="date"),
-        columns=pd.MultiIndex.from_tuples(list(cols), names=["Price", "Ticker"]),
-    )
-    schema = T.StructType(
-        [T.StructField("date", T.TimestampType())]
-        + [
-            T.StructField(f"{f}_{t}", T.LongType() if f == "Volume" else T.DoubleType())
-            for f, t in cols
-        ]
-    )
-    wide = spark.createDataFrame([(d, *(vs[i] for vs in cols.values())) for i, d in enumerate(dates)], schema)
+    wide_pd = yf_frame([dt.datetime(2025, 1, 1) + dt.timedelta(days=i) for i in range(n)], cols)
+    path = str(tmp_path_factory.mktemp("twin") / "fetch.csv")
+    wide_pd.to_csv(path)
 
-    got = [tuple(r) for r in transform_prices(wide, asset_category).collect()]
-    assert sorted(got, key=_row_key) == sorted(_reference_transform_prices(wide_pd, asset_category), key=_row_key)
+    got = [tuple(r) for r in transform_prices(read_wide_price_csv(spark, path), asset_category).collect()]
+    want = _reference_transform_prices(wide_pd.rename_axis("date"), asset_category)
+    assert sorted(got, key=_row_key) == sorted(want, key=_row_key)

@@ -113,11 +113,30 @@ def test_price_history_adapter_long_rows_and_failed_symbols(spark):
         symbols=symbols, downloader=_fake_yf_download, batch_size=2,
     )
     rows = {(r.symbol, r.date_stamp.date().isoformat()): r for r in bars.collect()}
-    # 2 live symbols × 2 dates; DEAD's all-NaN bars dropped in-batch
-    assert len(rows) == 4
+    # 3 symbols × 2 dates: the melt keeps DEAD's all-NaN bars (future_stack)
+    assert len(rows) == 6
     assert rows[("AAA", "2025-01-01")].close == float(ord("A")) + 0.1
     failed = [r.symbol for r in failed_symbols(spark, symbols, bars).collect()]
-    assert failed == ["DEAD"]
+    assert failed == ["DEAD"]  # no bar with a value
+    from securities_data_pipeline_spark.functions.cleaning import transform_prices
+
+    assert transform_prices(bars, "sp_stocks").count() == 4  # DEAD pruned
+
+
+def test_price_history_adapter_keeps_a_live_tickers_missing_day(spark):
+    """A live ticker's all-NaN day survives the melt and the transform
+    (the reference's future_stack keeps it), so the lake holds the row
+    fct_prices' forward-fill fills; the ticker is not a failed symbol."""
+    from securities_data_pipeline_spark.functions.cleaning import transform_prices
+    from securities_data_pipeline_spark.sources.adapters import failed_symbols, price_history_source
+    from tests.conftest import yf_frame
+
+    dates = pd.to_datetime(["2025-01-01", "2025-01-02", "2025-01-03"])
+    frame = yf_frame(dates, {(f, "AAA"): [1.0, None, 3.0] for f in ("Open", "High", "Low", "Close", "Volume")})
+    bars = price_history_source(spark, symbols=["AAA"], downloader=lambda s, start, end: frame)
+    rows = sorted((str(r.date_stamp), r.close, r.volume) for r in transform_prices(bars, "sp_stocks").collect())
+    assert rows == [("2025-01-01", 1.0, 1), ("2025-01-02", None, None), ("2025-01-03", 3.0, 3)]
+    assert failed_symbols(spark, ["AAA"], bars).count() == 0
 
 
 def test_wide_bars_single_symbol_flat_columns(spark):

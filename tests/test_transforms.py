@@ -10,6 +10,8 @@ from securities_data_pipeline_spark.functions.cleaning import (
     transform_prices,
     transform_stock_symbols,
 )
+from securities_data_pipeline_spark.sources.wide_csv import read_wide_price_csv
+from tests.conftest import yf_frame
 
 RAW_SYMBOL_SCHEMA = (
     "Symbol string, Security string, `GICS Sector` string, `GICS Sub-Industry` string, "
@@ -52,59 +54,68 @@ def test_fx_symbols_keeps_suffix(spark):
     assert {r.symbol for r in out.collect()} == {"EURUSD=X", "JPY=X"}
 
 
-def _wide(spark):
+BARS = "date_stamp timestamp, symbol string, open double, high double, low double, close double, volume double"
+
+
+def _bars(spark):
+    """Long bars as every price source melts them: AAA and JPY=X live on
+    day 1, every ticker all-null on day 2, DEAD all-null throughout (a
+    failed download)."""
+    d1, d2 = dt.datetime(2025, 1, 1), dt.datetime(2025, 1, 2)
     return spark.createDataFrame(
         [
-            (dt.datetime(2025, 1, 1), 10.0, 11.0, 9.0, 10.5, 100, None, 1.1, 1.2, 1.0, 1.15, 0),
-            (dt.datetime(2025, 1, 2), None, None, None, None, None, None, None, None, None, None, None),
-        ],
-        "date timestamp, Open_AAA double, High_AAA double, Low_AAA double, Close_AAA double, "
-        "Volume_AAA long, `Open_DEAD` double, `Open_JPY=X` double, `High_JPY=X` double, "
-        "`Low_JPY=X` double, `Close_JPY=X` double, `Volume_JPY=X` long",
+            (d1, "AAA", 10.0, 11.0, 9.0, 10.5, 100.0),
+            (d1, "DEAD", None, None, None, None, None),
+            (d1, "JPY=X", 1.1, 1.2, 1.0, 1.15, 0.0),
+        ]
+        + [(d2, s, None, None, None, None, None) for s in ("AAA", "DEAD", "JPY=X")],
+        BARS,
     )
 
 
 def test_transform_prices_prunes_all_null_ticker(spark):
     """transform.py:77-79 parity: a ticker whose every field column is
     null (failed download) is pruned; live tickers survive."""
-    symbols = {r.symbol for r in transform_prices(_wide(spark), "sp_stocks").collect()}
+    symbols = {r.symbol for r in transform_prices(_bars(spark), "sp_stocks").collect()}
     assert "DEAD" not in symbols
     assert "AAA" in symbols
 
 
 def test_transform_prices_keeps_all_null_rows(spark):
     """pandas future_stack=True parity: day-2 all-null rows survive."""
-    long_df = transform_prices(_wide(spark), "sp_stocks")
+    long_df = transform_prices(_bars(spark), "sp_stocks")
     assert long_df.count() == 4  # 2 dates × 2 surviving tickers
-    cols = set(long_df.columns)
-    assert cols == {"date_stamp", "symbol", "open", "high", "low", "close", "volume"}
+    assert long_df.columns == ["date_stamp", "symbol", "open", "high", "low", "close", "volume"]
+    assert dict(long_df.dtypes)["volume"] == "bigint"
 
 
 def test_transform_prices_all_null_tickers_yield_empty_long_frame(spark):
     """Every ticker column null (every download failed): the reference's
     dropna(axis=1, how="all") → stack returns an empty frame, and so
     does this — with the long schema, not an error."""
-    wide = spark.createDataFrame(
-        [(dt.datetime(2025, 1, 1), None, None), (dt.datetime(2025, 1, 2), None, None)],
-        "date timestamp, Close_DEAD double, `Volume_BRK.B` long",
+    bars = spark.createDataFrame(
+        [(dt.datetime(2025, 1, d), s, None, None, None, None, None) for d in (1, 2) for s in ("DEAD", "BRK.B")],
+        BARS,
     )
-    out = transform_prices(wide, "sp_stocks")
+    out = transform_prices(bars, "sp_stocks")
     assert out.columns == ["date_stamp", "symbol", "open", "high", "low", "close", "volume"]
     assert out.count() == 0
 
 
-def test_transform_prices_without_ticker_columns(spark):
-    """No {Field}_{TICKER} column at all: an empty frame is a no-op
-    with the long schema, a non-empty one has nothing to reshape."""
-    empty = spark.createDataFrame([], "date timestamp, `Adj Close_AAA` double")
-    assert transform_prices(empty, "fx").count() == 0
-    wide = spark.createDataFrame([(dt.datetime(2025, 1, 1), 1.0)], "date timestamp, `Adj Close_AAA` double")
-    with pytest.raises(ValueError, match="no \\{Field\\}_\\{TICKER\\} columns"):
-        transform_prices(wide, "fx")
+def test_transform_prices_without_ticker_columns(spark, tmp_path):
+    """A fetch whose header has no OHLCV field: without a data row it is
+    a no-op with the long schema, with one it has nothing to reshape."""
+    empty = tmp_path / "empty.csv"
+    yf_frame([], {("Adj Close", "AAA"): []}).to_csv(empty)
+    assert transform_prices(read_wide_price_csv(spark, str(empty)), "fx").count() == 0
+    wide = tmp_path / "wide.csv"
+    yf_frame([dt.datetime(2025, 1, 1)], {("Adj Close", "AAA"): [1.0]}).to_csv(wide)
+    with pytest.raises(ValueError, match="no OHLCV field"):
+        read_wide_price_csv(spark, str(wide))
 
 
 def test_transform_prices_fx_recode(spark):
-    out = transform_prices(_wide(spark), "fx")
+    out = transform_prices(_bars(spark), "fx")
     symbols = {r.symbol for r in out.collect()}
     # '=X' stripped then whole-value recode JPY→USDJPY; AAA untouched
     assert symbols == {"AAA", "USDJPY"}
@@ -112,7 +123,7 @@ def test_transform_prices_fx_recode(spark):
 
 
 def test_transform_prices_stock_no_recode(spark):
-    out = transform_prices(_wide(spark), "sp_stocks")
+    out = transform_prices(_bars(spark), "sp_stocks")
     assert {r.symbol for r in out.collect()} == {"AAA", "JPY=X"}
 
 
