@@ -86,6 +86,23 @@ def dedupe_on_keys(df: DataFrame, keys: list[str]) -> DataFrame:
     )
 
 
+def match_target_casing(df: DataFrame, target_columns) -> DataFrame:
+    """Rename each batch column that equals a target column up to case
+    onto the target's spelling (a batch ``Close`` lands in ``close``).
+
+    Both sinks fold case when they detect new columns, so without this
+    a case variant would add a second, case-distinct column on parquet
+    and fail the verbatim-quoted INSERT on a case-sensitive warehouse.
+    """
+    by_fold = {c.casefold(): c for c in target_columns}
+    renames = {
+        c: by_fold[c.casefold()]
+        for c in df.columns
+        if c.casefold() in by_fold and c != by_fold[c.casefold()]
+    }
+    return df.withColumnsRenamed(renames) if renames else df
+
+
 def _delta_merge(spark: SparkSession, incoming: DataFrame, path: str, keys: list[str]) -> None:
     """Cluster path: Delta MERGE INTO keyed on the PK."""
     cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
@@ -143,22 +160,10 @@ def merge_upsert(
     # partitions on the old column set would make later reads sample-
     # dependent (Delta/mergeSchema is the at-scale answer; a full
     # rewrite per evolution is the honest parquet one).
-    # Case-insensitive evolution detection, matching the warehouse
-    # sink's evolve_statements: a batch 'Close' must map onto an
-    # existing 'close' (rename to the table's casing), not trigger a
-    # full rewrite that unions in a case-distinct duplicate column
-    # splitting subsequent reads/merges across the two.
-    target_by_fold = {c.casefold(): c for c in target.columns}
-    renames = {
-        c: target_by_fold[c.casefold()]
-        for c in incoming.columns
-        if c.casefold() in target_by_fold and c != target_by_fold[c.casefold()]
-    }
-    if renames:
-        incoming = incoming.withColumnsRenamed(renames)
-    evolving = bool(
-        {c.casefold() for c in incoming.columns} - set(target_by_fold)
-    )
+    # A batch 'Close' lands in an existing 'close', as in the warehouse
+    # sink, so only a column new up to case makes the batch evolving.
+    incoming = match_target_casing(incoming, target.columns)
+    evolving = bool(set(incoming.columns) - set(target.columns))
     # an evolving batch rewrites every partition (see above); otherwise a
     # partitioned merge rewrites only the partitions the batch touches
     pruned = bool(partition_by) and not evolving

@@ -45,7 +45,7 @@ from typing import Callable, Protocol
 
 from pyspark.sql import DataFrame
 
-from securities_data_pipeline_spark.load import dedupe_on_keys
+from securities_data_pipeline_spark.load import dedupe_on_keys, match_target_casing
 
 
 class DbapiConnection(Protocol):  # driver-side warehouse connection
@@ -265,20 +265,8 @@ class JdbcMergeSink:
         target_only: list[str] = []
         if self.columns_of is not None:
             existing = self.columns_of(table)
-            # map case-variant batch columns onto the TARGET's casing
-            # BEFORE staging: evolve/target_only already case-fold, but
-            # the merge DML quotes batch names verbatim — on a
-            # case-sensitive engine (Postgres) a batch 'Close' against
-            # table 'close' would otherwise fail the INSERT. Mirrors
-            # load.py's parquet-side rename.
-            by_fold = {c.casefold(): c for c in existing}
-            renames = {
-                c: by_fold[c.casefold()]
-                for c in incoming.columns
-                if c.casefold() in by_fold and c != by_fold[c.casefold()]
-            }
-            if renames:
-                incoming = incoming.withColumnsRenamed(renames)
+            # before staging: the merge DML quotes batch names verbatim
+            incoming = match_target_casing(incoming, existing)
             ddl = evolve_statements(incoming, table, existing)
             # columns the warehouse has but this batch lacks: matched
             # rows replace wholesale under both dialects, so the ansi

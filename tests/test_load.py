@@ -518,6 +518,34 @@ def test_jdbc_merge_schema_evolution(spark):
     assert rows[(D(2025, 1, 1), "AAA")] == (1.0, None)  # evolved to null
 
 
+def test_jdbc_case_variant_batch_column_maps_onto_existing(spark):
+    """The warehouse twin of test_case_variant_batch_column_maps_onto_existing:
+    a batch 'Close' merges into the table's 'close' with no ALTER TABLE,
+    and the DML names the table's spelling (a case-sensitive warehouse
+    would reject a quoted "Close")."""
+    con, sink = _duckdb_warehouse(spark)
+    con.execute("CREATE TABLE prices (symbol VARCHAR, close DOUBLE)")
+    con.execute("INSERT INTO prices VALUES ('AAA', 1.0)")
+    sink.columns_of = lambda t: {
+        r[0]
+        for r in con.execute(
+            "SELECT column_name FROM information_schema.columns WHERE table_name = ?",
+            [t],
+        ).fetchall()
+    }
+    batch = spark.createDataFrame(
+        [("AAA", 9.0), ("BBB", 2.0)], "symbol string, Close double"
+    )
+    stmts = sink.write(batch, "prices", ["symbol"])
+    assert all("ALTER TABLE" not in s for s in stmts)
+    assert all('"Close"' not in s for s in stmts)
+    assert [c[0] for c in con.execute("DESCRIBE prices").fetchall()] == ["symbol", "close"]
+    assert dict(con.execute("SELECT symbol, close FROM prices").fetchall()) == {
+        "AAA": 9.0,
+        "BBB": 2.0,
+    }
+
+
 def test_evolve_statements_types_and_case():
     """Review pins: decimal evolves to DECIMAL(p,s) DDL (VARCHAR would
     type-mismatch the staged NUMERIC), case-variant batch columns match

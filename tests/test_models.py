@@ -77,3 +77,46 @@ def test_register_views_sql_access(spark):
         "JOIN dim_symbols d USING (symbol) GROUP BY 1 ORDER BY 1"
     ).collect()
     assert [(r.asset_type, r.n) for r in got] == [("FX", 2), ("Stock", 1)]
+
+
+def test_stage_outputs_match_declared_schemas(spark):
+    """schemas.py's post-transform contracts (the reference's pandera
+    schemas, validate.py:29-85) are what the stages emit: the same
+    field names in the same order with the same types. Nullability is
+    not compared."""
+    from securities_data_pipeline_spark import schemas
+    from securities_data_pipeline_spark.functions.cleaning import (
+        transform_fx_symbols,
+        transform_prices,
+        transform_stock_symbols,
+    )
+
+    def fields(schema):
+        return [(f.name, f.dataType) for f in schema.fields]
+
+    raw_sym = spark.createDataFrame(
+        [("AAA", "Aaa Corp", "Tech", None, False, True, None, "0001")],
+        "Symbol string, Security string, `GICS Sector` string, "
+        "`GICS Sub-Industry` string, in_sp400 boolean, in_sp500 boolean, "
+        "in_sp600 boolean, CIK string",
+    )
+    bars = spark.createDataFrame(
+        [(dt.datetime(2025, 1, 1), "JPY=X", 1.1, 1.2, 1.0, 1.15, 0.0)],
+        "date_stamp timestamp, symbol string, open double, high double, "
+        "low double, close double, volume double",
+    )
+    sym = transform_stock_symbols(raw_sym, "2025-01-01")
+    fx = transform_prices(bars, "fx")
+    stock = transform_prices(bars.replace("JPY=X", "AAA", "symbol"), "stock")
+    models = build_star_schema(fx, stock, sym)
+    fx_sym = transform_fx_symbols(spark.createDataFrame([("JPY=X",)], "Symbol string"))
+
+    for df, declared in [
+        (sym, schemas.TRANSFORMED_STOCK_SYMBOLS),
+        (fx_sym, schemas.TRANSFORMED_FX_SYMBOLS),
+        (fx, schemas.TRANSFORMED_PRICES),
+        (stock, schemas.TRANSFORMED_PRICES),
+        (models["dim_symbols"], schemas.DIM_SYMBOLS),
+        (models["fct_prices"], schemas.FCT_PRICES),
+    ]:
+        assert fields(df.schema) == fields(declared)

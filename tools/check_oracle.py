@@ -1,9 +1,17 @@
-"""Local stand-in for the driver's correctness gate.
+"""The Spark-vs-DuckDB comparison and the local stand-in for the
+driver's correctness gate.
 
-Runs every ``queries()`` entry on Spark and its ``oracle_sql()`` twin on
-DuckDB over the same parquet tables, then compares row count, column
-names, and order-insensitive values (columns sorted by name, rows sorted,
-floats rounded to 9 significant-ish decimals before hashing).
+``compare`` runs each named ``queries()`` entry on Spark and its
+``oracle_sql()`` twin on a DuckDB connection over the same parquet
+tables, and checks, in order: the column-name set, that every output
+column is scalar, the type family of each column, the row count, and
+the order-insensitive values (columns sorted by name, rows sorted,
+floats rounded to 9 significant digits). It prints one ``PASS``,
+``FAIL``, ``ERROR`` (either engine raised) or ``SKIP`` (no query or no
+oracle under that name) line per query. ``main`` is the gate: every
+registered query over one testdata directory. The five
+``tools/fuzz_*.py`` axes run the same ``compare`` over their
+adversarial tables.
 
 Usage: python tools/check_oracle.py [sf_dir] [query ...]
 """
@@ -78,91 +86,98 @@ def main() -> int:
     from securities_data_pipeline_spark.sources.tables import TABLE_NAMES
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+    names = sys.argv[2:] or list(e.queries())
 
     spark = get_spark("oracle-check")
     con = duckdb.connect()
     for t in TABLE_NAMES:
         con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'")
+    return report(*compare(spark, con, names, sf_dir))
+
+
+def _mismatch(scols, stypes, srows, ocols, otypes, orows) -> str | None:
+    """The first way a Spark result differs from its oracle's, or None."""
+    if sorted(scols) != sorted(ocols):
+        return f"columns {sorted(scols)} != {sorted(ocols)}"
+    # DRIVER CONTRACT (VERDICT r9 item 1): the driver's canonicalizer
+    # sorts result frames in pandas, which raises ``TypeError:
+    # unhashable type`` on array/map/struct cells — sim_kmeans_train/
+    # sim_pq_train shipped driver-RED in r9 because this gate
+    # stringified cells and passed them. A registered query output must
+    # therefore be scalar columns only.
+    nonscalar = [
+        (c, t)
+        for c, t in list(stypes.items()) + list(zip(ocols, otypes))
+        if type_family(t) in ("array", "nested")
+    ]
+    if nonscalar:
+        return (
+            f"non-scalar output columns {nonscalar} — the driver "
+            "canonicalizer cannot sort array/map/struct cells (flatten or "
+            "stringify them)"
+        )
+    tmism = [
+        (c, stypes[c], ot)
+        for c, ot in zip(ocols, otypes)
+        if type_family(stypes[c]) != type_family(ot)
+    ]
+    if tmism:
+        return f"type-family mismatch (driver hasher is type-sensitive): {tmism}"
+    if len(srows) != len(orows):
+        return f"rowcount {len(srows)} != {len(orows)}"
+    cs, co = canon(srows, scols), canon(orows, ocols)
+    if cs != co:
+        bad = next(i for i, (a, b) in enumerate(zip(cs, co)) if a != b)
+        return (
+            f"values differ, first at sorted-row {bad}:\n"
+            f"  spark:  {cs[bad]}\n  oracle: {co[bad]}"
+        )
+    return None
+
+
+def compare(spark, con, names, data_dir) -> tuple[list[str], list[str]]:
+    """Run each query in ``names`` on Spark over ``data_dir`` and its
+    oracle on the DuckDB connection ``con``; print one verdict line per
+    query and return the names that FAILed and the names that ERRORed."""
+    import __spark_entry__ as e
 
     qs, oracles = e.queries(), e.oracle_sql()
-    failures = []
-    for name, fn in qs.items():
-        if only and name not in only:
+    failures, errors = [], []
+    for name in names:
+        if name not in qs or name not in oracles:
+            print(f"SKIP {name}: {'no oracle' if name in qs else 'not registered'}")
             continue
         t0 = time.time()
+        engine = "spark"
         try:
-            sdf = fn(get_spark("oracle-check"), sf_dir)
-            scols = sdf.columns
+            sdf = qs[name](spark, data_dir)
+            scols, stypes = sdf.columns, dict(sdf.dtypes)
             srows = [tuple(r) for r in sdf.collect()]
-        except Exception as ex:
-            failures.append(name)
-            print(f"FAIL {name}: spark error: {ex}")
-            continue
-        sql = oracles.get(name)
-        if sql is None:
-            print(f"SKIP {name}: no oracle (rows-only check) rows={len(srows)}")
-            continue
-        try:
-            res = con.sql(sql)
-            ocols = [c for c in res.columns]
-            otypes = [str(t) for t in res.types]
+            engine = "duckdb"
+            res = con.sql(oracles[name])
+            ocols, otypes = list(res.columns), [str(t) for t in res.types]
             orows = res.fetchall()
-        except Exception as ex:
-            failures.append(name)
-            print(f"FAIL {name}: duckdb error: {ex}")
+        except Exception as ex:  # noqa: BLE001 - report and continue
+            errors.append(name)
+            print(f"ERROR {name}: {engine} {type(ex).__name__}: {str(ex)[:250]}")
             continue
-        dt = time.time() - t0
-        if sorted(scols) != sorted(ocols):
+        problem = _mismatch(scols, stypes, srows, ocols, otypes, orows)
+        if problem:
             failures.append(name)
-            print(f"FAIL {name}: columns {sorted(scols)} != {sorted(ocols)}")
-            continue
-        stypes = dict(sdf.dtypes)
-        # DRIVER CONTRACT (VERDICT r9 item 1): the driver's
-        # canonicalizer sorts result frames in pandas, which raises
-        # ``TypeError: unhashable type`` on array/map/struct cells —
-        # sim_kmeans_train/sim_pq_train shipped driver-RED in r9
-        # because this gate stringified cells and passed them. A
-        # registered query output must therefore be scalar columns
-        # only; reject here so the divergence is caught in-repo.
-        nonscalar = [
-            (c, t)
-            for c, t in list(stypes.items()) + list(zip(ocols, otypes))
-            if type_family(t) in ("array", "nested")
-        ]
-        if nonscalar:
-            failures.append(name)
-            print(
-                f"FAIL {name}: non-scalar output columns {nonscalar} — "
-                "the driver canonicalizer cannot sort array/map/struct "
-                "cells (flatten or stringify them)"
-            )
-            continue
-        tmism = [
-            (c, stypes[c], ot)
-            for c, ot in zip(ocols, otypes)
-            if type_family(stypes[c]) != type_family(ot)
-        ]
-        if tmism:
-            failures.append(name)
-            print(f"FAIL {name}: type-family mismatch (driver hasher is type-sensitive): {tmism}")
-            continue
-        if len(srows) != len(orows):
-            failures.append(name)
-            print(f"FAIL {name}: rowcount {len(srows)} != {len(orows)}")
-            continue
-        cs, co = canon(srows, scols), canon(orows, ocols)
-        if cs != co:
-            failures.append(name)
-            bad = next(i for i, (a, b) in enumerate(zip(cs, co)) if a != b)
-            print(f"FAIL {name}: values differ, first at sorted-row {bad}:")
-            print(f"  spark:  {cs[bad]}")
-            print(f"  oracle: {co[bad]}")
-            continue
-        print(f"PASS {name} rows={len(srows)} ({dt:.1f}s)")
+            print(f"FAIL {name}: {problem}")
+        else:
+            print(f"PASS {name} rows={len(srows)} ({time.time() - t0:.1f}s)")
+    return failures, errors
 
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    return 1 if failures else 0
+
+def report(failures, errors) -> int:
+    """Print the run's totals; the exit status is 1 on any FAIL or ERROR."""
+    print(f"\n{len(failures)} failures, {len(errors)} errors")
+    if failures:
+        print("failed:", failures)
+    if errors:
+        print("errored:", errors)
+    return 1 if failures or errors else 0
 
 
 if __name__ == "__main__":

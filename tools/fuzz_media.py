@@ -116,49 +116,6 @@ def gen_documents(n: int, seed: int):
     return rows
 
 
-def oracle_sweep(spark, n: int, seed: int, scratch: str) -> tuple[list, list]:
-    import duckdb
-
-    import __spark_entry__ as e
-    from tools.check_oracle import canon
-
-    docs = spark.createDataFrame(
-        gen_documents(n, seed),
-        "doc_id long, text string, lang string, source string, n_chars long",
-    )
-    path = os.path.join(scratch, "documents.parquet")
-    docs.coalesce(2).write.mode("overwrite").parquet(path)
-
-    con = duckdb.connect()
-    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
-
-    qs, oracles = e.queries(), e.oracle_sql()
-    failures, errors = [], []
-    for name in MM_QUERIES:
-        if name not in qs:
-            print(f"SKIP {name}: not registered")
-            continue
-        try:
-            sdf = qs[name](spark, scratch)
-            a = canon([tuple(r) for r in sdf.collect()], sdf.columns)
-            res = con.sql(oracles[name])
-            b = canon(res.fetchall(), list(res.columns))
-        except Exception as ex:  # noqa: BLE001 - report and continue
-            errors.append(name)
-            print(f"ERROR {name}: {type(ex).__name__}: {str(ex)[:250]}")
-            continue
-        if a == b:
-            print(f"PASS {name} rows={len(a)}")
-        else:
-            failures.append(name)
-            diff = [i for i, (x, y) in enumerate(zip(a, b)) if x != y]
-            print(f"FAIL {name}: rows {len(a)} vs {len(b)}, diffs at {diff[:3]}")
-            for i in diff[:2]:
-                print(f"  spark : {a[i] if i < len(a) else '<none>'}")
-                print(f"  duckdb: {b[i] if i < len(b) else '<none>'}")
-    return failures, errors
-
-
 def gen_media_rows(seed: int):
     """True binary garbage for the direct operator sweep."""
     rng = random.Random(seed)
@@ -250,6 +207,9 @@ def binary_sweep(spark) -> list[str]:
 
 
 def main() -> int:
+    import duckdb
+
+    from tools.check_oracle import compare, report
     from securities_data_pipeline_spark.session import get_spark
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 400
@@ -259,19 +219,21 @@ def main() -> int:
     os.makedirs(scratch, exist_ok=True)
 
     spark = get_spark("media-fuzz")
-    failures, errors = oracle_sweep(spark, n, seed, scratch)
-    problems = binary_sweep(spark)
-
-    print(
-        f"\n{len(failures)} fuzz failures, {len(errors)} errors, "
-        f"{len(problems)} binary-sweep problems"
+    docs = spark.createDataFrame(
+        gen_documents(n, seed),
+        "doc_id long, text string, lang string, source string, n_chars long",
     )
-    if failures:
-        print("failed:", failures)
-    if errors:
-        print("errored:", errors)
+    path = os.path.join(scratch, "documents.parquet")
+    docs.coalesce(2).write.mode("overwrite").parquet(path)
+    con = duckdb.connect()
+    con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
+
+    failures, errors = compare(spark, con, MM_QUERIES, scratch)
+    problems = binary_sweep(spark)
+    status = report(failures, errors)
+    print(f"{len(problems)} binary-sweep problems")
     shutil.rmtree(scratch, ignore_errors=True)
-    return 1 if failures or errors or problems else 0
+    return 1 if status or problems else 0
 
 
 if __name__ == "__main__":

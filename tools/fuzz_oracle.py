@@ -143,8 +143,7 @@ def gen_documents(n: int, seed: int):
 def main() -> int:
     import duckdb
 
-    import __spark_entry__ as e
-    from tools.check_oracle import canon
+    from tools.check_oracle import compare, report
     from securities_data_pipeline_spark.session import get_spark
 
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 400
@@ -164,37 +163,9 @@ def main() -> int:
     con = duckdb.connect()
     con.sql(f"CREATE VIEW documents AS SELECT * FROM '{path}/*.parquet'")
 
-    qs, oracles = e.queries(), e.oracle_sql()
-    failures, errors = [], []
-    for name in DOC_QUERIES:
-        if name not in qs:
-            print(f"SKIP {name}: not registered")
-            continue
-        try:
-            sdf = qs[name](spark, scratch)
-            a = canon([tuple(r) for r in sdf.collect()], sdf.columns)
-            res = con.sql(oracles[name])
-            b = canon(res.fetchall(), list(res.columns))
-        except Exception as ex:  # noqa: BLE001 - report and continue
-            errors.append(name)
-            print(f"ERROR {name}: {type(ex).__name__}: {str(ex)[:250]}")
-            continue
-        if a == b:
-            print(f"PASS {name} rows={len(a)}")
-        else:
-            failures.append(name)
-            diff = [i for i, (x, y) in enumerate(zip(a, b)) if x != y]
-            print(f"FAIL {name}: rows {len(a)} vs {len(b)}, diffs at {diff[:3]}")
-            for i in diff[:2]:
-                print(f"  spark : {a[i] if i < len(a) else '<none>'}")
-                print(f"  duckdb: {b[i] if i < len(b) else '<none>'}")
-    print(f"\n{len(failures)} fuzz failures, {len(errors)} errors")
-    if failures:
-        print("failed:", failures)
-    if errors:
-        print("errored:", errors)
+    status = report(*compare(spark, con, DOC_QUERIES, scratch))
     shutil.rmtree(scratch, ignore_errors=True)
-    return 1 if failures or errors else 0
+    return status
 
 
 if __name__ == "__main__":

@@ -28,7 +28,6 @@ Usage: python tools/fuzz_relational.py [seed] [scratch_root]
 from __future__ import annotations
 
 import datetime as dt
-import math
 import os
 import random
 import shutil
@@ -269,8 +268,7 @@ def main() -> int:
     import duckdb
     import pyarrow.parquet as pq
 
-    import __spark_entry__ as e
-    from tools.check_oracle import canon
+    from tools.check_oracle import compare, report
     from securities_data_pipeline_spark.session import get_spark
     from securities_data_pipeline_spark.sources.tables import TABLE_NAMES
 
@@ -308,9 +306,9 @@ def main() -> int:
         pq.write_table(pa.table(arrays), os.path.join(raw_dir, f"{name}.parquet"))
 
     spark = get_spark("relational-fuzz")
-    report = validated_facts(spark, raw_dir, out_dir)
+    ingest = validated_facts(spark, raw_dir, out_dir)
     ok = True
-    for name, (n_valid, n_quar, tags) in report.items():
+    for name, (n_valid, n_quar, tags) in ingest.items():
         want = expected_valid[name]
         line = f"{name}: valid={n_valid} (want {want}) quarantined={n_quar} tags={tags}"
         if n_valid != want or n_quar == 0:
@@ -331,38 +329,10 @@ def main() -> int:
             shutil.copy(src, os.path.join(out_dir, f"{t}.parquet"))
             con.sql(f"CREATE VIEW {t} AS SELECT * FROM '{out_dir}/{t}.parquet'")
 
-    qs, oracles = e.queries(), e.oracle_sql()
-    failures, errors = [], []
-    for name in RELATIONAL_QUERIES:
-        if name not in qs:
-            print(f"SKIP {name}: not registered")
-            continue
-        try:
-            sdf = qs[name](spark, out_dir)
-            a = canon([tuple(r) for r in sdf.collect()], sdf.columns)
-            res = con.sql(oracles[name])
-            b = canon(res.fetchall(), list(res.columns))
-        except Exception as ex:  # noqa: BLE001 - report and continue
-            errors.append(name)
-            print(f"ERROR {name}: {type(ex).__name__}: {str(ex)[:250]}")
-            continue
-        if a == b:
-            print(f"PASS {name} rows={len(a)}")
-        else:
-            failures.append(name)
-            diff = [i for i, (x, y) in enumerate(zip(a, b)) if x != y]
-            print(f"FAIL {name}: rows {len(a)} vs {len(b)}, diffs at {diff[:3]}")
-            for i in diff[:2]:
-                print(f"  spark : {a[i] if i < len(a) else '<none>'}")
-                print(f"  duckdb: {b[i] if i < len(b) else '<none>'}")
-    print(f"\n{len(failures)} fuzz failures, {len(errors)} errors")
-    if failures:
-        print("failed:", failures)
-    if errors:
-        print("errored:", errors)
+    status = report(*compare(spark, con, RELATIONAL_QUERIES, out_dir))
     for d in (raw_dir, out_dir):
         shutil.rmtree(d, ignore_errors=True)
-    return 1 if failures or errors else 0
+    return status
 
 
 if __name__ == "__main__":
