@@ -302,6 +302,27 @@ CALIBRATION = {
 }
 
 
+def _time_query(spark, sf_dir: str, name: str, fn) -> tuple[list[float], int, str | None]:
+    """Up to ``REPEATS`` timed full runs of one query: the wall of each
+    run that finished, the last row count, and the first error (None
+    when every repeat finished). One broken query must not zero out
+    the whole bench record, and a TRANSIENT failure must not discard
+    the repeats that did complete, so the first failure stops the
+    query and the caller medians whatever finished, recording the
+    completed count and the error beside it."""
+    samples: list[float] = []
+    n = -1
+    for _ in range(REPEATS):
+        t0 = time.time()
+        try:
+            n = fn(spark, sf_dir).count()
+        except Exception as ex:
+            print(f"# {name} FAILED (run {len(samples) + 1}): {ex}", file=sys.stderr)
+            return samples, n, f"{type(ex).__name__}: {str(ex)[:200]}"
+        samples.append(time.time() - t0)
+    return samples, n, None
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     import __spark_entry__ as entrymod
@@ -339,6 +360,8 @@ def main() -> None:
     # per-segment contention trace, additions-only to the record.
     MICRO_CANARY_EVERY = 25
     canary_mid: dict[str, float] = {}
+    completed: dict[str, int] = {}
+    failed: dict[str, str] = {}
 
     def _micro_canary(seg: int) -> None:
         samples = []
@@ -354,22 +377,10 @@ def main() -> None:
     for qi, name in enumerate(HEADLINE):
         if qi and qi % MICRO_CANARY_EVERY == 0 and sf_val == _CANARY_REF_SF:
             _micro_canary(qi // MICRO_CANARY_EVERY)
-        fn = qs[name]
-        samples: list[float] = []
-        n = -1
-        for _ in range(REPEATS):
-            t0 = time.time()
-            try:
-                n = fn(spark, sf_dir).count()
-            except Exception as ex:
-                # one broken query must not zero out the whole bench
-                # record — and a TRANSIENT failure must not discard the
-                # repeats that did complete (dropping the query would
-                # silently shrink the total and skew round-over-round
-                # comparison); median whatever finished
-                print(f"# {name} FAILED (run {len(samples) + 1}): {ex}", file=sys.stderr)
-                break
-            samples.append(time.time() - t0)
+        samples, n, error = _time_query(spark, sf_dir, name, qs[name])
+        completed[name] = len(samples)
+        if error is not None:
+            failed[name] = error
         if not samples:
             continue
         timings[name] = round(statistics.median(samples), 3)
@@ -401,6 +412,11 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "repeats": REPEATS,
+        # repeats that finished per query: below `repeats`, the median
+        # is over a smaller sample (or the query is missing from
+        # `queries` at 0); `failed` holds each such query's first error
+        "completed": completed,
+        "failed": failed,
         "stat": "median",
         "sf": sf_val,
         # production-vs-calibration split (VERDICT r7 #4): `value`
@@ -451,6 +467,7 @@ def main() -> None:
         "round": record["round"],
         "git_sha": record["git_sha"],
         "n_queries": len(timings),
+        "n_failed": len(failed),
         "value_production": record["value_production"],
         "canary_ratio": record["canary_ratio"],
         "value_canary_normalized": record["value_canary_normalized"],

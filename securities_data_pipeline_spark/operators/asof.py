@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from securities_data_pipeline_spark.functions.gates import guard_events_sql
-from securities_data_pipeline_spark.sources.tables import table
+from securities_data_pipeline_spark.sources.tables import local_rows, table
 
 
 def _asof_union_fill(
@@ -293,7 +293,7 @@ def j_range_band(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast nested loop on the bands side (never shuffles the fact),
     then a per-band rollup."""
     ev = table(spark, sf_dir, "events")
-    bands = ev.sparkSession.createDataFrame(VALUE_BANDS, "lo double, hi double, band string")
+    bands = local_rows(spark, VALUE_BANDS, "lo double, hi double, band string")
     return (
         ev.join(F.broadcast(bands), (ev.value >= bands.lo) & (ev.value < bands.hi))
         .groupBy("band")

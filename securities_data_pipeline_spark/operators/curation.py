@@ -56,7 +56,7 @@ from securities_data_pipeline_spark.operators.textops import (
     round6_ratio,
     words_col,
 )
-from securities_data_pipeline_spark.sources.tables import materialize, spread, table
+from securities_data_pipeline_spark.sources.tables import local_rows, materialize, spread, table
 
 # ---------------------------------------------------------------------------
 # repetition filter (Gopher-style duplicate-text heuristics)
@@ -1137,7 +1137,8 @@ def t_quality_logreg(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_train = int(row["n"])
         for j, s in enumerate((int(row["s0"]), int(row["s1"]), int(row["s2"]))):
             w[j] += _halfup_div(s, 2 * n_train)  # η = 1/2 → S_u/(2n)
-    return spark.createDataFrame(
+    return local_rows(
+        spark,
         [
             ("bias", w[0] / 1e6, n_train),
             ("tokens_per_100", w[1] / 1e6, n_train),

@@ -31,7 +31,13 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
-from securities_data_pipeline_spark.sources.tables import materialize, overlap, spread, table
+from securities_data_pipeline_spark.sources.tables import (
+    local_rows,
+    materialize,
+    overlap,
+    spread,
+    table,
+)
 
 N_QUERIES = 5  # vec_id < 5 are the demo query vectors
 TOP_K = 10
@@ -2039,10 +2045,7 @@ def kmeans_train_roster(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("mean_sim"),
     )
-    cents_df = spark.createDataFrame(
-        [(cid, vec) for cid, vec in cents],
-        "centroid_id long, cvec array<double>",
-    )
+    cents_df = local_rows(spark, cents, "centroid_id long, cvec array<double>")
     return (
         cents_df.join(stats, "centroid_id")
         .select("centroid_id", "n_members", "mean_sim", "cvec")
@@ -2211,10 +2214,7 @@ def _ivf_roster_report(
             F.sum("sz").cast("long").alias("n_vectors"),
         )
     )
-    cents = spark.createDataFrame(
-        [(cid, vec) for cid, vec in roster],
-        "centroid_id long, cvec array<double>",
-    )
+    cents = local_rows(spark, roster, "centroid_id long, cvec array<double>")
     queries = emb.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     )
@@ -2472,7 +2472,8 @@ def pq_train_codebook(
             6,
         ).alias("mean_sqdist"),
     )
-    cb_df = sub.sparkSession.createDataFrame(
+    cb_df = local_rows(
+        sub.sparkSession,
         [(m, c, cw) for (m, c), cw in sorted(cb.items())],
         "m int, c int, cw array<double>",
     )

@@ -68,7 +68,7 @@ from securities_data_pipeline_spark.operators.similarity import (
     _sql_cosine,
     cosine,
 )
-from securities_data_pipeline_spark.sources.tables import spread
+from securities_data_pipeline_spark.sources.tables import local_rows, spread
 
 #: composite-tier dials (vs the standalone tiers' N_PROBES=4 /
 #: PQ_SHORTLIST=50): IVF-PQ stacks two approximations, so it probes
@@ -253,8 +253,8 @@ def sim_ivfpq_rerank_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "_bidx",
         *[F.expr(code_expr(m)).alias(f"_c{m}") for m in range(PQ_M)],
     )
-    probe_df = spark.createDataFrame(
-        probes, schema="query_id long, _qcidx int, _dtab array<array<double>>"
+    probe_df = local_rows(
+        spark, probes, "query_id long, _qcidx int, _dtab array<array<double>>"
     )
     adc = F.expr(
         " + ".join(

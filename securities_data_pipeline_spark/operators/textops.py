@@ -29,7 +29,7 @@ from securities_data_pipeline_spark.functions.hashing import (
     sql_seeded_hash64,
     sql_stable_hash64,
 )
-from securities_data_pipeline_spark.sources.tables import materialize, spread, table
+from securities_data_pipeline_spark.sources.tables import local_rows, materialize, spread, table
 
 # one source of truth for both engines
 LANG_PROFILES: dict[str, tuple[str, ...]] = {
@@ -1502,12 +1502,11 @@ def _bpe_train_loop(
             ).alias("repr"),
             "freq",
         )
-    winners = spark.createDataFrame(
+    winners = local_rows(
+        spark,
         winner_rows,
-        schema=(
-            "merge_rank INT, left_sym STRING, right_sym STRING,"
-            " merged STRING, pair_count BIGINT"
-        ),
+        "merge_rank INT, left_sym STRING, right_sym STRING,"
+        " merged STRING, pair_count BIGINT",
     )
     return winners, w
 

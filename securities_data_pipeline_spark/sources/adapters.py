@@ -16,8 +16,9 @@ to the real library, import-guarded.
 Placement of work:
 
 - the constituents scrape is ~1,500 rows from three HTML pages —
-  a driver-side fetch + ``spark.createDataFrame`` is the right plan at
-  any cluster size (there is nothing to distribute);
+  a driver-side fetch handed to Spark as an Arrow-converted pandas
+  frame (a JVM ``LocalTableScan``) is the right plan at any cluster
+  size (there is nothing to distribute);
 - the price fetch is per-symbol-batch and embarrassingly parallel —
   it rides ``fetch_prices_distributed`` (``mapInPandas`` over a
   partitioned symbol list), so executors fetch concurrently and the
@@ -45,6 +46,7 @@ from securities_data_pipeline_spark.sources.registry import (
     fetch_prices_distributed,
     register_source,
 )
+from securities_data_pipeline_spark.sources.tables import local_rows
 
 #: constituents pages scraped by the reference (extract.py:46)
 WIKI_URL = "https://en.wikipedia.org/wiki/List_of_S%26P_{}_companies"
@@ -89,6 +91,8 @@ def sp_stock_symbols_source(
         # dtype fillna downcast warning pandas 2.x emits
         sp[f"in_sp{n}"] = sp[f"in_sp{n}"].eq(True)
     sp.columns = [str(c) for c in sp.columns]
+    # a pandas frame goes through Arrow (a LocalTableScan) and keeps the
+    # scraped tables' own columns, so it needs no DDL and no local_rows
     return spark.createDataFrame(sp)
 
 
@@ -203,7 +207,7 @@ def failed_symbols(spark: SparkSession, requested: Sequence[str], bars: DataFram
     were requested but have no bar with a non-null OHLCV value — an
     anti-join against the fetched result, so detection is distributed
     and exact."""
-    req = spark.createDataFrame([(s,) for s in requested], "symbol string")
+    req = local_rows(spark, [(s,) for s in requested], "symbol string")
     live = bars.where(F.coalesce("open", "high", "low", "close", "volume").isNotNull())
     return req.join(live.select("symbol").distinct(), "symbol", "left_anti")
 

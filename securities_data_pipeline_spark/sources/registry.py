@@ -7,16 +7,17 @@ read-back). Here sources are registered callables returning DataFrames,
 so tests plug in parquet/fixture sources exactly like the reference's
 mocked tests, and production plugs in real web adapters.
 
-The two web sources (Wikipedia constituents scrape, market-data API)
-are *driver-side* fetches for ~1,500 symbols — at that size a driver
-fetch + ``spark.createDataFrame`` is correct. For much larger symbol
-universes the scale path is ``fetch_prices_distributed``: partition the
+The Wikipedia constituents scrape is a *driver-side* fetch of ~1,500
+rows, handed to Spark as one Arrow-backed local relation. Market data
+takes the scale path, ``fetch_prices_distributed``: partition the
 symbol list and fetch per-partition on executors via ``mapInPandas``
 (the Spark analog of the reference's 500-symbol chunking,
 py_pipeline/orchestration.py:90-101).
 
 The 7 FX pairs (py_pipeline/extract.py:67-77) are an inline literal
-source.
+source. Every list-built frame here goes through
+``sources/tables.local_rows``, so it plans as a JVM
+``LocalTableScan`` and no job over it starts a Python worker.
 """
 
 from __future__ import annotations
@@ -24,6 +25,8 @@ from __future__ import annotations
 from collections.abc import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from securities_data_pipeline_spark.sources.tables import local_rows
 
 SourceFn = Callable[..., DataFrame]
 
@@ -59,7 +62,7 @@ def extract(spark: SparkSession, dataset: str, asset_category: str, **kwargs) ->
 
 def fx_symbols_source(spark: SparkSession, **_) -> DataFrame:
     """Inline literal source (extract.py:67-77)."""
-    return spark.createDataFrame([(s,) for s in FX_PAIRS], "Symbol string")
+    return local_rows(spark, [(s,) for s in FX_PAIRS], "Symbol string")
 
 
 register_source("symbols", "fx", fx_symbols_source)
@@ -83,9 +86,7 @@ def fetch_prices_distributed(
     import pandas as pd  # local import: only needed on this path
 
     n_parts = max(1, (len(symbols) + batch_size - 1) // batch_size)
-    sym_df = spark.createDataFrame([(s,) for s in symbols], "symbol string").repartition(
-        n_parts
-    )
+    sym_df = local_rows(spark, [(s,) for s in symbols], "symbol string").repartition(n_parts)
 
     def fetch(parts: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in parts:

@@ -13,7 +13,7 @@ arguments, py_pipeline/extract.py:88-95).
 from __future__ import annotations
 
 import os
-from collections.abc import Callable
+from collections.abc import Callable, Sequence
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
@@ -154,6 +154,35 @@ def materialize(df: DataFrame, eager: bool = False) -> DataFrame:
             sc.setCheckpointDir(ckpt_dir)
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def local_rows(spark: SparkSession, rows: Sequence[tuple], schema: str) -> DataFrame:
+    """THE choke point for a frame built from driver-side rows (the FX
+    symbol list, a symbol request list, a trained roster or codebook, a
+    winners or weights table): every such frame in the package comes
+    from here, and no other module calls ``spark.createDataFrame``
+    except the constituents scrape, whose pandas frame already goes
+    through Arrow (``tests/test_engine.py`` enforces that).
+
+    The rows become one ``pyarrow.Table`` typed by the DDL ``schema``,
+    which Spark plans as a JVM ``LocalRelation`` (``LocalTableScan``).
+    ``spark.createDataFrame(rows, schema)`` on a list instead plans a
+    Python-row RDD (``Scan ExistingRDD``), and every job over it
+    cold-starts Python workers to unpickle the rows: seconds of task
+    time on a 7-row FX symbol list, ahead of everything else queued on
+    the cores. Rows are embedded in the plan, so this is for
+    driver-sized lists only; anything larger is a table to read."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows)) if rows else [()] * len(arrow_schema)
+    arrow = pa.Table.from_arrays(
+        [pa.array(col, type=field.type) for col, field in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(arrow, struct)
 
 
 OVERLAP_THREAD_PREFIX = "overlap"

@@ -1,3 +1,5 @@
+import re
+
 import pytest
 
 from securities_data_pipeline_spark.session import get_spark
@@ -14,6 +16,21 @@ def rows(df, *order_cols):
     if order_cols:
         df = df.orderBy(*order_cols)
     return [tuple(r) for r in df.collect()]
+
+
+def oracle_rows(spark, con, name, data_dir, capsys) -> int:
+    """Check query ``name`` over ``data_dir`` against its DuckDB oracle
+    on ``con`` with ``tools.check_oracle.compare`` (column names, type
+    families, row count, values) and return its row count, read off
+    the ``PASS`` line."""
+    from tools.check_oracle import compare
+
+    verdict = compare(spark, con, [name], data_dir)
+    out = capsys.readouterr().out
+    assert verdict == ([], []), out
+    m = re.search(rf"^PASS {name} rows=(\d+) ", out, re.M)
+    assert m, out
+    return int(m.group(1))
 
 
 def yf_frame(dates, cols):

@@ -89,3 +89,25 @@ def test_bench_compare_refuses_mismatched_sidecar(tmp_path, capsys):
     # legacy sidecar without a stamp (rounds <= 7): substitute
     sidecar.write_text(json.dumps({"queries": {"q": 2.0}}))
     assert load(str(wrapper))["queries"] == {"q": 2.0}
+
+
+def test_failed_repeat_stops_the_query_and_is_reported(spark, monkeypatch):
+    """A repeat that raises keeps the repeats that finished and hands
+    back the error, so the record can say how many of the repeats the
+    median covers and why the rest are missing."""
+    import bench
+
+    monkeypatch.setattr(bench, "REPEATS", 3)
+    calls = []
+
+    def flaky(spark, sf_dir):
+        calls.append(sf_dir)
+        if len(calls) == 2:
+            raise RuntimeError("executor lost")
+        return spark.range(4)
+
+    samples, n, error = bench._time_query(spark, "sf", "flaky", flaky)
+    assert len(calls) == 2 and len(samples) == 1 and n == 4
+    assert error == "RuntimeError: executor lost"
+    samples, n, error = bench._time_query(spark, "sf", "steady", lambda s, d: s.range(2))
+    assert len(samples) == 3 and n == 2 and error is None

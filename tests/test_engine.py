@@ -1,5 +1,5 @@
-"""Engine facade, compaction maintenance job, the one pin policy and the
-one driver-thread overlap helper."""
+"""Engine facade, compaction maintenance job, the one pin policy, the
+one driver-thread overlap helper and the one driver-rows frame builder."""
 
 import ast
 import datetime as dt
@@ -12,7 +12,11 @@ import pytest
 import securities_data_pipeline_spark
 from securities_data_pipeline_spark.engine import Engine
 from securities_data_pipeline_spark.plans.compaction import compact_small_files
-from securities_data_pipeline_spark.sources.tables import OVERLAP_THREAD_PREFIX, overlap
+from securities_data_pipeline_spark.sources.tables import (
+    OVERLAP_THREAD_PREFIX,
+    local_rows,
+    overlap,
+)
 
 TARGET = 512 * 1024  # 512 KiB: both appended files are far below it
 
@@ -133,3 +137,60 @@ def test_overlap_awaits_every_thunk_then_raises_the_first_failure(spark):
         overlap(spark, slow, first, second)
     assert finished == ["slow"]
     assert not _overlap_threads()
+
+
+#: the functions allowed to call ``createDataFrame``: the choke point
+#: itself, and the constituents scrape, whose pandas frame goes through
+#: Arrow and already plans as a ``LocalTableScan``
+CREATE_DATAFRAME_OWNERS = {
+    ("sources/tables.py", "local_rows"),
+    ("sources/adapters.py", "sp_stock_symbols_source"),
+}
+
+
+def test_local_rows_is_the_only_create_dataframe():
+    """``sources/tables.py::local_rows`` owns frames built from driver
+    rows: a ``createDataFrame`` over a list anywhere else plans a
+    Python-row RDD whose every job cold-starts Python workers."""
+    pkg = pathlib.Path(securities_data_pipeline_spark.__file__).parent
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        allowed = {
+            id(n)
+            for fn in ast.walk(tree)
+            if isinstance(fn, ast.FunctionDef) and (rel, fn.name) in CREATE_DATAFRAME_OWNERS
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if (
+                isinstance(node, ast.Call)
+                and id(node) not in allowed
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "createDataFrame"
+            ):
+                sites.append(f"{rel}:{node.lineno}")
+    assert not sites, f"createDataFrame outside local_rows: {sites}"
+
+
+@pytest.mark.parametrize(
+    "rows, schema",
+    [
+        ([("EURUSD=X",), ("JPY=X",)], "Symbol string"),
+        ([(0, [1.0, -2.5]), (7, [])], "centroid_id long, cvec array<double>"),
+        ([(3, 1, [[0.5, 1.5], [2.0]])], "query_id long, _qcidx int, _dtab array<array<double>>"),
+        ([(None, 1.0, "low"), (2.0, None, None)], "lo double, hi double, band string"),
+        ([], "merge_rank INT, left_sym STRING, pair_count BIGINT"),
+    ],
+    ids=["strings", "long-array", "int-nested-array", "nulls", "zero-rows"],
+)
+def test_local_rows_matches_the_list_path(spark, rows, schema):
+    """Same rows and schema as ``createDataFrame`` over the list, but a
+    JVM ``LocalTableScan`` in place of the Python-row ``ExistingRDD``."""
+    got = local_rows(spark, rows, schema)
+    want = spark.createDataFrame(rows, schema)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan and "ExistingRDD" not in plan

@@ -30,8 +30,7 @@ import shutil
 import duckdb
 import pytest
 
-import __spark_entry__ as entry
-from tools.check_oracle import canon
+from tests.conftest import oracle_rows
 from tools.fuzz_events import gen_events
 
 QUERIES = [
@@ -74,19 +73,14 @@ def fuzz_dir(tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", QUERIES)
-def test_adversarial_events_match_oracle(spark, fuzz_dir, name):
+def test_adversarial_events_match_oracle(spark, fuzz_dir, name, capsys):
     con = duckdb.connect()
     for t in ("events", "orders", "customer"):
         con.sql(
             f"CREATE VIEW {t} AS SELECT * FROM "
             f"'{os.path.join(fuzz_dir, t + '.parquet')}'"
         )
-    sdf = entry.queries()[name](spark, fuzz_dir)
-    got = canon([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = con.sql(entry.oracle_sql()[name])
-    want = canon(res.fetchall(), list(res.columns))
-    assert got == want, f"{name}: spark {len(got)} rows vs oracle {len(want)}"
-    assert len(got) > 0
+    assert oracle_rows(spark, con, name, fuzz_dir, capsys) > 0
 
 
 def test_corpus_contains_pathological_classes(spark, fuzz_dir):

@@ -28,8 +28,7 @@ import os
 import duckdb
 import pytest
 
-import __spark_entry__ as entry
-from tools.check_oracle import canon
+from tests.conftest import oracle_rows
 from tools.fuzz_oracle import gen_documents
 
 QUERIES = [
@@ -56,20 +55,15 @@ def fuzz_dir(spark, tmp_path_factory):
 
 
 @pytest.mark.parametrize("name", QUERIES)
-def test_adversarial_corpus_matches_oracle(spark, fuzz_dir, name):
+def test_adversarial_corpus_matches_oracle(spark, fuzz_dir, name, capsys):
     con = duckdb.connect()
     con.sql(
         "CREATE VIEW documents AS SELECT * FROM "
         f"'{os.path.join(fuzz_dir, 'documents.parquet')}/*.parquet'"
     )
-    sdf = entry.queries()[name](spark, fuzz_dir)
-    got = canon([tuple(r) for r in sdf.collect()], sdf.columns)
-    res = con.sql(entry.oracle_sql()[name])
-    want = canon(res.fetchall(), list(res.columns))
-    assert got == want, f"{name}: spark {len(got)} rows vs oracle {len(want)}"
     # the corpus must actually exercise the pathological classes —
     # a silently-empty result would make this test vacuous
-    assert len(got) > 0
+    assert oracle_rows(spark, con, name, fuzz_dir, capsys) > 0
 
 
 def test_corpus_contains_pathological_classes(spark, fuzz_dir):

@@ -19,6 +19,14 @@ def test_fx_inline_source_and_dispatch(spark):
         extract(spark, "symbols", "bonds")
 
 
+def test_fx_symbols_plan_as_a_jvm_local_relation(spark):
+    """The FX symbol list is embedded in the plan: no job over it starts
+    a Python worker to unpickle rows."""
+    plan = extract(spark, "symbols", "fx")._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+
+
 def test_register_custom_source(spark):
     register_source("symbols", "custom", lambda s, **kw: s.createDataFrame([("Z",)], "Symbol string"))
     assert extract(spark, "symbols", "custom").first().Symbol == "Z"

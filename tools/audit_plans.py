@@ -8,8 +8,11 @@ renders the formatted physical plan and checks:
   big sides is a cluster-killer. Single-row broadcast scalars
   (`BroadcastNestedLoopJoin` with a one-row aggregate build side) are
   fine and allowlisted per query.
-- **Python stays off the hot path**: Arrow/Pandas eval nodes are only
-  allowed in queries whose whole point is the Pandas UDF surface.
+- **Python stays off the hot path**: Arrow/Pandas eval nodes and
+  Python-row scans (the ``Scan ExistingRDD`` of a frame built by
+  ``createDataFrame`` over a list: every job over it starts Python
+  workers) are only allowed in queries whose whole point is the Pandas
+  UDF surface.
 - **Pushdown reaches the scan**: queries with a selective filter must
   show non-empty `PushedFilters` on the parquet scan.
 - **Column pruning**: every scan's ReadSchema is reported (col count
@@ -121,6 +124,17 @@ TABLE_WIDTHS = {
 }
 
 
+# plan nodes that run Python: Arrow/Pandas evaluation, and the scan of a
+# Python-row RDD (a list-built frame), which cold-starts workers too. That
+# scan is a `Scan ExistingRDD` whose RDD was made by applySchemaToPythonRDD;
+# a `materialize` checkpoint is a `Scan ExistingRDD` too, but of JVM rows
+# made at localCheckpoint/checkpoint, so it is matched by creation site
+PYTHON_NODES = (
+    r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|BatchEvalPython"
+    r"|applySchemaToPythonRDD"
+)
+
+
 def analyze(name: str, plan: str) -> dict:
     scans = []
     for m in re.finditer(
@@ -139,7 +153,7 @@ def analyze(name: str, plan: str) -> dict:
         "smj": plan.count("SortMergeJoin"),
         "bnlj": plan.count("BroadcastNestedLoopJoin"),
         "cartesian": plan.count("CartesianProduct"),
-        "python": len(re.findall(r"ArrowEvalPython|MapInPandas|FlatMapGroupsInPandas|BatchEvalPython", plan)),
+        "python": len(re.findall(PYTHON_NODES, plan)),
         "codegen": len(set(re.findall(r"codegen id : (\d+)", plan))),
         "pushed": bool(re.search(r"PushedFilters: \[[^\]]+\]", plan)),
     }
@@ -152,7 +166,7 @@ def violations(a: dict) -> list[str]:
     if a["bnlj"] and a["name"] not in BNLJ_OK:
         out.append("unexpected BroadcastNestedLoopJoin")
     if a["python"] and a["name"] not in PY_OK:
-        out.append("Python eval node in a non-UDF query")
+        out.append("Python node in a non-UDF query")
     if a["name"] in PUSHDOWN_REQUIRED and not a["pushed"]:
         out.append("no PushedFilters on a filter query")
     for tbl, ncols in a["scans"]:
@@ -199,7 +213,8 @@ def main() -> int:
         f"Audited at `{sf_dir}` by `tools/audit_plans.py`; regenerate after",
         "any plan-shaping change. Columns: parquet scans (table:cols-read),",
         "shuffle exchanges, broadcast-hash / sort-merge / nested-loop joins,",
-        "Python eval nodes, whole-stage-codegen spans, scan pushdown.",
+        "Python nodes (eval and Python-row scans), whole-stage-codegen spans,",
+        "scan pushdown.",
         "",
         "| query | scans | xchg | BHJ | SMJ | BNLJ | py | wscg | pushed | violations |",
         "|---|---|---|---|---|---|---|---|---|---|",
