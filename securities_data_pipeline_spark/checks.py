@@ -50,39 +50,24 @@ class CheckResult:
 # structural validation (pandera-schema parity)
 
 
-def validate_schema(
-    df: DataFrame,
-    schema: T.StructType,
-    *,
-    coerce: bool = True,
-    allow_extra: bool = True,
-) -> DataFrame:
+def validate_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
     """Structural validate + coerce against a declared StructType.
 
     Collects *all* problems (missing columns, un-coercible types,
     null-constraint breaches) then raises ``SchemaErrors`` — matching
     pandera's lazy validation. On success returns the DataFrame cast to
-    the declared types with columns in schema order (pandera
-    ``coerce=True`` semantics, py_pipeline/validate.py).
+    the declared types with columns in schema order and extra columns
+    dropped (pandera ``coerce=True`` semantics, py_pipeline/validate.py).
     """
     errors: list[str] = []
     have = {f.name for f in df.schema.fields}
     for f in schema.fields:
         if f.name not in have:
             errors.append(f"missing column: {f.name}")
-    if not allow_extra:
-        declared = {f.name for f in schema.fields}
-        for c in df.columns:
-            if c not in declared:
-                errors.append(f"unexpected column: {c}")
     if errors:
         raise SchemaErrors(errors)
 
-    out = df
-    if coerce:
-        out = out.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
-    else:
-        out = out.select(*[f.name for f in schema.fields])
+    out = df.select(*[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields])
 
     # nullability: one aggregate pass over all non-nullable columns
     required = [f.name for f in schema.fields if not f.nullable]
@@ -302,22 +287,3 @@ def quarantine_split(
     valid = tagged.where(F.size("__violations") == 0).drop("__violations")
     quarantined = tagged.where(F.size("__violations") > 0)
     return valid, quarantined
-
-
-def with_observed_counts(df, name: str, *metrics):
-    """Attach free pipeline metrics to a DataFrame: ``df.observe``
-    accumulates the given aggregate expressions DURING whatever action
-    consumes the frame — no second scan, no cached materialization.
-    The production use is load-time row/null accounting on a 100 TB
-    write, where a separate counting pass would double the job.
-
-    Returns (df, observation); read ``observation.get`` AFTER an
-    action has run. Default metrics: row count.
-    """
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation(name)
-    if not metrics:
-        metrics = (F.count(F.lit(1)).alias("n_rows"),)
-    return df.observe(obs, *metrics), obs

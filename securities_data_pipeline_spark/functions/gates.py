@@ -1,7 +1,9 @@
-"""Admission gates for the events table — the quarantine predicates a
-100 TB ingest runs before anything time- or value-sensitive touches
-the data (adversarial-events fuzz, ``tools/fuzz_events.py``; the
-vector twin is ``embedding_ok`` in ``operators/similarity.py``).
+"""Admission gates for the events and embeddings tables — the
+quarantine predicates a 100 TB ingest runs before anything time-,
+value- or distance-sensitive touches the data (adversarial fuzz,
+``tools/fuzz_events.py`` and ``tools/fuzz_embeddings.py``). Every gate
+has a Spark ``Column`` form and a byte-identical DuckDB ``SQL_*_OK``
+twin, and this module is the one place both are defined.
 
 Why this exists: the clean testdata never contains a NULL event time,
 a NaN/±inf/1e308 metric, or a year-2200 timestamp — a real
@@ -19,9 +21,9 @@ showed what each one does to an ungated engine:
   event advances the watermark past every honest window, and the whole
   stream's output is dropped as late.
 
-Two contracts, both applied IDENTICALLY to the Spark scan and the
-DuckDB oracle (``guard_events_sql`` rewrites oracle SQL at
-registration so the predicate can never drift per-query):
+Three contracts, each applied IDENTICALLY to the Spark scan and the
+DuckDB oracle (``guard_table_sql`` rewrites oracle SQL at registration
+so the predicate can never drift per-query):
 
 - ``event_ok`` — event time present and inside [1990, 2100); metric
   ``value`` either NULL (legitimate: 'error' events carry no metric)
@@ -32,6 +34,9 @@ registration so the predicate can never drift per-query):
   bound (cents in DECIMAL(12,2), EWMA cents×ppb < 2^63 needs
   price < ~4.6e6 — securities_demo.py overflow note), so a gated
   scan can never hit the loud-overflow path.
+- ``embedding_ok`` — the vector gate for the similarity, dedup and
+  curation families: exactly ``EMB_DIM`` finite, bounded components,
+  at least one of them non-zero.
 
 Queries that are garbage-proof by construction (pure equality joins,
 COUNT-only rollups, regex scans — j_asof*, g_funnel, t_pii_scan, w8)
@@ -45,8 +50,6 @@ import re
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from securities_data_pipeline_spark.sources.tables import table
 
 EVENT_TS_MIN = "1990-01-01"
 EVENT_TS_MAX = "2100-01-01"
@@ -105,6 +108,46 @@ SQL_TICK_OK = (
 )
 
 
+EMB_DIM = 64
+#: embedding sanity gate bound: real text/image embeddings are
+#: unit-ish; any component beyond ±1e6 is corrupt data (fp16 overflow,
+#: a bug upstream), and magnitudes that large overflow the decimal
+#: quantizations downstream (centroid distance Decimal(27,10)).
+EMB_MAX_ABS = 1.0e6
+
+
+def embedding_ok(col: Column) -> Column:
+    """The similarity family's admission contract, shared by every
+    sim_*/dedup_embedding_*/semdedup query (adversarial-vector fuzz,
+    tools/fuzz_embeddings.py): valid ⇔ non-NULL, exactly ``EMB_DIM``
+    components, every component finite with |x| ≤ ``EMB_MAX_ABS``, and
+    at least one non-zero component. Without the gate a SINGLE bad
+    vector in the corpus kills the whole job or poisons every ranking:
+    a zero vector makes the cosine denominator 0 (ANSI
+    DIVIDE_BY_ZERO abort), a NaN/±inf component turns dot products
+    into NaN whose sort position is engine-dependent, a 1e30
+    magnitude overflows the Decimal(27,10) distance quantization, a
+    NULL/short/long array crashes driver-side codebook training
+    (``ZeroDivisionError``/``TypeError`` — all observed in the first
+    fuzz run). At 100 TB this filter is the quarantine step an
+    embedding store runs at ingest; it is codegen'd array logic with
+    zero shuffle, and the DuckDB oracles apply the byte-identical
+    predicate (``guard_table_sql(sql, "embeddings", SQL_EMB_OK)``)."""
+    finite = F.forall(
+        col, lambda x: ~F.isnan(x) & (F.abs(x) <= F.lit(float(EMB_MAX_ABS)))
+    )
+    nonzero = F.exists(col, lambda x: x != F.lit(0.0))
+    return col.isNotNull() & (F.size(col) == EMB_DIM) & finite & nonzero
+
+
+SQL_EMB_OK = (
+    f"embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
+    f" AND list_aggregate(list_transform(embedding,"
+    f" x -> NOT isnan(x) AND abs(x) <= {EMB_MAX_ABS}), 'bool_and')"
+    f" AND len(list_filter(embedding, x -> x <> 0)) > 0"
+)
+
+
 def events_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
     """events scan through ``event_ok`` — the only way the gated
     window/session/trend queries read the table.  Since round 7 this
@@ -135,8 +178,7 @@ def ticks(spark: SparkSession, sf_dir: str) -> DataFrame:
 def guard_table_sql(sql: str, table_name: str, pred: str) -> str:
     """Rewrite an oracle so every ``FROM/JOIN <table_name>`` reference
     goes through a gated CTE with WHERE ``pred`` — applied at
-    registration so the SQL side of a gate can never drift per-query.
-    Same mechanics as ``guard_emb_sql`` (operators/similarity.py)."""
+    registration so the SQL side of a gate can never drift per-query."""
     cte_name = f"__{table_name[:4]}_gated"
     body = re.sub(rf"\b(FROM|JOIN)\s+{table_name}\b", rf"\1 {cte_name}", sql)
     cte = f"{cte_name} AS (SELECT * FROM {table_name} WHERE {pred})"

@@ -43,6 +43,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import SQL_EMB_OK, guard_table_sql
 from securities_data_pipeline_spark.functions.hashing import (
     seeded_hash64,
     sql_stable_hash64,
@@ -1229,22 +1230,19 @@ CURATION_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "t_quality_logreg": t_quality_logreg,
 }
 
-def _guard_emb(sql: str) -> str:
-    from securities_data_pipeline_spark.operators.similarity import guard_emb_sql
-
-    return guard_emb_sql(sql)
-
 
 CURATION_ORACLES: dict[str, str] = {
     "t_repetition_filter": T_REPETITION_SQL,
     "t_decontaminate": T_DECONTAMINATE_SQL,
     "t_quality_filter": T_QUALITY_FILTER_SQL,
-    "sim_kmeans_assign": _guard_emb(_sql_kmeans()),
-    "sim_cluster_sample": _guard_emb(_sql_cluster_sample()),
+    "sim_kmeans_assign": guard_table_sql(_sql_kmeans(), "embeddings", SQL_EMB_OK),
+    "sim_cluster_sample": guard_table_sql(
+        _sql_cluster_sample(), "embeddings", SQL_EMB_OK
+    ),
     "t_source_cap": T_SOURCE_CAP_SQL,
     "t_curation_funnel": T_CURATION_FUNNEL_SQL,
     "t_decontaminate_fuzzy": _sql_decontaminate_fuzzy(),
-    "dedup_semdedup": _guard_emb(_sql_semdedup()),
+    "dedup_semdedup": guard_table_sql(_sql_semdedup(), "embeddings", SQL_EMB_OK),
     "t_dsir_weights": _sql_dsir_weights(),
     "t_quality_logreg": _sql_logreg(),
 }
@@ -1348,4 +1346,6 @@ FROM av LEFT JOIN pruned p ON p.vec_id = av.vec_id
 
 
 CURATION_QUERIES["dedup_semdedup_capped"] = dedup_semdedup_capped
-CURATION_ORACLES["dedup_semdedup_capped"] = _guard_emb(_sql_semdedup_capped())
+CURATION_ORACLES["dedup_semdedup_capped"] = guard_table_sql(
+    _sql_semdedup_capped(), "embeddings", SQL_EMB_OK
+)

@@ -31,6 +31,11 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import Window
 
+from securities_data_pipeline_spark.functions.gates import (
+    EMB_DIM,
+    SQL_EMB_OK,
+    guard_table_sql,
+)
 from securities_data_pipeline_spark.sources.tables import (
     local_rows,
     materialize,
@@ -57,46 +62,6 @@ def _centroid_filter():
     )
 
 
-EMB_DIM = 64
-#: embedding sanity gate bound: real text/image embeddings are
-#: unit-ish; any component beyond ±1e6 is corrupt data (fp16 overflow,
-#: a bug upstream), and magnitudes that large overflow the decimal
-#: quantizations downstream (centroid distance Decimal(27,10)).
-EMB_MAX_ABS = 1.0e6
-
-
-def embedding_ok(col: Column) -> Column:
-    """The similarity family's admission contract, shared by every
-    sim_*/dedup_embedding_*/semdedup query (adversarial-vector fuzz,
-    tools/fuzz_embeddings.py): valid ⇔ non-NULL, exactly ``EMB_DIM``
-    components, every component finite with |x| ≤ ``EMB_MAX_ABS``, and
-    at least one non-zero component. Without the gate a SINGLE bad
-    vector in the corpus kills the whole job or poisons every ranking:
-    a zero vector makes the cosine denominator 0 (ANSI
-    DIVIDE_BY_ZERO abort), a NaN/±inf component turns dot products
-    into NaN whose sort position is engine-dependent, a 1e30
-    magnitude overflows the Decimal(27,10) distance quantization, a
-    NULL/short/long array crashes driver-side codebook training
-    (``ZeroDivisionError``/``TypeError`` — all observed in the first
-    fuzz run). At 100 TB this filter is the quarantine step an
-    embedding store runs at ingest; it is codegen'd array logic with
-    zero shuffle, and the DuckDB oracles apply the byte-identical
-    predicate (``SQL_EMB_OK`` via ``guard_emb_sql``)."""
-    finite = F.forall(
-        col, lambda x: ~F.isnan(x) & (F.abs(x) <= F.lit(float(EMB_MAX_ABS)))
-    )
-    nonzero = F.exists(col, lambda x: x != F.lit(0.0))
-    return col.isNotNull() & (F.size(col) == EMB_DIM) & finite & nonzero
-
-
-SQL_EMB_OK = (
-    f"embedding IS NOT NULL AND len(embedding) = {EMB_DIM}"
-    f" AND list_aggregate(list_transform(embedding,"
-    f" x -> NOT isnan(x) AND abs(x) <= {EMB_MAX_ABS}), 'bool_and')"
-    f" AND len(list_filter(embedding, x -> x <> 0)) > 0"
-)
-
-
 def emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """embeddings scan through the ``embedding_ok`` sanity gate — the
     ONLY way the similarity family reads the table (f_array_stats
@@ -109,25 +74,6 @@ def emb_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     return validated_embeddings(spark, sf_dir)
-
-
-def guard_emb_sql(sql: str) -> str:
-    """Rewrite an oracle so every ``embeddings`` reference goes through
-    the same sanity gate as ``emb_table``: references become a ``__emb``
-    CTE selecting ``WHERE SQL_EMB_OK``. Applied at registration to every
-    similarity-family oracle so the gate can never drift per-query."""
-    import re
-
-    body = re.sub(r"\b(FROM|JOIN)\s+embeddings\b", r"\1 __emb", sql)
-    cte = f"__emb AS (SELECT * FROM embeddings WHERE {SQL_EMB_OK})"
-    stripped = body.lstrip()
-    lead = body[: len(body) - len(stripped)]
-    if stripped.upper().startswith("WITH RECURSIVE"):
-        n = len("WITH RECURSIVE")
-        return f"{lead}WITH RECURSIVE {cte},{stripped[n:]}"
-    if stripped.upper().startswith("WITH"):
-        return f"{lead}WITH {cte},{stripped[4:]}"
-    return f"{lead}WITH {cte}\n{stripped}"
 
 
 def _dot_expr(a: str, b: str) -> str:
@@ -1697,7 +1643,7 @@ SIMILARITY_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
 }
 
 SIMILARITY_ORACLES: dict[str, str] = {
-    name: guard_emb_sql(sql)
+    name: guard_table_sql(sql, "embeddings", SQL_EMB_OK)
     for name, sql in {
         "sim_bruteforce_topk": SIM_BRUTEFORCE_SQL,
         "sim_range_search": SIM_RANGE_SQL,
@@ -1794,7 +1740,9 @@ WHERE rank = 1 OR rank BETWEEN {HN_SKIP + 1} AND {HN_SKIP + HN_K}
 """
 
 SIMILARITY_QUERIES["sim_hard_negatives"] = sim_hard_negatives
-SIMILARITY_ORACLES["sim_hard_negatives"] = guard_emb_sql(SIM_HARD_NEG_SQL)
+SIMILARITY_ORACLES["sim_hard_negatives"] = guard_table_sql(
+    SIM_HARD_NEG_SQL, "embeddings", SQL_EMB_OK
+)
 
 
 def sim_ivf_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1852,7 +1800,9 @@ FROM counts ORDER BY centroid_id
 """
 
 SIMILARITY_QUERIES["sim_ivf_balance"] = sim_ivf_balance
-SIMILARITY_ORACLES["sim_ivf_balance"] = guard_emb_sql(SIM_IVF_BALANCE_SQL)
+SIMILARITY_ORACLES["sim_ivf_balance"] = guard_table_sql(
+    SIM_IVF_BALANCE_SQL, "embeddings", SQL_EMB_OK
+)
 
 
 KMEANS_ROUNDS = 3  # Lloyd iterations; convergence data in SCALE.md
@@ -2179,7 +2129,9 @@ FROM fin ORDER BY centroid_id, pos"""
 
 
 SIMILARITY_QUERIES["sim_kmeans_train"] = sim_kmeans_train
-SIMILARITY_ORACLES["sim_kmeans_train"] = guard_emb_sql(_sql_kmeans_train())
+SIMILARITY_ORACLES["sim_kmeans_train"] = guard_table_sql(
+    _sql_kmeans_train(), "embeddings", SQL_EMB_OK
+)
 
 
 def _ivf_roster_report(
@@ -2421,8 +2373,8 @@ FROM bstat_{tag} b CROSS JOIN hit_{tag} h CROSS JOIN nex n"""
 
 
 SIMILARITY_QUERIES["sim_ivf_retrain_recall"] = sim_ivf_retrain_recall
-SIMILARITY_ORACLES["sim_ivf_retrain_recall"] = guard_emb_sql(
-    _sql_ivf_retrain_recall()
+SIMILARITY_ORACLES["sim_ivf_retrain_recall"] = guard_table_sql(
+    _sql_ivf_retrain_recall(), "embeddings", SQL_EMB_OK
 )
 
 
@@ -2714,7 +2666,9 @@ FROM fin ORDER BY m, c, pos"""
 
 
 SIMILARITY_QUERIES["sim_pq_train"] = sim_pq_train
-SIMILARITY_ORACLES["sim_pq_train"] = guard_emb_sql(_sql_pq_train())
+SIMILARITY_ORACLES["sim_pq_train"] = guard_table_sql(
+    _sql_pq_train(), "embeddings", SQL_EMB_OK
+)
 
 
 def _pq_codebook_report(
@@ -2963,8 +2917,8 @@ FROM hit_{tag} h CROSS JOIN nex n CROSS JOIN dst_{tag} d"""
 
 
 SIMILARITY_QUERIES["sim_pq_retrain_recall"] = sim_pq_retrain_recall
-SIMILARITY_ORACLES["sim_pq_retrain_recall"] = guard_emb_sql(
-    _sql_pq_retrain_recall()
+SIMILARITY_ORACLES["sim_pq_retrain_recall"] = guard_table_sql(
+    _sql_pq_retrain_recall(), "embeddings", SQL_EMB_OK
 )
 
 
@@ -3181,6 +3135,6 @@ ORDER BY c.n_probes
 """
 
 SIMILARITY_QUERIES["sim_ivf_probe_curve"] = sim_ivf_probe_curve
-SIMILARITY_ORACLES["sim_ivf_probe_curve"] = guard_emb_sql(
-    SIM_IVF_PROBE_CURVE_SQL
+SIMILARITY_ORACLES["sim_ivf_probe_curve"] = guard_table_sql(
+    SIM_IVF_PROBE_CURVE_SQL, "embeddings", SQL_EMB_OK
 )

@@ -48,11 +48,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import SQL_EMB_OK, guard_table_sql
 from securities_data_pipeline_spark.operators.similarity import (
     CENTROID_STRIDE,
     SQL_PQ_DONOR_PREF,
     emb_table,
-    guard_emb_sql,
     N_CENTROIDS_CAP,
     N_QUERIES,
     PQ_DSUB,
@@ -391,4 +391,8 @@ SELECT query_id, rank, vec_id, label, sim FROM (
 """
 
 IVFPQ_QUERIES = {"sim_ivfpq_rerank_topk": sim_ivfpq_rerank_topk}
-IVFPQ_ORACLES = {"sim_ivfpq_rerank_topk": guard_emb_sql(SIM_IVFPQ_RERANK_SQL)}
+IVFPQ_ORACLES = {
+    "sim_ivfpq_rerank_topk": guard_table_sql(
+        SIM_IVFPQ_RERANK_SQL, "embeddings", SQL_EMB_OK
+    )
+}

@@ -323,10 +323,7 @@ def m_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     exception), column-pruned to just the gate inputs; the union is
     two 1-row aggregates. Flat at any scale.
     """
-    from securities_data_pipeline_spark.functions.gates import event_ok
-    from securities_data_pipeline_spark.operators.similarity import (
-        embedding_ok,
-    )
+    from securities_data_pipeline_spark.functions.gates import embedding_ok, event_ok
 
     def split_counts(df: DataFrame, gate, name: str) -> DataFrame:
         admitted = F.coalesce(gate, F.lit(False))
@@ -362,8 +359,7 @@ def m_quarantine_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _sql_quarantine_report() -> str:
-    from securities_data_pipeline_spark.functions.gates import SQL_EVENT_OK
-    from securities_data_pipeline_spark.operators.similarity import SQL_EMB_OK
+    from securities_data_pipeline_spark.functions.gates import SQL_EMB_OK, SQL_EVENT_OK
 
     def one(tbl: str, pred: str) -> str:
         return f"""

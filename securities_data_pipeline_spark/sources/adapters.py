@@ -27,8 +27,8 @@ Placement of work:
   on the driver.
 
 ``wide_bars_to_long`` is the package's one wide→long kernel: this
-fetch, ``datasource_v2``'s live mode and ``wide_csv`` melt through it,
-so every price source hands ``transform_prices`` the same long bars.
+fetch and ``wide_csv`` melt through it, so every price source hands
+``transform_prices`` the same long bars.
 It does no ``dropna``: like ``future_stack=True`` it keeps a live
 ticker's all-NaN day, which ``fct_prices``' forward-fill then fills;
 ``transform_prices`` prunes tickers that have no value at all.

@@ -94,36 +94,3 @@ def fetch_prices_distributed(
                 yield fetch_batch(pdf["symbol"].tolist())
 
     return sym_df.mapInPandas(fetch, schema=schema)
-
-
-def price_history_dsv2_source(
-    spark: SparkSession,
-    *,
-    symbols: list[str] | None = None,
-    start_date: str = "2024-01-02",
-    end_date: str = "2024-01-31",
-    batch_size: int = 500,
-    **_,
-) -> DataFrame:
-    """S4 third form: the market-data fetch as a registered Spark 4
-    Python DataSource (``spark.read.format("market_prices")``) — the
-    symbol-batch partitioning is planned by Spark's source machinery
-    instead of a mapInPandas repartition. See sources/datasource_v2.py.
-    """
-    from securities_data_pipeline_spark.sources.datasource_v2 import (
-        register_market_source,
-    )
-
-    if not register_market_source(spark):  # pragma: no cover - Spark < 4
-        raise RuntimeError("Python DataSource API requires Spark >= 4")
-    return (
-        spark.read.format("market_prices")
-        .option("symbols", ",".join(symbols or []))
-        .option("start", start_date)
-        .option("end", end_date)
-        .option("batch_size", str(batch_size))
-        .load()
-    )
-
-
-register_source("price_history", "dsv2", price_history_dsv2_source)

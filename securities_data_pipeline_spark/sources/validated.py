@@ -18,13 +18,11 @@ automatically.  Materialization is write-once / read-many with an
 atomic ``os.rename`` commit, so concurrent sessions race benignly
 (first writer wins, losers read the winner's store).
 
-The per-read gates in ``functions/gates.py`` / ``embedding_ok`` stay
-as the documented defense for ad-hoc scans of unvalidated paths, and
-``SPARK_GRAFT_GATE_MODE=read`` forces that behavior everywhere (used
-by the gate-cost A/B and as an escape hatch on read-only filesystems —
-any failure during materialization, filesystem OR Spark-side, also
-falls back to the per-read gate instead of failing the query, after
-removing its staging dir).
+The per-read gates in ``functions/gates.py`` stay as the documented
+defense for ad-hoc scans of unvalidated paths, and the store falls
+back to them by itself: any failure during materialization, filesystem
+(a read-only filesystem included) OR Spark-side, gives the per-read
+gate instead of failing the query, after removing its staging dir.
 
 At cluster scale the equivalent is the ingest job writing the
 validated Delta table and queries scanning it; the oracle side keeps
@@ -46,6 +44,7 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import embedding_ok, event_ok
 from securities_data_pipeline_spark.sources.tables import table
 
 #: bump when any admission predicate changes — stale stores must not
@@ -53,8 +52,6 @@ from securities_data_pipeline_spark.sources.tables import table
 GATE_VERSION = 1
 
 _CLEAN_ROOT_ENV = "SPARK_GRAFT_CLEAN_DIR"
-_MODE_ENV = "SPARK_GRAFT_GATE_MODE"  # "write" (default) | "read"
-_GC_GRACE_ENV = "SPARK_GRAFT_CLEAN_GC_GRACE_SEC"
 
 #: GC only prunes stores this old (seconds). A sibling store younger
 #: than the grace window may still back a concurrent session's LAZY
@@ -62,7 +59,7 @@ _GC_GRACE_ENV = "SPARK_GRAFT_CLEAN_GC_GRACE_SEC"
 #: a just-superseded store fails that in-flight query with
 #: FileNotFoundException rather than "re-materializing on next touch"
 #: (only the NEXT validated_table call re-materializes).
-GC_GRACE_SEC = 3600
+GRACE_SEC = 3600
 
 #: minimal grace that survives even past the sibling hard cap (ADVICE
 #: r9: unconditional deletion re-opened the action-time hazard for
@@ -78,7 +75,7 @@ _staging_seq = itertools.count()
 #: the driver self-documents WHICH gate mode its timings ran under —
 #: "hit" (store already materialized: the 15-25% per-read gate cost is
 #: absent), "materialize" (this session paid the one-time write), or
-#: "per-read" (read mode / fallback: every scan re-runs the gate).
+#: "per-read" (fallback: every scan re-runs the gate).
 _observed_modes: set[tuple[str, str, str]] = set()
 _observed_lock = threading.Lock()
 
@@ -98,14 +95,8 @@ def _observe(name: str, key: str, mode: str) -> None:
 
 def _gate_column(name: str):
     if name == "events":
-        from securities_data_pipeline_spark.functions.gates import event_ok
-
         return event_ok()
     if name == "embeddings":
-        from securities_data_pipeline_spark.operators.similarity import (
-            embedding_ok,
-        )
-
         return embedding_ok(F.col("embedding"))
     raise ValueError(f"no admission gate defined for table {name!r}")
 
@@ -215,15 +206,6 @@ def _materialize(spark: SparkSession, sf_dir: str, name: str, dest: str) -> None
     _gc_stale_stores(name, keep=dest)
 
 
-def _gc_grace_sec() -> float:
-    """GC grace age, env-overridable (maintenance jobs that KNOW no
-    concurrent reader exists can set 0 to reclaim space immediately)."""
-    try:
-        return float(os.environ.get(_GC_GRACE_ENV, GC_GRACE_SEC))
-    except ValueError:
-        return GC_GRACE_SEC
-
-
 def _tree_max_mtime(path: str) -> float:
     """Newest mtime anywhere under ``path`` (the dir itself included).
     A staging dir's TOP-LEVEL mtime does not advance while Spark is
@@ -275,7 +257,7 @@ def _gc_stale_stores(
     the same grace window, judged by the NEWEST mtime in their tree
     (``_tree_max_mtime``) so an in-flight write is never "abandoned"."""
     if grace_sec is None:
-        grace_sec = _gc_grace_sec()
+        grace_sec = GRACE_SEC
     root = clean_root()
     now = time.time()
     try:
@@ -314,8 +296,8 @@ def _store_dir(sf_dir: str, name: str) -> str:
 
 def validated_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Scan the admission-gated clean store for ``name``, materializing
-    it on first touch.  Falls back to the per-read gate when
-    ``SPARK_GRAFT_GATE_MODE=read`` or the store cannot be written."""
+    it on first touch.  Falls back to the per-read gate when the store
+    cannot be written."""
     if name == "events":
         # clean-store ts is already µs TIMESTAMP, but every downstream
         # consumer assumes UTC session semantics — pin exactly as the
@@ -325,9 +307,6 @@ def validated_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         )
 
         pin_event_session_confs(spark)
-    if os.environ.get(_MODE_ENV, "write") == "read":
-        _observe(name, "env", "per-read (GATE_MODE=read)")
-        return table(spark, sf_dir, name).where(_gate_column(name))
     try:
         dest = _store_dir(sf_dir, name)
         key = os.path.basename(dest).split("-")[-1]
@@ -368,7 +347,7 @@ def quarantined_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     qpath = os.path.join(dest, "quarantine")
     if os.path.isdir(qpath) and _owned_by_me(dest):
         return spark.read.parquet(qpath)
-    # read-mode / fallback: compute the complement on the fly
+    # fallback: compute the complement on the fly
     gate = _gate_column(name)
     return table(spark, sf_dir, name).where(~F.coalesce(gate, F.lit(False)))
 

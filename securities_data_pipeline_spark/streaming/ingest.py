@@ -32,6 +32,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.functions.gates import SQL_EMB_OK, guard_table_sql
 from securities_data_pipeline_spark.sources.tables import table
 
 #: transformWithStateInPandas needs protobuf for its state-server
@@ -112,7 +113,6 @@ def events_stream_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 def run_to_memory(
     df: DataFrame,
     output_mode: str,
-    state_partitions: int | None = None,
     stop_after_batches: int | None = None,
 ) -> DataFrame:
     """Execute a streaming DataFrame with AvailableNow into a memory
@@ -133,8 +133,7 @@ def run_to_memory(
     the stream finishes.
     """
     spark = df.sparkSession
-    if state_partitions is None:
-        state_partitions = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
+    state_partitions = int(os.environ.get("SPARK_GRAFT_STREAM_PARTITIONS", "8"))
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     # memory sinks hold their full materialized result in the driver
@@ -1217,10 +1216,10 @@ def s_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream reads through the same ``embedding_ok`` admission predicate
     the batch ingest applies at write time (a stream IS an ingest
     point)."""
+    from securities_data_pipeline_spark.functions.gates import embedding_ok
     from securities_data_pipeline_spark.operators.similarity import (
         _assign_literal,
         _collect_centroid_rows,
-        embedding_ok,
         emb_table,
     )
 
@@ -1268,18 +1267,12 @@ SELECT vec_id, centroid_id, csim FROM assigned WHERE r = 1
 STREAMING_QUERIES["s_stream_ivf_assign"] = s_stream_ivf_assign
 
 
-def _guarded_ivf_assign_sql() -> str:
-    # the Spark side reads the stream through embedding_ok (a stream IS
-    # an ingest point); inject the identical predicate into the oracle
-    # exactly as every batch similarity oracle gets it
-    from securities_data_pipeline_spark.operators.similarity import (
-        guard_emb_sql,
-    )
-
-    return guard_emb_sql(_sql_stream_ivf_assign())
-
-
-STREAMING_ORACLES["s_stream_ivf_assign"] = _guarded_ivf_assign_sql()
+# the Spark side reads the stream through embedding_ok (a stream IS an
+# ingest point); the oracle gets the identical predicate exactly as
+# every batch similarity oracle does
+STREAMING_ORACLES["s_stream_ivf_assign"] = guard_table_sql(
+    _sql_stream_ivf_assign(), "embeddings", SQL_EMB_OK
+)
 
 
 # every event-fed streaming query reads through the ``event_ok`` gate in

@@ -45,12 +45,6 @@ def test_validate_null_constraint(spark):
         validate_schema(df, SCHEMA)
 
 
-def test_validate_strict_mode_rejects_extras(spark):
-    df = spark.createDataFrame([("A", 1.0, 9)], "symbol string, price double, extra int")
-    with pytest.raises(SchemaErrors, match="unexpected column: extra"):
-        validate_schema(df, SCHEMA, allow_extra=False)
-
-
 def test_row_checks(spark):
     df = spark.createDataFrame(
         [("A", "FX"), ("A", "Stock"), ("B", None), ("C", "Bond")],
@@ -105,25 +99,6 @@ def test_run_checks_raises_with_all_failures(spark):
     df = spark.createDataFrame([("A",), ("A",)], "symbol string")
     with pytest.raises(SchemaErrors, match="unique"):
         run_checks({"t": df}, [("t", "unique", "symbol")], raise_on_failure=True)
-
-
-def test_observed_counts_piggyback_on_action(spark):
-    """df.observe metrics accumulate during the consuming action —
-    row + null accounting with zero extra scans."""
-    from pyspark.sql import functions as F
-
-    from securities_data_pipeline_spark.checks import with_observed_counts
-
-    df = spark.createDataFrame(
-        [("A", 1.0), (None, 2.0), ("C", None)], "symbol string, price double"
-    )
-    observed, obs = with_observed_counts(
-        df, "load_metrics",
-        F.count(F.lit(1)).alias("n_rows"),
-        F.sum(F.col("symbol").isNull().cast("long")).alias("null_symbols"),
-    )
-    assert observed.count() == 3  # the action that drives the metrics
-    assert obs.get == {"n_rows": 3, "null_symbols": 1}
 
 
 STAR_SUITE = [

@@ -98,6 +98,70 @@ def test_overlap_is_the_only_thread_construction():
     assert not sites, f"threads constructed outside overlap: {sites}"
 
 
+#: every environment variable the package reads: deployment settings
+#: (master, CPUs, memory, partitions) and scratch paths, nothing that
+#: picks between two code paths the program could choose itself
+ENV_READS = {
+    "SPARK_GRAFT_CHECKPOINT_DIR",
+    "SPARK_GRAFT_CLEAN_DIR",
+    "SPARK_GRAFT_CPUS",
+    "SPARK_GRAFT_DRIVER_MEM",
+    "SPARK_GRAFT_MASTER",
+    "SPARK_GRAFT_MATERIALIZE",
+    "SPARK_GRAFT_SHUFFLE_PARTITIONS",
+    "SPARK_GRAFT_STREAM_CKPT",
+    "SPARK_GRAFT_STREAM_PARTITIONS",
+}
+
+
+def _is_os_environ(node: ast.AST) -> bool:
+    return (
+        isinstance(node, ast.Attribute)
+        and node.attr == "environ"
+        and isinstance(node.value, ast.Name)
+        and node.value.id == "os"
+    )
+
+
+def test_env_reads_are_the_declared_set():
+    """The package's env-var surface is pinned: a new ``os.environ.get``,
+    ``os.getenv`` or ``os.environ[...]`` read, with a literal key or a
+    module-level string constant, fails here until it is declared."""
+    pkg = pathlib.Path(securities_data_pipeline_spark.__file__).parent
+    keys = set()
+    for path in sorted(pkg.rglob("*.py")):
+        rel = path.relative_to(pkg).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        consts = {
+            t.id: node.value.value
+            for node in tree.body
+            if isinstance(node, ast.Assign) and isinstance(node.value, ast.Constant)
+            for t in node.targets
+            if isinstance(t, ast.Name)
+        }
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute) and (
+                (node.func.attr == "get" and _is_os_environ(node.func.value))
+                or (
+                    node.func.attr == "getenv"
+                    and isinstance(node.func.value, ast.Name)
+                    and node.func.value.id == "os"
+                )
+            ):
+                key = node.args[0] if node.args else None
+            elif isinstance(node, ast.Subscript) and _is_os_environ(node.value):
+                key = node.slice
+            else:
+                continue
+            if isinstance(key, ast.Constant):
+                keys.add(key.value)
+            elif isinstance(key, ast.Name) and key.id in consts:
+                keys.add(consts[key.id])
+            else:
+                keys.add(f"<unresolved key at {rel}:{node.lineno}>")
+    assert keys == ENV_READS
+
+
 def _overlap_threads() -> list[threading.Thread]:
     return [t for t in threading.enumerate() if t.name.startswith(OVERLAP_THREAD_PREFIX)]
 

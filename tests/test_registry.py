@@ -131,6 +131,33 @@ def test_price_history_adapter_long_rows_and_failed_symbols(spark):
     assert transform_prices(bars, "sp_stocks").count() == 4  # DEAD pruned
 
 
+def test_price_history_adapter_failed_batch_surfaces_in_failed_symbols(spark):
+    """A vendor error fails only its own batch: that batch's symbols
+    come back through ``failed_symbols`` and the other batch loads
+    (extract.py:110-137)."""
+    from securities_data_pipeline_spark.sources.adapters import failed_symbols
+
+    def _flaky_yf_download(symbols, start, end):
+        if "BAD" in symbols:
+            raise ConnectionError("vendor timeout")
+        dates = pd.to_datetime(["2025-01-01", "2025-01-02"])
+        fields = ["Open", "High", "Low", "Close", "Volume"]
+        cols = pd.MultiIndex.from_product([fields, symbols], names=["Price", "Ticker"])
+        data = {(f_, s): [1.0, 2.0] for f_ in fields for s in symbols}
+        return pd.DataFrame(data, index=dates, columns=cols).rename_axis("Date")
+
+    symbols = ["AAA", "BBB", "CCC", "BAD"]
+    bars = extract(
+        spark, "price_history", "sp_stocks",
+        symbols=symbols, downloader=_flaky_yf_download, batch_size=2,
+    )
+    loaded = {r.symbol for r in bars.collect()}
+    failed = {r.symbol for r in failed_symbols(spark, symbols, bars).collect()}
+    assert "BAD" in failed and loaded and not loaded & failed
+    assert loaded | failed == set(symbols)
+    assert bars.count() == 2 * len(loaded)
+
+
 def test_price_history_adapter_keeps_a_live_tickers_missing_day(spark):
     """A live ticker's all-NaN day survives the melt and the transform
     (the reference's future_stack keeps it), so the lake holds the row

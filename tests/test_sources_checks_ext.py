@@ -186,106 +186,3 @@ def test_wide_read_multi_split_matches_one_split(spark, tmp_path):
     assert many_splits[2] == one_split[2]
     kept = {r[1] for r in one_split[2]}
     assert "LATE" in kept and "DEAD" not in kept and len(one_split[2]) == 12 * days
-
-
-class TestMarketDataSourceV2:
-    def test_read_partitioned_deterministic(self, spark):
-        from securities_data_pipeline_spark.sources.registry import extract
-
-        df = extract(
-            spark, "price_history", "dsv2",
-            symbols=["AAPL", "MSFT", "GOOG"],
-            start_date="2024-01-02", end_date="2024-01-10", batch_size=2,
-        )
-        rows = df.collect()
-        # 7 weekdays in the range x 3 symbols
-        assert len(rows) == 21
-        assert df.rdd.getNumPartitions() == 2  # ceil(3 / batch_size=2)
-        again = extract(
-            spark, "price_history", "dsv2",
-            symbols=["AAPL", "MSFT", "GOOG"],
-            start_date="2024-01-02", end_date="2024-01-10", batch_size=2,
-        ).collect()
-        assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
-
-    def test_bars_are_vendor_shaped(self, spark):
-        from pyspark.sql import functions as F
-
-        from securities_data_pipeline_spark.sources.registry import extract
-
-        df = extract(
-            spark, "price_history", "dsv2",
-            symbols=["X1", "X2"], start_date="2024-03-04", end_date="2024-03-08",
-        )
-        assert df.columns == [
-            "date_stamp", "symbol", "open", "high", "low", "close", "volume",
-        ]
-        bad = df.where(
-            (F.col("high") < F.greatest("open", "close"))
-            | (F.col("low") > F.least("open", "close"))
-            | (F.col("low") <= 0)
-            | (F.col("volume") <= 0)
-        ).count()
-        assert bad == 0
-        # weekdays only, like the vendor
-        assert df.where(F.dayofweek("date_stamp").isin(1, 7)).count() == 0
-
-    def test_empty_symbols_rejected(self, spark):
-        import pytest
-
-        from securities_data_pipeline_spark.sources.registry import extract
-
-        with pytest.raises(Exception, match="symbols"):
-            extract(
-                spark, "price_history", "dsv2", symbols=[],
-            ).collect()
-
-
-class TestMarketTicksStream:
-    OPTS = dict(symbols="AAPL,MSFT", start="2024-01-02", end="2024-01-12")
-
-    def test_stream_drains_range_and_matches_batch(self, spark):
-        from pyspark.sql import functions as F
-
-        from securities_data_pipeline_spark.sources.datasource_v2 import (
-            register_market_source,
-            register_market_ticks,
-        )
-        from securities_data_pipeline_spark.streaming.ingest import run_to_memory
-
-        assert register_market_ticks(spark) and register_market_source(spark)
-
-        def rollup(df):
-            return df.groupBy("symbol").agg(
-                F.count(F.lit(1)).alias("n_bars"),
-                F.min("date_stamp").alias("first_day"),
-                F.max("date_stamp").alias("last_day"),
-            )
-
-        stream = spark.readStream.format("market_ticks").options(**self.OPTS).load()
-        got = sorted(map(tuple, run_to_memory(rollup(stream), "complete").collect()))
-        batch = spark.read.format("market_prices").options(**self.OPTS).load()
-        want = sorted(map(tuple, rollup(batch).collect()))
-        assert got == want
-        # 9 trading days in the range
-        assert all(r[1] == 9 for r in got)
-
-    def test_poll_cap_bounds_each_offset_step(self, spark):
-        from securities_data_pipeline_spark.sources.datasource_v2 import (
-            MarketTicksStreamReader,
-        )
-
-        r = MarketTicksStreamReader({**self.OPTS, "max_days_per_poll": "2"})
-        off = r.initialOffset()
-        steps = 0
-        while True:
-            rows, nxt = r.read(off)
-            rows = list(rows)
-            if nxt == off:
-                assert rows == []
-                break
-            assert len(rows) <= 2 * 2  # 2 days x 2 symbols per poll
-            off = nxt
-            steps += 1
-        assert steps == 5  # ceil(9 days / 2 per poll)
-        assert off == {"day_index": 9}

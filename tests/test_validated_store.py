@@ -22,7 +22,6 @@ def scratch(tmp_path, monkeypatch):
     """Isolated sf_dir with a small pathological events table, and an
     isolated clean root so tests never share store state."""
     monkeypatch.setenv("SPARK_GRAFT_CLEAN_DIR", str(tmp_path / "clean"))
-    monkeypatch.delenv("SPARK_GRAFT_GATE_MODE", raising=False)
     return str(tmp_path)
 
 
@@ -84,12 +83,16 @@ def test_store_invalidates_on_raw_rewrite(spark, scratch):
     assert V.validated_events(spark, scratch).count() == 2  # gate holds
 
 
-def test_read_mode_matches_write_mode(spark, scratch, monkeypatch):
+def test_read_mode_matches_write_mode(spark, scratch):
+    """The clean store holds exactly the rows the per-read gate (the
+    store's fallback) admits from the raw table."""
+    from securities_data_pipeline_spark.sources.tables import table
+
     _write_events(spark, scratch, _rows(spark, GOOD + BAD))
     w = {tuple(r) for r in V.validated_events(spark, scratch).collect()}
-    monkeypatch.setenv("SPARK_GRAFT_GATE_MODE", "read")
-    r = {tuple(r) for r in V.validated_events(spark, scratch).collect()}
-    assert w == r
+    per_read = table(spark, scratch, "events").where(V._gate_column("events"))
+    r = {tuple(r) for r in per_read.collect()}
+    assert w == r and len(w) == len(GOOD)
 
 
 def test_unwritable_clean_root_falls_back(spark, scratch, monkeypatch):
@@ -157,7 +160,7 @@ def test_store_gc_bounds_clean_root(spark, scratch, monkeypatch):
     Grace age 0 here: this test is ABOUT the max_keep bound, and every
     store it creates is seconds old (the grace-window behavior is
     pinned separately below)."""
-    monkeypatch.setenv("SPARK_GRAFT_CLEAN_GC_GRACE_SEC", "0")
+    monkeypatch.setattr(V, "GRACE_SEC", 0)
     for i in range(7):
         _write_events(
             spark, scratch, _rows(spark, GOOD + GOOD[:1] * i)
@@ -319,7 +322,6 @@ def test_gc_hard_cap_prunes_runaway_root_within_grace(tmp_path, monkeypatch):
     the minimal leash."""
     root = tmp_path / "clean"
     monkeypatch.setenv("SPARK_GRAFT_CLEAN_DIR", str(root))
-    monkeypatch.delenv("SPARK_GRAFT_CLEAN_GC_GRACE_SEC", raising=False)
     root.mkdir()
     import time as _t
 
@@ -352,7 +354,6 @@ def test_gc_hard_cap_keeps_minimal_grace(tmp_path, monkeypatch):
     pruned, however far past the hard cap the root has grown."""
     root = tmp_path / "clean"
     monkeypatch.setenv("SPARK_GRAFT_CLEAN_DIR", str(root))
-    monkeypatch.delenv("SPARK_GRAFT_CLEAN_GC_GRACE_SEC", raising=False)
     root.mkdir()
     import time as _t
 
@@ -379,7 +380,7 @@ def test_gc_staging_alive_by_subtree_mtime(tmp_path, monkeypatch):
     whose whole tree is old must be reaped."""
     root = tmp_path / "clean"
     monkeypatch.setenv("SPARK_GRAFT_CLEAN_DIR", str(root))
-    monkeypatch.setenv("SPARK_GRAFT_CLEAN_GC_GRACE_SEC", "3600")
+    monkeypatch.setattr(V, "GRACE_SEC", 3600)
     root.mkdir()
     import time as _t
 
