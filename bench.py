@@ -1,9 +1,10 @@
 """Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line: {"metric": ..., "value": total_sec, "unit":
-"sec", "queries": {name: sec}, "sf": ...}. Each query executes to
-completion (collect or count — full materialization, no caching
-between queries).
+Prints the full record as one JSON line: {"metric": ..., "value":
+total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}, then a
+compact summary as the final line. Each query executes to completion
+(collect or count — full materialization, no caching between
+queries).
 
 Protocol (BASELINE.md §bench-protocol): after an untimed sf0.001
 warm-up of every query (JITs whole-stage codegen per plan shape),
@@ -11,7 +12,8 @@ each query runs REPEATS(=3) times at the target sf and the reported
 per-query number is the MEDIAN — container scheduling noise was
 measured at ±10-15% per single run, larger than real round-over-round
 deltas, so single-shot timings could not distinguish a regression
-from noise. `value` is the sum of the medians.
+from noise. `value` is the sum of the medians. The record holds raw
+medians only: compare it with a run taken on the same machine.
 """
 
 from __future__ import annotations
@@ -23,127 +25,6 @@ import sys
 import time
 
 REPEATS = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-CANARY_REPEATS = max(REPEATS, 5)  # canaries are sub-second → noisier
-
-# ---------------------------------------------------------------------------
-# Drift canary (VERDICT r4 #1): round-over-round bench numbers come from
-# different container conditions (r4 measured a uniform ~1.2× slowdown on
-# UNTOUCHED queries), so raw cross-round ratios can neither prove a
-# regression nor an improvement. The canary measures the container itself:
-# three FROZEN-FOREVER query implementations — inline copies pinned at
-# their round-3 plan shape, deliberately NOT imported from the live
-# registry so later registry changes cannot move them — timed against
-# their round-3 driver measurements. `canary_ratio` (median of the three
-# current/reference ratios) estimates this run's container speed relative
-# to the r3 reference run; `value_canary_normalized` divides it out.
-# DO NOT EDIT the _canary_* functions or _CANARY_REF — any edit destroys
-# comparability of every past bench record.
-
-_CANARY_REF_SF = 0.1  # reference timings were taken at sf0.1
-_CANARY_REF = {  # BENCH_r03.json medians, sf0.1, driver container
-    "canary_q1": 0.268,
-    "canary_w2": 0.118,
-    "canary_a8": 0.238,
-}
-
-
-def _canary_q1(spark, sf_dir):
-    # frozen copy of q1_pricing_summary @ r3 (scan+filter+hash agg)
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    d2 = lambda c: F.col(c).cast("decimal(18,2)")  # noqa: E731
-    d4 = lambda c: F.col(c).cast("decimal(18,4)")  # noqa: E731
-    disc_price = d2("l_extendedprice") * (F.lit(1).cast("decimal(18,4)") - d4("l_discount"))
-    return (
-        li.where(F.col("l_shipdate") <= F.lit("2000-12-01").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(d2("l_quantity")).cast("double").alias("sum_qty"),
-            F.sum(d2("l_extendedprice")).cast("double").alias("sum_base_price"),
-            F.sum(disc_price).cast("double").alias("sum_disc_price"),
-            (F.sum(d2("l_quantity")).cast("double") / F.count(F.lit(1))).alias("avg_qty"),
-            (F.sum(d2("l_extendedprice")).cast("double") / F.count(F.lit(1))).alias("avg_price"),
-            F.count(F.lit(1)).alias("count_order"),
-        )
-    )
-
-
-def _canary_w2(spark, sf_dir):
-    # frozen copy of w2_moving_avg @ r3 (one shuffle + window)
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
-    orders = spark.read.parquet(os.path.join(sf_dir, "orders.parquet"))
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey").rowsBetween(-6, 0)
-    return orders.select(
-        "o_custkey",
-        "o_orderkey",
-        "o_orderdate",
-        (
-            F.sum(F.col("o_totalprice").cast("decimal(18,2)")).over(w).cast("double")
-            / F.count(F.lit(1)).over(w)
-        ).alias("ma7_totalprice"),
-    )
-
-
-def _canary_a8(spark, sf_dir):
-    # frozen copy of a8_corr_moments @ r3 (wide decimal moment agg)
-    from pyspark.sql import functions as F
-
-    li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
-    xc = (F.col("l_quantity").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
-    yc = (F.col("l_extendedprice").cast("decimal(18,2)") * 100).cast("decimal(38,0)")
-    m = li.groupBy("l_returnflag").agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(xc).alias("sx"),
-        F.sum(yc).alias("sy"),
-        F.sum(xc * xc).alias("sxx"),
-        F.sum(yc * yc).alias("syy"),
-        F.sum(xc * yc).alias("sxy"),
-    )
-    n = F.col("n").cast("decimal(38,0)")
-    sx, sy = F.col("sx"), F.col("sy")
-    cov_n = (n * F.col("sxy") - sx * sy).cast("double")
-    var_x_n = (n * F.col("sxx") - sx * sx).cast("double")
-    var_y_n = (n * F.col("syy") - sy * sy).cast("double")
-    slope = cov_n / var_x_n
-    nd = F.col("n").cast("double")
-    return m.select(
-        "l_returnflag",
-        F.col("n").cast("long").alias("n"),
-        F.round(cov_n / F.sqrt(var_x_n) / F.sqrt(var_y_n), 6).alias("corr_qty_price"),
-        F.round(slope, 6).alias("beta"),
-        F.round((sy.cast("double") - slope * sx.cast("double")) / nd / F.lit(100.0), 6).alias(
-            "intercept"
-        ),
-    )
-
-
-_CANARIES = {"canary_q1": _canary_q1, "canary_w2": _canary_w2, "canary_a8": _canary_a8}
-
-
-def _run_canaries(spark, sf_dir: str, sf: float | str):
-    """Time the frozen canaries; return (timings, ratio_or_None)."""
-    timings: dict[str, float] = {}
-    ratios: list[float] = []
-    for name, fn in _CANARIES.items():
-        samples = []
-        for _ in range(CANARY_REPEATS):
-            t0 = time.time()
-            fn(spark, sf_dir).count()
-            samples.append(time.time() - t0)
-        med = round(statistics.median(samples), 3)
-        timings[name] = med
-        if sf == _CANARY_REF_SF:
-            ratios.append(med / _CANARY_REF[name])
-        print(
-            f"# {name}: median={med}s ref={_CANARY_REF[name]}s "
-            f"ratio={round(med / _CANARY_REF[name], 3)}",
-            file=sys.stderr,
-        )
-    ratio = round(statistics.median(ratios), 3) if ratios else None
-    return timings, ratio
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -343,40 +224,15 @@ def main() -> None:
                 qs[name](spark, warm_dir).count()
             except Exception as ex:  # never let warmup mask the real run
                 print(f"# warmup {name} failed: {ex}", file=sys.stderr)
-        for fn in _CANARIES.values():
-            fn(spark, warm_dir).count()
     spark.read.parquet(os.path.join(sf_dir, "region.parquet")).count()
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    canary, canary_ratio_pre = _run_canaries(spark, sf_dir, sf_val)
 
     timings: dict[str, float] = {}
-    # interleaved micro-canary (VERDICT r11 #5): the pre/post bracket
-    # cannot see a MID-battery load spike (r11's adjudication needed a
-    # separate 8-core control run to close 15 phantom regressions).
-    # Every MICRO_CANARY_EVERY headline queries, time the cheapest
-    # frozen canary (canary_w2) median-of-3 and record the ratio — a
-    # per-segment contention trace, additions-only to the record.
-    MICRO_CANARY_EVERY = 25
-    canary_mid: dict[str, float] = {}
     completed: dict[str, int] = {}
     failed: dict[str, str] = {}
-
-    def _micro_canary(seg: int) -> None:
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            _canary_w2(spark, sf_dir).count()
-            samples.append(time.time() - t0)
-        med = round(statistics.median(samples), 3)
-        ratio = round(med / _CANARY_REF["canary_w2"], 3)
-        canary_mid[f"seg{seg:02d}"] = ratio
-        print(f"# micro-canary seg{seg:02d}: w2={med}s ratio={ratio}", file=sys.stderr)
-
-    for qi, name in enumerate(HEADLINE):
-        if qi and qi % MICRO_CANARY_EVERY == 0 and sf_val == _CANARY_REF_SF:
-            _micro_canary(qi // MICRO_CANARY_EVERY)
+    for name in HEADLINE:
         samples, n, error = _time_query(spark, sf_dir, name, qs[name])
         completed[name] = len(samples)
         if error is not None:
@@ -391,17 +247,6 @@ def main() -> None:
             file=sys.stderr,
         )
 
-    # second canary pass AFTER the headline loop: a round-6 comparison
-    # of back-to-back runs showed ~1.1× uniform drift WITHIN a run that
-    # a start-of-run-only canary cannot see (the container slowed after
-    # the snapshot). The reported ratio is the mean of the pre/post
-    # ratios — bracketing the window the headline timings actually ran
-    # in; both ends are emitted so intra-run drift is itself visible.
-    canary_post, canary_ratio_post = _run_canaries(spark, sf_dir, sf_val)
-    if canary_ratio_pre and canary_ratio_post:
-        canary_ratio = round((canary_ratio_pre + canary_ratio_post) / 2, 3)
-    else:
-        canary_ratio = canary_ratio_pre or canary_ratio_post
 
     total = round(sum(timings.values()), 3)
     calib = sorted(CALIBRATION & set(timings))
@@ -432,24 +277,6 @@ def main() -> None:
         # the record lets bench_compare refuse a mismatched sidecar.
         "round": _bench_round(),
         "git_sha": _git_sha(),
-        # container-drift canary (see module comment): ratio of
-        # this run's frozen-query medians to their r3 reference;
-        # divide any cross-round comparison by it first.
-        "canary": canary,
-        "canary_mid": canary_mid,
-        "canary_post": canary_post,
-        "canary_ref": _CANARY_REF,
-        "canary_ratio_pre": canary_ratio_pre,
-        "canary_ratio_post": canary_ratio_post,
-        "canary_ratio": canary_ratio,
-        "value_canary_normalized": (
-            round(total / canary_ratio, 3) if canary_ratio else None
-        ),
-        "value_production_canary_normalized": (
-            round((total - value_calibration) / canary_ratio, 3)
-            if canary_ratio
-            else None
-        ),
     }
     print(json.dumps(record))
     path = _write_sidecar(record)
@@ -469,8 +296,6 @@ def main() -> None:
         "n_queries": len(timings),
         "n_failed": len(failed),
         "value_production": record["value_production"],
-        "canary_ratio": record["canary_ratio"],
-        "value_canary_normalized": record["value_canary_normalized"],
         "queries_sidecar": path,
     }
     print(json.dumps(summary))

@@ -8,7 +8,8 @@ user's workflow maps 1:1:
 
 - ``etl_flow`` (Prefect ingest flows) → ``Engine.run_pipeline``
 - dbt models / warehouse SQL          → ``Engine.sql`` over views
-- dbt tests                           → ``Engine.check`` helpers
+- dbt tests                           → ``Engine.run_pipeline(...).checks``
+                                        (``checks.run_checks``)
 - named queries (dashboards)          → ``Engine.query(name)``
 """
 

@@ -15,12 +15,11 @@ explicit tools for the cases AQE can't fix:
   gets a retry-deterministic salt (see ``_retry_safe_salt``), and the
   join key becomes (key, salt) — the hot key's probe rows land on
   n_salts reducers instead of one.
-- ``write_bucketed`` / bucketed reads: pre-shuffle a fact table ONCE
-  into ``n`` buckets by join key (`df.write.bucketBy`). Every later
-  equi-join/agg on that key reads co-located buckets and skips its
-  Exchange entirely — the batch analog of the reference's PK-clustered
-  warehouse tables (py_pipeline/load.py merge keys). Verified by a
-  plan test: the bucketed join has NO Exchange on the bucketed sides.
+- bucketed tables live in ``plans/bucketing.py``: pre-shuffle a fact
+  table ONCE into ``n`` buckets by join key (`df.write.bucketBy`).
+  Every later equi-join/agg on that key reads co-located buckets and
+  skips its Exchange entirely — the batch analog of the reference's
+  PK-clustered warehouse tables (py_pipeline/load.py merge keys).
 """
 
 from __future__ import annotations
@@ -145,30 +144,6 @@ def salted_join(
     big_salted = big.withColumn("_salt", _retry_safe_salt(big, n_salts))
     joined = big_salted.join(small_rep, [key, "_salt"], how)
     return joined.drop("_salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_keys: list[str],
-    n_buckets: int = 8,
-) -> None:
-    """Materialize ``df`` as a bucketed+sorted catalog table: one
-    shuffle now, zero shuffles for every later join/agg on
-    ``bucket_keys``. Thin list-of-keys adapter over the canonical
-    ``plans.bucketing.write_bucketed`` (which also documents the
-    bucket-count sizing and crash contracts)."""
-    from securities_data_pipeline_spark.plans import bucketing
-
-    bucketing.write_bucketed(df, table_name, bucket_keys, n_buckets)
-
-
-def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, key: str
-) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket key —
-    planner emits SortMergeJoin with NO Exchange on either side."""
-    return spark.table(left_table).join(spark.table(right_table), key)
 
 
 # ---------------------------------------------------------------------------

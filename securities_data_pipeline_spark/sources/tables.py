@@ -243,6 +243,30 @@ def table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
+def stream_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """``readStream`` twin of :func:`table`: the same conf pinning and
+    ts normalization for ``events``, with the schema taken from the
+    batch scan so the stream and batch reads cannot desynchronize.
+
+    Handles both landing layouts: a single ``<name>.parquet`` FILE
+    beside other tables (the testdata convention — glob-filtered so
+    sibling tables are not swept in) and a ``<name>.parquet/``
+    DIRECTORY of part files (what any Spark writer produces — a real
+    landing zone IS a directory; the glob filter would silently match
+    zero part files there, found by the embeddings fuzz sweep)."""
+    if name == "events":
+        pin_event_session_confs(spark)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    reader = spark.readStream.schema(spark.read.parquet(path).schema)
+    if os.path.isdir(path):
+        df = reader.parquet(path)
+    else:
+        df = reader.option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+    if name == "events":
+        df = normalize_event_ts(df)
+    return df
+
+
 def load_tables(
     spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
 ) -> dict[str, DataFrame]:

@@ -32,8 +32,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from securities_data_pipeline_spark.functions.gates import SQL_EMB_OK, guard_table_sql
-from securities_data_pipeline_spark.sources.tables import table
+from securities_data_pipeline_spark.functions.gates import SQL_EMB_OK, event_ok, guard_table_sql
+from securities_data_pipeline_spark.sources.tables import stream_table, table
 
 #: transformWithStateInPandas needs protobuf for its state-server
 #: protocol — uninstallable in this container (see
@@ -47,67 +47,17 @@ except Exception:  # pragma: no cover
 
 
 def events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events landing file(s), with the SAME conf
-    pinning and ns→µs/NTZ timestamp normalization as the batch scan —
-    both paths call the shared helpers in sources/tables.py, so a
-    change to the ts semantics cannot desynchronize them."""
-    from securities_data_pipeline_spark.sources.tables import (
-        normalize_event_ts,
-        pin_event_session_confs,
-    )
-
-    pin_event_session_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    batch_schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        # directory landing (what any Spark writer produces) — the glob
-        # filter below would match zero part files (see
-        # embeddings_stream, fuzz-found)
-        stream = spark.readStream.schema(batch_schema).parquet(path)
-    else:
-        stream = (
-            spark.readStream.schema(batch_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    # event_ok admission gate (functions/gates.py) AT the ingest point —
-    # exactly where a production stream quarantines garbage. The
-    # watermark hazard is streaming-specific (fuzz-found,
-    # tools/fuzz_events.py): ONE far-future event (a year-2200
-    # timestamp) advances the watermark past every honest window and
-    # the entire stream's output is silently dropped as late. NULL
-    # event times and NaN/±inf metrics are filtered for the same
-    # reasons as the batch twin queries; every streaming oracle is
-    # wrapped with the identical predicate at registration.
-    from securities_data_pipeline_spark.functions.gates import event_ok
-
-    return normalize_event_ts(stream).where(event_ok())
-
-
-def events_stream_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The PRE-gate stream: same source + ts normalization as
-    ``events_stream`` but WITHOUT the admission filter — the read the
-    streaming gate AUDIT needs (counting rejects is its job, the
-    ``m_quarantine_report`` exception). Every analytic stream keeps
-    reading through ``events_stream``; this raw face exists only for
-    the audit surface."""
-    from securities_data_pipeline_spark.sources.tables import (
-        normalize_event_ts,
-        pin_event_session_confs,
-    )
-
-    pin_event_session_confs(spark)
-    path = os.path.join(sf_dir, "events.parquet")
-    batch_schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        stream = spark.readStream.schema(batch_schema).parquet(path)
-    else:
-        stream = (
-            spark.readStream.schema(batch_schema)
-            .option("pathGlobFilter", "events.parquet")
-            .parquet(sf_dir)
-        )
-    return normalize_event_ts(stream)
+    """readStream over the events landing file(s) through the
+    ``event_ok`` admission gate (functions/gates.py) AT the ingest
+    point — exactly where a production stream quarantines garbage. The
+    watermark hazard is streaming-specific (fuzz-found,
+    tools/fuzz_events.py): ONE far-future event (a year-2200
+    timestamp) advances the watermark past every honest window and
+    the entire stream's output is silently dropped as late. NULL
+    event times and NaN/±inf metrics are filtered for the same
+    reasons as the batch twin queries; every streaming oracle is
+    wrapped with the identical predicate at registration."""
+    return stream_table(spark, sf_dir, "events").where(event_ok())
 
 
 def run_to_memory(
@@ -1038,23 +988,6 @@ STREAMING_ORACLES: dict[str, str] = {
 }
 
 
-def documents_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the documents landing file(s) — the text-corpus
-    twin of ``events_stream``: schema pinned from the batch scan so the
-    stream and batch paths cannot desynchronize. Single-file and
-    directory landing layouts both supported (see
-    ``embeddings_stream``)."""
-    path = os.path.join(sf_dir, "documents.parquet")
-    batch_schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        return spark.readStream.schema(batch_schema).parquet(path)
-    return (
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def s_stream_dedup_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental dedup — ``dedup_incremental``'s ingest
     face: the new-batch slice (doc_id % 10 == 7) arrives AS A STREAM,
@@ -1084,7 +1017,7 @@ def s_stream_dedup_vs_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     is_new = F.pmod(F.col("doc_id"), F.lit(INCR_NEW_MOD)) == INCR_NEW_REM
-    new_stream = documents_stream(spark, sf_dir).where(is_new)
+    new_stream = stream_table(spark, sf_dir, "documents").where(is_new)
     new_banded = banded_signatures(
         minhash_signatures(new_stream), LSH_BANDS
     ).select(F.col("doc_id").alias("new_id"), "band", "key")
@@ -1136,7 +1069,7 @@ def s_stream_mm_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_features,
     )
 
-    docs = documents_stream(spark, sf_dir)
+    docs = stream_table(spark, sf_dir, "documents")
     media = docs.select(
         "doc_id",
         F.lit("text/plain").alias("media_type"),
@@ -1176,27 +1109,6 @@ STREAMING_QUERIES["s_stream_mm_features"] = s_stream_mm_features
 STREAMING_ORACLES["s_stream_mm_features"] = _sql_stream_mm_features()
 
 
-def embeddings_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the embeddings landing file(s) — schema pinned
-    from the batch scan so stream and batch cannot desynchronize.
-
-    Handles both landing layouts: a single ``embeddings.parquet`` FILE
-    beside other tables (the testdata convention — glob-filtered so
-    sibling tables are not swept in) and an ``embeddings.parquet/``
-    DIRECTORY of part files (what any Spark writer produces — a real
-    landing zone IS a directory; the glob filter would silently match
-    zero part files there, found by the embeddings fuzz sweep)."""
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    batch_schema = spark.read.parquet(path).schema
-    if os.path.isdir(path):
-        return spark.readStream.schema(batch_schema).parquet(path)
-    return (
-        spark.readStream.schema(batch_schema)
-        .option("pathGlobFilter", "embeddings.parquet")
-        .parquet(sf_dir)
-    )
-
-
 def s_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming incremental ANN-index maintenance: new vectors arrive
     as a stream and each micro-batch assigns them to their nearest IVF
@@ -1226,7 +1138,7 @@ def s_stream_ivf_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     # "new" vectors = the vec_id % 10 == 7 slice (the same new-batch
     # convention as dedup_incremental) — disjoint from the centroid
     # donors (vec_id % 100 == 0) by construction
-    new_vecs = embeddings_stream(spark, sf_dir).where(
+    new_vecs = stream_table(spark, sf_dir, "embeddings").where(
         embedding_ok(F.col("embedding"))
         & (F.pmod(F.col("vec_id"), F.lit(10)) == 7)
     )
@@ -1276,7 +1188,7 @@ STREAMING_ORACLES["s_stream_ivf_assign"] = guard_table_sql(
 
 
 # every event-fed streaming query reads through the ``event_ok`` gate in
-# ``events_stream`` (see its inline note: the far-future-timestamp
+# ``events_stream`` (see its docstring: the far-future-timestamp
 # watermark hazard); wrap every oracle with the identical predicate at
 # registration. The rewrite only touches ``events`` references, so the
 # documents-fed dedup-vs-corpus oracle passes through unchanged.
@@ -1502,9 +1414,7 @@ def s_stream_quarantine_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the events row of the batch gate audit — final stream
     state ≡ batch counts over the same file, deliberately unguarded.
     """
-    from securities_data_pipeline_spark.functions.gates import event_ok
-
-    raw = events_stream_raw(spark, sf_dir)
+    raw = stream_table(spark, sf_dir, "events")
     admitted = F.coalesce(event_ok(), F.lit(False))
     agg = raw.agg(
         F.sum(F.when(admitted, 1).otherwise(0)).cast("long").alias("n_clean"),
@@ -1737,7 +1647,7 @@ def s_stream_mm_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     os.makedirs(run_dir, exist_ok=True)
     _LIVE_CARD_STATE_DIRS.append(run_dir)
 
-    meta = mm_card_stream_meta(documents_stream(spark, sf_dir))
+    meta = mm_card_stream_meta(stream_table(spark, sf_dir, "documents"))
     state_root = os.path.join(run_dir, "state")
     run_mm_card_stream(spark, meta, state_root, os.path.join(run_dir, "ckpt"))
     return mm_card_from_state(spark, state_root)

@@ -1,35 +1,43 @@
-"""The drift canary (bench.py) must stay frozen and runnable."""
+"""bench.py: the whole run end to end on tiny data, and its helpers
+(round stamp, calibration split, failed repeats, sidecar pairing)."""
 
-import statistics
+import json
 
 
-def test_canary_refs_cover_all_canaries():
+def test_bench_main_prints_summary_and_writes_sidecar(spark, monkeypatch, tmp_path, capsys):
+    """One real ``bench.main()`` over two cheap queries: the final
+    stdout line is the compact summary with exactly its fields, and
+    the sidecar is the full record with exactly its fields and both
+    per-query medians. No field normalizes against timings taken on
+    another machine."""
     import bench
+    from securities_data_pipeline_spark import session
 
-    assert set(bench._CANARY_REF) == set(bench._CANARIES)
-    assert all(v > 0 for v in bench._CANARY_REF.values())
+    # the test session, not a rebuilt one: get_spark's builder would
+    # reset this session's shuffle partitions for every later test
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(bench, "HEADLINE", ["q1_pricing_summary", "w1_ffill"])
+    monkeypatch.setattr(bench, "REPEATS", 1)
+    sidecar = tmp_path / "bench_sidecar.json"
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_SIDECAR", str(sidecar))
+    bench.main()
 
-
-def test_canaries_run_and_produce_rows(spark):
-    import bench
-
-    for name, fn in bench._CANARIES.items():
-        assert fn(spark, "/root/testdata/sf0.001").count() > 0, name
-
-
-def test_canary_ratio_math(spark, monkeypatch):
-    import bench
-
-    monkeypatch.setattr(bench, "CANARY_REPEATS", 1)
-    timings, ratio = bench._run_canaries(spark, "/root/testdata/sf0.001", 0.1)
-    assert set(timings) == set(bench._CANARY_REF)
-    expect = statistics.median(
-        timings[k] / bench._CANARY_REF[k] for k in timings
-    )
-    assert abs(ratio - expect) < 0.01
-    # at a non-reference SF the ratio is undefined, timings still emit
-    t2, r2 = bench._run_canaries(spark, "/root/testdata/sf0.001", 0.001)
-    assert r2 is None and set(t2) == set(bench._CANARY_REF)
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert set(summary) == {
+        "metric", "value", "unit", "sf", "round", "git_sha",
+        "n_queries", "n_failed", "value_production", "queries_sidecar",
+    }
+    assert summary["n_queries"] == 2 and summary["n_failed"] == 0
+    assert summary["queries_sidecar"] == str(sidecar)
+    record = json.loads(sidecar.read_text())
+    assert set(record) == {
+        "metric", "value", "unit", "queries", "repeats", "completed",
+        "failed", "stat", "sf", "calibration_queries", "value_calibration",
+        "value_production", "round", "git_sha",
+    }
+    assert set(record["queries"]) == {"q1_pricing_summary", "w1_ffill"}
+    assert record["sf"] == 0.001 and record["failed"] == {}
 
 
 def test_bench_round_env_pin(monkeypatch):

@@ -3,9 +3,12 @@ watermarked late-data handling, foreachBatch merge ingestion."""
 
 import datetime as dt
 import os
+import shutil
 
+import pytest
 from pyspark.sql import functions as F
 
+from securities_data_pipeline_spark.sources.tables import stream_table, table
 from securities_data_pipeline_spark.streaming.ingest import (
     events_stream,
     run_to_memory,
@@ -21,7 +24,6 @@ def test_daily_rollup_matches_batch(spark):
         (str(r.day), r.event_type): (r.n_events, r.sum_value)
         for r in s_stream_daily_rollup(spark, SF).collect()
     }
-    from securities_data_pipeline_spark.sources.tables import table
 
     exp = {
         (str(r.day), r.event_type): (r.n_events, r.sum_value)
@@ -34,6 +36,34 @@ def test_daily_rollup_matches_batch(spark):
         .collect()
     }
     assert got == exp
+
+
+@pytest.mark.parametrize("name", ["events", "documents", "embeddings"])
+def test_stream_table_reads_file_and_directory_landings(spark, tmp_path, name):
+    """The stream scan reads both landing layouts to the batch scan's
+    rows: a single ``<name>.parquet`` file beside a sibling table (the
+    glob filter must not sweep the sibling in) and a ``<name>.parquet/``
+    directory of part files (where that glob filter would match none)."""
+    import pyarrow.parquet as pq
+
+    src = os.path.join(SF, f"{name}.parquet")
+    file_dir = tmp_path / "file"
+    file_dir.mkdir()
+    shutil.copyfile(src, file_dir / f"{name}.parquet")
+    shutil.copyfile(os.path.join(SF, "region.parquet"), file_dir / "region.parquet")
+    dir_dir = tmp_path / "dir"
+    parts = dir_dir / f"{name}.parquet"
+    parts.mkdir(parents=True)
+    arrow = pq.read_table(src)
+    half = arrow.num_rows // 2
+    pq.write_table(arrow.slice(0, half), parts / "part-00000.parquet")
+    pq.write_table(arrow.slice(half), parts / "part-00001.parquet")
+
+    for landing in (str(file_dir), str(dir_dir)):
+        got = run_to_memory(stream_table(spark, landing, name), "append").collect()
+        want = table(spark, landing, name).collect()
+        assert len(got) == len(want) == arrow.num_rows, landing
+        assert sorted(map(tuple, got)) == sorted(map(tuple, want)), landing
 
 
 def test_stream_dedup_within_watermark(spark, tmp_path):
@@ -73,7 +103,6 @@ def test_foreach_batch_merge_idempotent_replay(spark, tmp_path):
 
 def test_stream_join_attrib_matches_batch(spark):
     from securities_data_pipeline_spark.streaming.ingest import s_stream_join_attrib
-    from securities_data_pipeline_spark.sources.tables import table
     from pyspark.sql import functions as F
 
     sf = "/root/testdata/sf0.001"
@@ -100,7 +129,6 @@ def test_stream_join_attrib_matches_batch(spark):
 
 
 def test_stream_enrich_static_matches_batch(spark):
-    from securities_data_pipeline_spark.sources.tables import table
     from securities_data_pipeline_spark.streaming.ingest import s_stream_enrich_static
 
     got = {
@@ -124,7 +152,6 @@ def test_stream_enrich_static_matches_batch(spark):
 def test_stream_enrich_static_join_is_stateless_broadcast(spark):
     """The static dimension must ride a broadcast: no shuffle of the
     stream for the join, and no stream-stream join state."""
-    from securities_data_pipeline_spark.sources.tables import table
     from securities_data_pipeline_spark.streaming.ingest import events_stream
 
     ev = events_stream(spark, SF)

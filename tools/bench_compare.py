@@ -10,10 +10,10 @@ if any regression exceeds the threshold, so a round driver or CI step
 can gate on it. Queries present in only one file (headline-set
 changes) are listed separately and never counted as regressions.
 
-When BOTH runs carry a ``canary_ratio`` (round 5+), every NEW-side
-number is rescaled by old_ratio/new_ratio before comparison, so
-container drift between the two runs is divided out and the deltas
-are code-attributable (BASELINE.md §drift-canary).
+The deltas are between raw medians, so they mean something only when
+both runs were taken on the same machine under the same load. Only
+``queries`` is read, so older records that carry extra fields load
+unchanged.
 """
 
 from __future__ import annotations
@@ -72,17 +72,6 @@ def main() -> int:
     old, new = load(sys.argv[1]), load(sys.argv[2])
     thresh = float(sys.argv[3]) if len(sys.argv) > 3 else 15.0
     oq, nq = old.get("queries", {}), new.get("queries", {})
-    o_ratio, n_ratio = old.get("canary_ratio"), new.get("canary_ratio")
-    if o_ratio and n_ratio:
-        scale = o_ratio / n_ratio
-        nq = {q: v * scale for q, v in nq.items()}
-        print(
-            f"canary-normalized: new-side numbers scaled by "
-            f"{o_ratio}/{n_ratio} = {scale:.3f} (container drift divided out)"
-        )
-    elif o_ratio or n_ratio:
-        print("# one run lacks canary_ratio — comparing RAW numbers "
-              "(drift not separable)")
     shared = sorted(set(oq) & set(nq))
     only_old, only_new = sorted(set(oq) - set(nq)), sorted(set(nq) - set(oq))
 
