@@ -1082,78 +1082,17 @@ WHERE {_sql_round6_ratio('n_shared', 'sa.n_sh + sb.n_sh - n_shared')} >= {thresh
 
 
 def connected_components(
-    edges: DataFrame, nodes: DataFrame, max_iter: int = 25
-) -> DataFrame:
-    """Min-label propagation over an undirected edge list: every node
-    ends with ``component = min(doc_id in its component)``.
-
-    The iterative driver loop Spark needs for algorithms SQL can't
-    express in one pass: each round joins current labels across edges,
-    keeps the per-node min, and stops at fixpoint (≤ graph diameter
-    rounds — near-dup clusters are small, so 2-4 in practice).
-    Every round ``localCheckpoint``s its result LAZILY: lineage is
-    truncated to O(1) per round (the classic iterative-Spark trap is a
-    plan that doubles each iteration) and nothing stays pinned after
-    the result is garbage-collected. The per-round ``changed`` count
-    below is the REQUIRED materializing action for that round's lazy
-    checkpoint — the returned DataFrame is materialized only because
-    the final round's count ran over it; an edit that removes or
-    reorders the count would silently reintroduce per-round lineage
-    re-execution. On a cluster with unreliable executors use reliable
-    ``checkpoint`` to HDFS instead.
-
-    ``edges`` columns: (doc_a, doc_b); ``nodes``: (doc_id,).
-    Output: (doc_id, component).
-    """
-    # materialize the adjacency once — every round joins against it,
-    # and an un-checkpointed edge list would re-run the whole upstream
-    # (LSH) pipeline per iteration. Checkpoints are LAZY (optimization
-    # round 11): each round's `changed` count is the action that
-    # materializes that round's state, so the eager ckpt job + count
-    # job pairs fuse into one job per round (guide §1.2 step 1 — fewer
-    # passes; values are unchanged, the same rows persist either way)
-    adj = edges.union(
-        edges.select(F.col("doc_b").alias("doc_a"), F.col("doc_a").alias("doc_b"))
-    ).transform(materialize)
-    labels = (
-        nodes.select("doc_id", F.col("doc_id").alias("component"))
-        .transform(materialize)
-    )
-    for _ in range(max_iter):
-        prop = adj.join(labels, adj.doc_b == labels.doc_id).select(
-            F.col("doc_a").alias("doc_id"), "component"
-        )
-        new_labels = (
-            labels.unionByName(prop).groupBy("doc_id").agg(F.min("component").alias("component"))
-        ).transform(materialize)
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "doc_id")
-            .where(F.col("n.component") != F.col("o.component"))
-            .count()
-        )
-        labels = new_labels
-        if changed == 0:
-            return labels
-    raise RuntimeError(
-        f"connected_components did not converge in {max_iter} iterations "
-        "(a component chain longer than max_iter exists); raise max_iter — "
-        "propagation advances one hop per round"
-    )
-
-
-def connected_components_star(
     edges: DataFrame, nodes: DataFrame, max_iter: int = 30
 ) -> DataFrame:
-    """Alternating large-star / small-star contraction (Kiveris,
+    """Connected components of an undirected edge list: every node ends
+    with ``component = min(doc_id in its component)``.
+
+    Alternating large-star / small-star contraction (Kiveris,
     Lattanzi, Mirrokni, Rastogi, Vassilvitskii — *Connected Components
     in MapReduce and Beyond*, SoCC'14): converges in O(log² n) rounds
-    **independent of graph diameter**, unlike min-label propagation
-    (``connected_components``) which needs one round per hop and so
-    degrades to O(diameter) full-label shuffles on a pathological
-    long-chain component. This is the scale-safe default for 100 TB
-    corpora; the propagation loop remains available for the small-
-    diameter near-dup clusters it was written for.
+    **independent of graph diameter**, so a long-chain component costs
+    a few rounds, not one full-label shuffle per hop, and no hop bound
+    can truncate a component.
 
     Per round, on the current edge set E (kept distinct, no
     self-loops):
@@ -1170,11 +1109,12 @@ def connected_components_star(
     payload data), and each round strictly contracts toward a star
     forest rooted at per-component minima; at the fixpoint every edge
     is ``(node, component_min)``. ``localCheckpoint`` truncates lineage
-    per round, same as the propagation loop.
+    per round (the classic iterative-Spark trap is a plan that doubles
+    each iteration); a round that does not converge within ``max_iter``
+    raises instead of returning split components.
 
     ``edges`` columns: (doc_a, doc_b); ``nodes``: (doc_id,).
-    Output: (doc_id, component) — identical contract to
-    ``connected_components``, so the same SQL oracle pins both.
+    Output: (doc_id, component).
     """
     # lazy checkpoints throughout the loop (optimization round 11):
     # the count that follows each checkpoint is the materializing
@@ -1240,9 +1180,9 @@ def connected_components_star(
             break
     else:
         raise RuntimeError(
-            f"connected_components_star did not converge in {max_iter} "
-            "rounds — at O(log² n) expected rounds this indicates a bug, "
-            "not an input property"
+            f"connected_components did not converge in {max_iter} rounds; "
+            "at the default cap and O(log² n) expected rounds this "
+            "indicates a bug, not an input property"
         )
     # at the fixpoint e is a star forest (child, component_min);
     # unmatched nodes are singleton components
@@ -1258,20 +1198,11 @@ def connected_components_star(
 
 def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: MinHash-LSH candidate pairs as edges →
-    connected components → (doc_id, component) with component = min
-    doc_id reachable. Docs with no near-dup edge are singletons."""
+    ``connected_components`` → (doc_id, component) with component =
+    min doc_id reachable. Docs with no near-dup edge are singletons."""
     docs = table(spark, sf_dir, "documents")
     edges = lsh_candidate_pairs(docs)
     return connected_components(edges, docs.select("doc_id"))
-
-
-def dedup_components_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same clustering as ``dedup_components`` through the diameter-
-    independent large-star/small-star contraction — the 100 TB path.
-    Pinned by the same recursive-CTE oracle."""
-    docs = table(spark, sf_dir, "documents")
-    edges = lsh_candidate_pairs(docs)
-    return connected_components_star(edges, docs.select("doc_id"))
 
 
 def _sql_reach_prefix() -> str:
@@ -1323,10 +1254,9 @@ def resolve_duplicates(labels: DataFrame) -> DataFrame:
 
 
 def dedup_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """End-to-end near-dedup: LSH pairs → connected components (via
-    the diameter-independent star contraction — the scale default) →
+    """End-to-end near-dedup: LSH pairs → connected components →
     keep-one survivors with per-cluster removal counts."""
-    return resolve_duplicates(dedup_components_star(spark, sf_dir))
+    return resolve_duplicates(dedup_components(spark, sf_dir))
 
 
 def _sql_resolve() -> str:
@@ -1342,10 +1272,10 @@ FROM labels GROUP BY component
 def dedup_cluster_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cluster-size histogram of the near-dup graph — the dedup-run
     report card (how much of the corpus is singleton vs small-cluster
-    vs boilerplate blob). Composes the star-contraction labels; the
+    vs boilerplate blob). Composes the component labels; the
     histogram is two tiny aggregates over (doc_id, component) pairs:
     bytes per component, then bytes per size class."""
-    labels = dedup_components_star(spark, sf_dir)
+    labels = dedup_components(spark, sf_dir)
     sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return (
         sizes.groupBy("cluster_size")
@@ -1379,10 +1309,10 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     (possibly unique) tails in the data. The reweighting alternative
     every keep-one pipeline (``dedup_resolve``) should offer.
 
-    Plan: star-contraction labels (diameter-independent), one
-    (component → size) aggregate joined back on the label — shuffles
-    (doc_id, component) pairs only. The weight ratio uses the exact
-    int64 half-up rounding shared with the quality ops.
+    Plan: component labels, one (component → size) aggregate joined
+    back on the label — shuffles (doc_id, component) pairs only. The
+    weight ratio uses the exact int64 half-up rounding shared with the
+    quality ops.
     """
     from securities_data_pipeline_spark.operators.textops import round6_ratio
 
@@ -1390,7 +1320,7 @@ def dedup_soft_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint its lineage (documents scan + roots join) executes
     # twice — at 100 TB that is two full doc-table scans for a
     # 16-byte/row label set
-    labels = dedup_components_star(spark, sf_dir).transform(materialize, eager=True)
+    labels = dedup_components(spark, sf_dir).transform(materialize, eager=True)
     sizes = labels.groupBy("component").agg(F.count(F.lit(1)).alias("cluster_size"))
     return labels.join(sizes, "component").select(
         "doc_id",
@@ -1530,66 +1460,6 @@ FROM documents d LEFT JOIN in2 ON in2.doc_id = d.doc_id CROSS JOIN n
 """
 
 
-DEDUP_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
-    "dedup_exact": dedup_exact,
-    "dedup_source_priority": dedup_source_priority,
-    "dedup_minhash_signature": dedup_minhash_signature,
-    "dedup_minhash_pairs": dedup_minhash_pairs,
-    "dedup_minhash_pairs_capped": dedup_minhash_pairs_capped,
-    "dedup_minhash_pairs_wide": dedup_minhash_pairs_wide,
-    "dedup_minhash_estimate": dedup_minhash_estimate,
-    "dedup_simhash": dedup_simhash,
-    "dedup_simhash_pairs": dedup_simhash_pairs,
-    "dedup_simhash_wide": dedup_simhash_wide,
-    "dedup_simhash_wide_capped": dedup_simhash_wide_capped,
-    "dedup_ngram_jaccard": dedup_ngram_jaccard,
-    "dedup_containment": dedup_containment,
-    "dedup_ngram_jaccard_capped": dedup_ngram_jaccard_capped,
-    "dedup_components": dedup_components,
-    "dedup_components_star": dedup_components_star,
-    "dedup_resolve": dedup_resolve,
-    "dedup_cluster_stats": dedup_cluster_stats,
-    "dedup_soft_weights": dedup_soft_weights,
-    "dedup_pagerank": dedup_pagerank,
-}
-
-DEDUP_ORACLES: dict[str, str] = {
-    "dedup_components": _sql_components(),
-    "dedup_components_star": _sql_components(),
-    "dedup_resolve": _sql_resolve(),
-    "dedup_cluster_stats": _sql_cluster_stats(),
-    "dedup_soft_weights": _sql_soft_weights(),
-    "dedup_pagerank": _sql_pagerank(),
-    "dedup_exact": DEDUP_EXACT_SQL,
-    "dedup_source_priority": DEDUP_SOURCE_PRIORITY_SQL,
-    "dedup_minhash_signature": _sql_minhash(),
-    "dedup_minhash_pairs": _sql_lsh_pairs(),
-    "dedup_minhash_pairs_capped": _sql_lsh_pairs_capped(),
-    "dedup_minhash_pairs_wide": _sql_lsh_pairs(
-        bands=LSH_BANDS_WIDE, n_hashes=N_MINHASH_WIDE
-    ),
-    "dedup_minhash_estimate": _sql_minhash_estimate(),
-    "dedup_simhash": _sql_simhash(),
-    "dedup_simhash_pairs": _sql_simhash_pairs(),
-    "dedup_simhash_wide": _sql_simhash_pairs(
-        _sql_simhash(SIMHASH_WIDE_BITS),
-        bits=SIMHASH_WIDE_BITS,
-        bands=SIMHASH_WIDE_BANDS,
-        hamming_max=HAMMING_WIDE_MAX,
-    ),
-    "dedup_simhash_wide_capped": _sql_simhash_pairs(
-        _sql_simhash(SIMHASH_WIDE_BITS),
-        max_bucket=WIDE_BUCKET_CAP,
-        bits=SIMHASH_WIDE_BITS,
-        bands=SIMHASH_WIDE_BANDS,
-        hamming_max=HAMMING_WIDE_MAX,
-    ),
-    "dedup_ngram_jaccard": _sql_jaccard(),
-    "dedup_containment": _sql_containment(),
-    "dedup_ngram_jaccard_capped": _sql_jaccard_capped(),
-}
-
-
 def triangle_stats(pairs: DataFrame) -> DataFrame:
     """Triangle census of an undirected graph: wedge count, triangle
     count, and global transitivity (3·T/W) — the structural
@@ -1723,10 +1593,6 @@ def dedup_triangle_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return triangle_stats(lsh_candidate_pairs(table(spark, sf_dir, "documents")))
 
 
-DEDUP_QUERIES["dedup_triangle_stats"] = dedup_triangle_stats
-DEDUP_ORACLES["dedup_triangle_stats"] = _sql_triangle_stats()
-
-
 CN_TOPK = 20
 
 
@@ -1835,10 +1701,6 @@ JOIN deg db ON n.b = db.node
 ORDER BY n.cn DESC, doc_a ASC, doc_b ASC
 LIMIT {CN_TOPK}
 """
-
-
-DEDUP_QUERIES["dedup_link_prediction"] = dedup_link_prediction
-DEDUP_ORACLES["dedup_link_prediction"] = _sql_link_prediction()
 
 
 #: per-node neighbor-list cap for the production link-prediction tier.
@@ -2044,10 +1906,6 @@ LIMIT {topk}
 """
 
 
-DEDUP_QUERIES["dedup_link_prediction_capped"] = dedup_link_prediction_capped
-DEDUP_ORACLES["dedup_link_prediction_capped"] = _sql_link_prediction_capped()
-
-
 #: (bands, rows) sweeps over the 8-slice signature — every divisor
 #: geometry from strictest (1×8: candidates must match the FULL
 #: signature) to loosest (4×2: the production default's shape)
@@ -2169,10 +2027,6 @@ WITH sh AS (
 """
 
 
-DEDUP_QUERIES["dedup_banding_curve"] = dedup_banding_curve
-DEDUP_ORACLES["dedup_banding_curve"] = _sql_banding_curve()
-
-
 INCR_NEW_MOD = 10
 INCR_NEW_REM = 7
 
@@ -2235,71 +2089,75 @@ GROUP BY a.doc_id
 """
 
 
-DEDUP_QUERIES["dedup_incremental"] = dedup_incremental
-DEDUP_ORACLES["dedup_incremental"] = _sql_incremental()
+DEDUP_QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
+    "dedup_exact": dedup_exact,
+    "dedup_source_priority": dedup_source_priority,
+    "dedup_minhash_signature": dedup_minhash_signature,
+    "dedup_minhash_pairs": dedup_minhash_pairs,
+    "dedup_minhash_pairs_capped": dedup_minhash_pairs_capped,
+    "dedup_minhash_pairs_wide": dedup_minhash_pairs_wide,
+    "dedup_minhash_estimate": dedup_minhash_estimate,
+    "dedup_simhash": dedup_simhash,
+    "dedup_simhash_pairs": dedup_simhash_pairs,
+    "dedup_simhash_wide": dedup_simhash_wide,
+    "dedup_simhash_wide_capped": dedup_simhash_wide_capped,
+    "dedup_ngram_jaccard": dedup_ngram_jaccard,
+    "dedup_containment": dedup_containment,
+    "dedup_ngram_jaccard_capped": dedup_ngram_jaccard_capped,
+    "dedup_components": dedup_components,
+    # two more names for the same query, kept because benchmark query
+    # lists select them
+    "dedup_components_star": dedup_components,
+    "dedup_components_rcte": dedup_components,
+    "dedup_resolve": dedup_resolve,
+    "dedup_cluster_stats": dedup_cluster_stats,
+    "dedup_soft_weights": dedup_soft_weights,
+    "dedup_pagerank": dedup_pagerank,
+    "dedup_triangle_stats": dedup_triangle_stats,
+    "dedup_link_prediction": dedup_link_prediction,
+    "dedup_link_prediction_capped": dedup_link_prediction_capped,
+    "dedup_banding_curve": dedup_banding_curve,
+    "dedup_incremental": dedup_incremental,
+}
 
-
-#: Recursion cap for the RCTE demo tier. The recursive step joins the
-#: PREVIOUS level only (UNION ALL semantics), so on any graph with an
-#: edge the levels never go empty — every level up to the cap runs and
-#: each one is a join + DISTINCT shuffle, i.e. the cap LINEARLY
-#: multiplies the query's cost. Sizing (optimization round 12, VERDICT
-#: r11 #4): the quantity that must stay under the cap is the max
-#: distance from any node to its component's MIN-label node; measured
-#: over the LSH candidate graph it is 1 (sf0.001), 2 (sf0.01), and
-#: 4 (sf0.1) — near-dup components are shallow by construction, and
-#: the 20× stress corpus fattens CLIQUES (diameter ≤ 2), not chains.
-#: 8 = 2× the observed worst case; the iterative twins, which detect
-#: convergence instead of running to a cap, remain the production
-#: path for adversarial graphs (and the three-implementation equality
-#: test pins all outputs identical).
-RCTE_MAX_HOPS = 8
-
-
-def dedup_components_rcte(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components via Spark 4's ``WITH RECURSIVE`` — the
-    third implementation of the same labeling contract, making the
-    strategy menu explicit: the driver-loop propagation
-    (``connected_components``, one full-label shuffle per hop), the
-    O(log² n) star contraction (``dedup_components_star``, the
-    production path), and THIS: the reachability closure pushed
-    entirely inside the engine as a recursive CTE — the formulation
-    the DuckDB oracle has used from the start (``_sql_reach_prefix``),
-    now expressible on the Spark side too.
-
-    Two engine-honest caveats that keep this the DEMO tier: Spark
-    recursion supports only UNION ALL (no fixpoint dedup against
-    prior levels), so the step dedups within-level with DISTINCT and
-    terminates on an explicit hop cap (``RCTE_MAX_HOPS`` ≥ any
-    near-dup component diameter observed; the iterative twins converge
-    in 2-4 hops on this corpus) — a component wider than the cap
-    would mislabel, where the iterative twins detect convergence. And
-    each level re-derives the full reachable-pair set (O(hops·|reach|)
-    rows), where star contraction shrinks the edge set per round. Same
-    oracle as the iterative twins, so all three implementations are
-    pinned to identical output.
-    """
-    docs = table(spark, sf_dir, "documents")
-    # lazy: the recursion's level-0 pass is the materializing action —
-    # eager spent a separate job on the same rows (guide §1.2 step 1)
-    pairs = lsh_candidate_pairs(docs).transform(materialize)
-    pairs.createOrReplaceTempView("_rcte_pairs")
-    docs.select("doc_id").createOrReplaceTempView("_rcte_docs")
-    return spark.sql(f"""
-WITH RECURSIVE edges AS (
-  SELECT doc_a AS a, doc_b AS b FROM _rcte_pairs
-  UNION ALL SELECT doc_b, doc_a FROM _rcte_pairs
-),
-reach(src, dst, lvl) AS (
-  SELECT doc_id, doc_id, 0 FROM _rcte_docs
-  UNION ALL
-  SELECT DISTINCT r.src, e.b, r.lvl + 1
-  FROM reach r JOIN edges e ON e.a = r.dst
-  WHERE r.lvl < {RCTE_MAX_HOPS}
-)
-SELECT src AS doc_id, MIN(dst) AS component FROM reach GROUP BY src
-""")
-
-
-DEDUP_QUERIES["dedup_components_rcte"] = dedup_components_rcte
-DEDUP_ORACLES["dedup_components_rcte"] = _sql_components()
+DEDUP_ORACLES: dict[str, str] = {
+    "dedup_components": _sql_components(),
+    "dedup_components_star": _sql_components(),
+    "dedup_components_rcte": _sql_components(),
+    "dedup_resolve": _sql_resolve(),
+    "dedup_cluster_stats": _sql_cluster_stats(),
+    "dedup_soft_weights": _sql_soft_weights(),
+    "dedup_pagerank": _sql_pagerank(),
+    "dedup_exact": DEDUP_EXACT_SQL,
+    "dedup_source_priority": DEDUP_SOURCE_PRIORITY_SQL,
+    "dedup_minhash_signature": _sql_minhash(),
+    "dedup_minhash_pairs": _sql_lsh_pairs(),
+    "dedup_minhash_pairs_capped": _sql_lsh_pairs_capped(),
+    "dedup_minhash_pairs_wide": _sql_lsh_pairs(
+        bands=LSH_BANDS_WIDE, n_hashes=N_MINHASH_WIDE
+    ),
+    "dedup_minhash_estimate": _sql_minhash_estimate(),
+    "dedup_simhash": _sql_simhash(),
+    "dedup_simhash_pairs": _sql_simhash_pairs(),
+    "dedup_simhash_wide": _sql_simhash_pairs(
+        _sql_simhash(SIMHASH_WIDE_BITS),
+        bits=SIMHASH_WIDE_BITS,
+        bands=SIMHASH_WIDE_BANDS,
+        hamming_max=HAMMING_WIDE_MAX,
+    ),
+    "dedup_simhash_wide_capped": _sql_simhash_pairs(
+        _sql_simhash(SIMHASH_WIDE_BITS),
+        max_bucket=WIDE_BUCKET_CAP,
+        bits=SIMHASH_WIDE_BITS,
+        bands=SIMHASH_WIDE_BANDS,
+        hamming_max=HAMMING_WIDE_MAX,
+    ),
+    "dedup_ngram_jaccard": _sql_jaccard(),
+    "dedup_containment": _sql_containment(),
+    "dedup_ngram_jaccard_capped": _sql_jaccard_capped(),
+    "dedup_triangle_stats": _sql_triangle_stats(),
+    "dedup_link_prediction": _sql_link_prediction(),
+    "dedup_link_prediction_capped": _sql_link_prediction_capped(),
+    "dedup_banding_curve": _sql_banding_curve(),
+    "dedup_incremental": _sql_incremental(),
+}

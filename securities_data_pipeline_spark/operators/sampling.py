@@ -507,21 +507,15 @@ def t_split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     paraphrase sits in train). ``t_train_split`` is the doc-level
     baseline; this is the one a real eval pipeline must use.
 
-    Plan: LSH candidate pairs → star-contraction components (the
-    diameter-independent 100 TB path) → ``split_col`` on the component
-    label (pure projection) → per-split counts. Output is the split
+    Plan: ``dedup_components`` labels (LSH candidate pairs → connected
+    components) → ``split_col`` on the component label (pure
+    projection) → per-split counts. Output is the split
     manifest (docs + clusters per split); the zero-cross-split
     invariant is structural (split = f(component)) and pinned by test.
     """
-    from securities_data_pipeline_spark.operators.dedup import (
-        connected_components_star,
-        lsh_candidate_pairs,
-    )
+    from securities_data_pipeline_spark.operators.dedup import dedup_components
 
-    docs = table(spark, sf_dir, "documents")
-    labels = connected_components_star(
-        lsh_candidate_pairs(docs), docs.select("doc_id")
-    )
+    labels = dedup_components(spark, sf_dir)
     return (
         labels.select(
             "doc_id",

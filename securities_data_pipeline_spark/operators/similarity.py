@@ -619,14 +619,13 @@ WHERE {_sql_cosine('ea.embedding', 'eb.embedding')} >= {threshold}
 
 def dedup_embedding_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """End-to-end SEMANTIC dedup: hyperplane-LSH cosine pairs →
-    diameter-independent star-contraction components → keep-one
-    survivors with removal counts. The embedding-space mirror of the
-    text pipeline's ``dedup_resolve`` — same CC engine
-    (``connected_components_star``), same resolve policy, proving the
-    cluster machinery is modality-agnostic. Output: (vec_id,
+    connected components → keep-one survivors with removal counts. The
+    embedding-space mirror of the text pipeline's ``dedup_resolve`` —
+    same CC kernel (``connected_components``), same resolve policy,
+    proving the cluster machinery is modality-agnostic. Output: (vec_id,
     cluster_size, n_removed), one row per surviving representative."""
     from securities_data_pipeline_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         resolve_duplicates,
     )
 
@@ -635,7 +634,7 @@ def dedup_embedding_resolve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b")
     )
     nodes = emb.select(F.col("vec_id").alias("doc_id"))
-    return resolve_duplicates(connected_components_star(edges, nodes)).withColumnRenamed(
+    return resolve_duplicates(connected_components(edges, nodes)).withColumnRenamed(
         "doc_id", "vec_id"
     )
 

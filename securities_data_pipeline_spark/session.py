@@ -40,7 +40,15 @@ def get_spark(
     On a cluster, pass ``master=None`` and let spark-submit own the
     master; locally this defaults to ``local[N]`` with N from
     ``$SPARK_GRAFT_CPUS`` (falling back to all cores).
+
+    An already active session is returned unchanged: ``getOrCreate``
+    would re-apply this builder's confs to it, so a second call (a
+    tool run inside a process that built its own session) would
+    silently reset that session's settings.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     par = _default_parallelism()
     if master is None:
         master = os.environ.get("SPARK_GRAFT_MASTER", f"local[{par}]")

@@ -11,11 +11,7 @@ def test_bench_main_prints_summary_and_writes_sidecar(spark, monkeypatch, tmp_pa
     per-query medians. No field normalizes against timings taken on
     another machine."""
     import bench
-    from securities_data_pipeline_spark import session
 
-    # the test session, not a rebuilt one: get_spark's builder would
-    # reset this session's shuffle partitions for every later test
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
     monkeypatch.setattr(bench, "HEADLINE", ["q1_pricing_summary", "w1_ffill"])
     monkeypatch.setattr(bench, "REPEATS", 1)
     sidecar = tmp_path / "bench_sidecar.json"

@@ -1,5 +1,6 @@
-"""Engine facade, compaction maintenance job, the one pin policy, the
-one driver-thread overlap helper and the one driver-rows frame builder."""
+"""Engine facade, the session factory's reuse of a live session, the
+compaction maintenance job, the one pin policy, the one driver-thread
+overlap helper and the one driver-rows frame builder."""
 
 import ast
 import datetime as dt
@@ -29,6 +30,21 @@ def test_engine_facade(spark):
     assert "q1_pricing_summary" in eng.query_names()
     df = eng.query("a1_distinct")
     assert df.count() == 5
+
+
+def test_get_spark_returns_the_active_session_unchanged(spark):
+    """A second ``get_spark`` call in a process that already has a
+    session hands back that session and leaves its confs alone, instead
+    of re-applying the builder defaults (32 shuffle partitions)."""
+    from securities_data_pipeline_spark.session import get_spark
+
+    key = "spark.sql.shuffle.partitions"
+    assert spark.conf.get(key) == "8"
+    try:
+        assert get_spark("other") is spark
+        assert spark.conf.get(key) == "8"
+    finally:
+        spark.conf.set(key, "8")
 
 
 def test_compact_small_files_merges_date_partition(spark, tmp_path):

@@ -228,45 +228,30 @@ def test_ivf_probe_curve_monotone_and_consistent_with_topk(spark):
     assert at_serving[1] == len(bf & ivf)
 
 
-def test_connected_components_path_and_singleton(spark):
+def test_star_contraction_matches_propagation_and_handles_long_chain(spark):
     from securities_data_pipeline_spark.operators.dedup import connected_components
 
+    # two components + singleton: path 2-3-4 collapses to min=2, 8-9
+    # to 8, isolated 7 stays itself
     edges = spark.createDataFrame([(2, 3), (3, 4), (8, 9)], "doc_a long, doc_b long")
     nodes = spark.createDataFrame([(2,), (3,), (4,), (7,), (8,), (9,)], "doc_id long")
     got = {r.doc_id: r.component for r in connected_components(edges, nodes).collect()}
-    # path 2-3-4 collapses to min=2 (needs >1 propagation round),
-    # 8-9 to 8, isolated 7 stays itself
     assert got == {2: 2, 3: 2, 4: 2, 7: 7, 8: 8, 9: 8}
 
-
-def test_star_contraction_matches_propagation_and_handles_long_chain(spark):
-    from securities_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
-    # same shape as the propagation test: two components + singleton
-    edges = spark.createDataFrame([(2, 3), (3, 4), (8, 9)], "doc_a long, doc_b long")
-    nodes = spark.createDataFrame([(2,), (3,), (4,), (7,), (8,), (9,)], "doc_id long")
-    got = {r.doc_id: r.component for r in connected_components_star(edges, nodes).collect()}
-    assert got == {2: 2, 3: 2, 4: 2, 7: 7, 8: 8, 9: 8}
-
-    # worst case for propagation: a 60-node path has diameter 59, so
-    # min-label propagation needs 59 rounds (max_iter=8 must raise);
-    # star contraction halves chain length per round and finishes in
-    # O(log n) — 8 rounds are ample. Also checks duplicate/reversed
-    # input edges and string ids (lexicographic min).
+    # a 60-node path has diameter 59, far beyond any fixed hop bound
+    # (min-label propagation would need 59 rounds, a recursive CTE 59
+    # levels); star contraction halves chain length per round and
+    # finishes in O(log n) — 8 rounds are ample. Also checks
+    # duplicate/reversed input edges and string ids (lexicographic min).
     chain = [(f"d{i:03d}", f"d{i + 1:03d}") for i in range(59)]
     chain += [(b, a) for a, b in chain[:5]]  # reversed duplicates
     edges = spark.createDataFrame(chain, "doc_a string, doc_b string")
     nodes = spark.createDataFrame(
         [(f"d{i:03d}",) for i in range(60)], "doc_id string"
     )
-    with pytest.raises(RuntimeError, match="converge"):
-        connected_components(edges, nodes, max_iter=8)
     got = {
         r.doc_id: r.component
-        for r in connected_components_star(edges, nodes, max_iter=8).collect()
+        for r in connected_components(edges, nodes, max_iter=8).collect()
     }
     assert got == {f"d{i:03d}": "d000" for i in range(60)}
 
@@ -284,8 +269,8 @@ def test_asof_join_rejects_payload_name_collision(spark):
 def test_connected_components_raises_on_non_convergence(spark):
     from securities_data_pipeline_spark.operators.dedup import connected_components
 
-    # a 6-node chain needs 5 propagation hops; max_iter=3 must raise,
-    # never silently return split components
+    # a 6-node chain does not contract to a star in 3 rounds; the
+    # kernel must raise, never silently return split components
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(5)], "doc_a long, doc_b long"
     )

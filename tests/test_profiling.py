@@ -134,20 +134,3 @@ def test_mm_near_dedup_pairs_are_within_radius(spark):
     rows = mm_near_dedup(spark, SF).collect()
     assert all(0 <= r.hamming <= HAMMING_MAX for r in rows)
     assert all(r.doc_a < r.doc_b for r in rows)
-
-
-def test_three_component_implementations_agree(spark):
-    """Propagation loop, star contraction, and the recursive-CTE
-    formulation are three physical strategies for one labeling
-    contract — all must emit identical (doc_id, component) sets."""
-    from securities_data_pipeline_spark.operators.dedup import (
-        dedup_components,
-        dedup_components_rcte,
-        dedup_components_star,
-    )
-
-    want = {(r.doc_id, r.component) for r in dedup_components(spark, SF).collect()}
-    star = {(r.doc_id, r.component) for r in dedup_components_star(spark, SF).collect()}
-    rcte = {(r.doc_id, r.component) for r in dedup_components_rcte(spark, SF).collect()}
-    assert star == want
-    assert rcte == want

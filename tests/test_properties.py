@@ -281,15 +281,11 @@ EDGE = st.tuples(st.integers(0, 14), st.integers(0, 14))
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(edges=st.lists(EDGE, min_size=0, max_size=25))
-def test_star_contraction_equals_label_propagation(spark, edges):
-    """The two CC implementations share one contract; on arbitrary
-    graphs (self-loops, duplicates, both orientations, isolated nodes)
-    their labelings must be identical — and equal to a plain Python
-    union-find oracle."""
-    from securities_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+def test_connected_components_equals_union_find(spark, edges):
+    """On arbitrary graphs (self-loops, duplicates, both orientations,
+    isolated nodes) the CC kernel's labeling must equal a plain Python
+    union-find oracle's."""
+    from securities_data_pipeline_spark.operators.dedup import connected_components
 
     nodes = list(range(15))
     ndf = spark.createDataFrame([(n,) for n in nodes], "doc_id long")
@@ -312,10 +308,8 @@ def test_star_contraction_equals_label_propagation(spark, edges):
             parent[max(ra, rb)] = min(ra, rb)
     want = {n: min(m for m in nodes if find(m) == find(n)) for n in nodes}
 
-    star = {r.doc_id: r.component for r in connected_components_star(edf, ndf).collect()}
-    prop = {r.doc_id: r.component for r in connected_components(edf, ndf, max_iter=40).collect()}
-    assert star == want
-    assert prop == want
+    got = {r.doc_id: r.component for r in connected_components(edf, ndf).collect()}
+    assert got == want
 
 
 # ---------------------------------------------------------------------------

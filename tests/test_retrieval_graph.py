@@ -146,7 +146,7 @@ def test_leakage_free_split_never_splits_a_cluster(spark):
     from pyspark.sql import functions as F
 
     from securities_data_pipeline_spark.operators.dedup import (
-        connected_components_star,
+        connected_components,
         lsh_candidate_pairs,
     )
     from securities_data_pipeline_spark.operators.sampling import (
@@ -156,7 +156,7 @@ def test_leakage_free_split_never_splits_a_cluster(spark):
     from securities_data_pipeline_spark.sources.tables import table
 
     docs = table(spark, SF, "documents")
-    labels = connected_components_star(
+    labels = connected_components(
         lsh_candidate_pairs(docs), docs.select("doc_id")
     ).select("doc_id", "component", split_col(F.col("component").cast("string")).alias("split"))
     spans = (

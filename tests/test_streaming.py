@@ -309,7 +309,7 @@ def test_stream_outer_join_emits_unmatched_views(spark):
     assert all(r.value is None for r in unmatched)
 
 
-def test_transform_with_state_topk():
+def test_transform_with_state_topk(spark):
     """Spark 4 transformWithStateInPandas surface — activates wherever
     protobuf (its state-server protocol dep) installs; environment-
     blocked in this container like delta-spark."""
@@ -319,12 +319,10 @@ def test_transform_with_state_topk():
 
     if not HAVE_TWS_DEPS:
         pytest.skip("protobuf unavailable: transformWithState cannot run here")
-    from securities_data_pipeline_spark.session import get_spark
     from securities_data_pipeline_spark.streaming.ingest import (
         s_stream_topk_transform_state,
     )
 
-    spark = get_spark("tws-test")
     out = {r.user_id: r for r in s_stream_topk_transform_state(
         spark, "/root/testdata/sf0.001"
     ).collect()}

@@ -66,8 +66,6 @@ DOC_QUERIES = [
     "dedup_ngram_jaccard_capped",
     "dedup_containment",
     "dedup_components",
-    "dedup_components_star",
-    "dedup_components_rcte",
     "dedup_cluster_stats",
     "dedup_soft_weights",
     "dedup_resolve",
